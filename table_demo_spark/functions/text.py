@@ -41,10 +41,6 @@ def regex_tokens(text) -> Column:
     return F.regexp_extract_all(F.lower(_c(text)), F.lit(BPE_TOKEN_RE), 1)
 
 
-def token_count(text) -> Column:
-    return F.size(tokens(text))
-
-
 def word_ngrams(toks: Column, n: int) -> Column:
     """Word n-gram shingles of a token array (empty when len(toks)<n).
 

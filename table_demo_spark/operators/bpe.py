@@ -20,16 +20,23 @@ parallel over a 100 TB corpus:
   the next round.
 
 Each round is 2 shuffles on doc_id (the lead/lag windows) + 1 pair
-count agg; ``iters`` rounds unroll into one plan the same way
-operators/graph.py unrolls PageRank. Merged tokens embed the
-non-whitespace separator SEP, so later rounds can merge merged
-tokens unambiguously — true BPE, not bigram capping.
+count agg. Merged tokens embed the non-whitespace separator SEP, so
+later rounds can merge merged tokens unambiguously — true BPE, not
+bigram capping.
+
+One batched merge loop (:func:`_merge_scans`) backs both
+:func:`bpe_learn` and :func:`bpe_train_batched`; :func:`bpe_train`
+is the one-merge-per-round reference and :func:`bpe_train_local`
+the single-task strategy for bounded samples. Tokenizing a corpus
+with a learned merge list has ONE path, :func:`bpe_apply_vocab`.
 
 The DuckDB oracle (queries/llmops.py) is generated from the same
 constants by the same loop, stating the identical parity rewrite.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -51,10 +58,8 @@ def _tokens_positions(docs: DataFrame, text_col: str) -> DataFrame:
 def apply_merge(paired: DataFrame, top: DataFrame) -> DataFrame:
     """Rewrite a (doc_id, pos, tok, nxt) frame with the single merge
     pair in the 1-row broadcast ``top`` frame — the greedy
-    non-overlapping run-parity rewrite (module docstring). Shared by
-    training (_one_round) and tokenizer APPLICATION (bpe_train_apply's
-    held-out chain): applying a learned vocabulary is the identical
-    relational rewrite with a fixed pair instead of a learned one."""
+    non-overlapping run-parity rewrite (module docstring) — one
+    round of :func:`bpe_train`."""
     marked = paired.crossJoin(F.broadcast(top)).withColumn(
         "m",
         F.col("nxt").isNotNull()
@@ -277,6 +282,11 @@ class _ChainState:
             self.dir = None
 
 
+BPE_TRAIN_SCHEMA = (
+    "round long, merge_pair string, pair_cnt long, n_tokens_after long"
+)
+
+
 def bpe_train(docs: DataFrame, iters: int = 3, text_col: str = "text") -> DataFrame:
     """(round, merge_pair, pair_cnt, n_tokens_after) per round.
 
@@ -301,42 +311,26 @@ def bpe_train(docs: DataFrame, iters: int = 3, text_col: str = "text") -> DataFr
             rows.append((r, pair, cnt, n_after))
     finally:
         chain.release()
-    return spark.createDataFrame(
-        rows,
-        "round long, merge_pair string, pair_cnt long, n_tokens_after long",
-    )
+    return spark.createDataFrame(rows, BPE_TRAIN_SCHEMA)
 
 
-def bpe_learn(
-    docs: DataFrame, iters: int = 3, text_col: str = "text",
-    batch: int = 16,
-) -> list[str]:
-    """Learn ``iters`` merges and return the SEP-joined pair strings
-    in priority (learning) order — the artifact a production tokenizer
-    ships; feed the result to :func:`bpe_apply_vocab` for the one-pass
-    corpus tokenization.
-
-    Since r16 the loop is :func:`bpe_train_batched`'s (multiple
-    provably-order-preserving merges per corpus scan via
-    :func:`_plan_batch`) without the per-round token counts: the
-    merges list is byte-identical to the classic one-scan-per-merge
-    loop by the batching rule t31's oracle gates on the real corpus
-    (and tests/test_operators.py's randomized hunts attack), while a
-    scan amortizes across up to ``batch`` merges.  Measured on q41's
-    training sample (sf0.1, 8 merges): 2 scans instead of 8 rounds,
-    22.2 -> 2.0 s warm / 34.9 -> 6.1 s cold, identical merges — the
-    per-round cost at this scale is Spark job latency, so scan count
-    is the whole ballgame (guide §1.2 step 1; at 100 TB the saved
-    scans are corpus passes, the same win for the opposite reason).
-    The classic loop remains in :func:`bpe_train` (t20's declared
-    surface) as the sequential reference."""
-    tp = _tokens_positions(docs, text_col)
+def _merge_scans(
+    tp: DataFrame, iters: int, batch: int
+) -> Iterator[tuple[list[tuple[str, int]], DataFrame]]:
+    """The batched merge loop: per corpus scan, collect the top-``batch``
+    pairs with their variant splits (one TakeOrdered job — map-side
+    partial top-k, no global sort), keep the provably order-preserving
+    prefix (:func:`_plan_batch`), and apply ALL of it in one run-parity
+    rewrite (:func:`apply_merge_batch`). Yields each scan's picked
+    (pair, count) list and the rewritten (doc_id, pos, tok) frame,
+    stopping after ``iters`` merges or when no adjacent pair is left.
+    The frame is valid until the next step: it advances through
+    :class:`_ChainState`, released when the loop ends."""
     chain = _ChainState()
-    merges: list[str] = []
     merged_symbols: set[str] = set()
-    scans = 0
+    n_merges = scans = 0
     try:
-        while len(merges) < iters:
+        while n_merges < iters:
             paired = _paired(tp)
             cands = [
                 (
@@ -355,19 +349,50 @@ def bpe_learn(
                 .collect()
             ]
             if not cands:  # corpus exhausted: no pair left
-                break
-            picked = _plan_batch(cands, merged_symbols)[: iters - len(merges)]
+                return
+            picked = _plan_batch(cands, merged_symbols)[: iters - n_merges]
             merged_symbols |= {p for p, _ in picked}
+            n_merges += len(picked)
             scans += 1
             tp, _ = chain.advance(
                 apply_merge_batch(paired, [p for p, _ in picked]),
                 scans,
                 count=False,
             )
-            merges.extend(p for p, _ in picked)
+            yield picked, tp
     finally:
         chain.release()
-    return merges
+
+
+def bpe_learn(
+    docs: DataFrame, iters: int = 3, text_col: str = "text",
+    batch: int = 16,
+) -> list[str]:
+    """Learn ``iters`` merges and return the SEP-joined pair strings
+    in priority (learning) order — the artifact a production tokenizer
+    ships; feed the result to :func:`bpe_apply_vocab` for the one-pass
+    corpus tokenization.
+
+    The loop is :func:`_merge_scans` (multiple provably-order-
+    preserving merges per corpus scan): the merges list is
+    byte-identical to the classic one-scan-per-merge loop by the
+    batching rule t31's oracle gates on the real corpus (and
+    tests/test_operators.py's randomized hunts attack), while a scan
+    amortizes across up to ``batch`` merges.  Measured on q41's
+    training sample (sf0.1, 8 merges): 2 scans instead of 8 rounds,
+    22.2 -> 2.0 s warm / 34.9 -> 6.1 s cold, identical merges — the
+    per-round cost at this scale is Spark job latency, so scan count
+    is the whole ballgame (guide §1.2 step 1; at 100 TB the saved
+    scans are corpus passes, the same win for the opposite reason).
+    The classic loop remains in :func:`bpe_train` (t20's declared
+    surface) as the sequential reference."""
+    return [
+        pair
+        for picked, _ in _merge_scans(
+            _tokens_positions(docs, text_col), iters, batch
+        )
+        for pair, _ in picked
+    ]
 
 
 BPE_APPLY_SCHEMA = "doc_id long, n_before long, n_after long, n_merged long"
@@ -400,11 +425,10 @@ def bpe_apply_vocab(
     merges at C speed, which is the common case once the vocabulary
     outgrows any one document.
 
-    Returns the same per-doc stats frame as :func:`bpe_train_apply`:
-    (doc_id, n_before, n_after, n_merged). Zero shuffles, zero
-    per-merge jobs: one corpus scan regardless of vocabulary size."""
-    from collections.abc import Iterator
-
+    Returns per-doc stats (doc_id, n_before, n_after, n_merged), where
+    n_merged counts final tokens containing a learned merge (the SEP
+    marker). Zero shuffles, zero per-merge jobs: one corpus scan
+    regardless of vocabulary size."""
     import pandas as pd
 
     merge_list = list(merges)
@@ -624,12 +648,9 @@ def bpe_train_batched(
     """:func:`bpe_train` semantics — identical output, byte-for-byte —
     with MULTIPLE merges learned per corpus scan. Classic BPE training
     costs one pair-count scan per merge; at a production ~30k-merge
-    vocabulary that is ~30k sequential jobs. Each round here collects
-    the top-``batch`` pairs with their variant splits (one TakeOrdered
-    job — map-side partial top-k, no global sort), keeps the provably
-    order-preserving batch (:func:`_plan_batch`), and applies ALL of
-    them in one run-parity rewrite (:func:`apply_merge_batch`), so a
-    scan amortizes across up to ``batch`` merges. Scan count tracks
+    vocabulary that is ~30k sequential jobs. Here the scans are
+    :func:`_merge_scans`' (shared with :func:`bpe_learn`), so a scan
+    amortizes across up to ``batch`` merges. Scan count tracks
     the corpus's TIE STRUCTURE: counts that separate (Zipfian natural
     text) batch at full width, while ties at the cut must run
     one-per-scan — a tied accepted pair can be outranked at its
@@ -647,66 +668,24 @@ def bpe_train_batched(
     from the per-pair merged-occurrence counts: occurrences are also
     unchanged by disjoint earlier merges, so
     n_after(j) = n_before_scan - sum(occ_1..occ_j)."""
-    spark = docs.sparkSession
     tp = _tokens_positions(docs, text_col)
-    chain = _ChainState()
+    n_tokens = tp.count()
     rows: list[tuple[int, str, int, int]] = []
-    merged_symbols: set[str] = set()
-    try:
-        n_tokens = tp.count()
-        r = 0
-        while len(rows) < iters:
-            paired = _paired(tp)
-            cands = [
-                (
-                    row["pair"],
-                    int(row["cnt"]),
-                    [(v["tok"], v["nxt"]) for v in row["variants"]],
-                )
-                for row in paired.filter(F.col("nxt").isNotNull())
-                .groupBy(F.concat_ws(SEP, "tok", "nxt").alias("pair"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("cnt"),
-                    F.collect_set(F.struct("tok", "nxt")).alias("variants"),
-                )
-                .orderBy(F.desc("cnt"), F.asc("pair"))
-                .limit(batch)
-                .collect()
-            ]
-            if not cands:
-                break
-            picked = _plan_batch(cands, merged_symbols)[: iters - len(rows)]
-            merged_symbols |= {p for p, _ in picked}
-            r += 1
-            tp, _ = chain.advance(
-                apply_merge_batch(paired, [p for p, _ in picked]),
-                r,
-                count=False,
+    for picked, rewritten in _merge_scans(tp, iters, batch):
+        occ = {
+            row["tok"]: int(row["occ"])
+            for row in rewritten.filter(
+                F.col("tok").isin([p for p, _ in picked])
             )
-            occ = {
-                row["tok"]: int(row["occ"])
-                for row in tp.filter(
-                    F.col("tok").isin([p for p, _ in picked])
-                )
-                .groupBy("tok")
-                .agg(F.count(F.lit(1)).alias("occ"))
-                .collect()
-            }
-            for pair, cnt in picked:
-                # each merged occurrence replaces two tokens with one
-                n_tokens -= occ.get(pair, 0)
-                rows.append((len(rows) + 1, pair, cnt, n_tokens))
-    finally:
-        chain.release()
-    return spark.createDataFrame(
-        rows,
-        "round long, merge_pair string, pair_cnt long, n_tokens_after long",
-    )
-
-
-BPE_TRAIN_SCHEMA = (
-    "round long, merge_pair string, pair_cnt long, n_tokens_after long"
-)
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("occ"))
+            .collect()
+        }
+        for pair, cnt in picked:
+            # each merged occurrence replaces two tokens with one
+            n_tokens -= occ.get(pair, 0)
+            rows.append((len(rows) + 1, pair, cnt, n_tokens))
+    return docs.sparkSession.createDataFrame(rows, BPE_TRAIN_SCHEMA)
 
 
 def bpe_train_local(docs: DataFrame, iters: int, text_col: str = "text") -> DataFrame:
@@ -730,7 +709,6 @@ def bpe_train_local(docs: DataFrame, iters: int, text_col: str = "text") -> Data
     (cnt DESC, pair ASC) tie-break, same greedy left-to-right
     non-overlapping rewrite), gated by the t30 oracle."""
     from collections import Counter
-    from collections.abc import Iterator
 
     import pandas as pd
 
@@ -780,107 +758,3 @@ def bpe_train_local(docs: DataFrame, iters: int, text_col: str = "text") -> Data
     # optimal physical strategy — parallelism belongs to the APPLY
     # pass (bpe_apply_vocab), which is where the corpus-sized work is.
     return toks.repartition(1).mapInPandas(train, schema=BPE_TRAIN_SCHEMA)
-
-
-def bpe_train_apply(
-    train_docs: DataFrame,
-    apply_docs: DataFrame,
-    iters: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
-    """Train merges on one corpus, TOKENIZE another with them — the
-    train -> apply split t20's self-training lacks (a production
-    tokenizer is learned once and applied to every later crawl).
-
-    Per round, the top pair comes from the TRAIN chain's counts only;
-    both chains are rewritten with that (literal, broadcast) pair via
-    the same run-parity ``apply_merge`` — application is the identical
-    relational rewrite with a fixed pair, so the apply path inherits
-    training's partition-parallel scale shape. The train chain is
-    eager (its top-pair collect executes each round) with
-    :class:`_ChainState`'s bounded persist+checkpoint discipline; the
-    APPLY chain builds lazily — its rounds have no per-round consumer,
-    so all rounds between checkpoints fuse into ONE execution (every
-    rewrite window partitions by doc_id, so the fused plan is one
-    Exchange plus in-partition sorts) — and is scratch-checkpointed on
-    the cadence plus once at the end. Returns per-apply-doc stats:
-    (doc_id, n_before, n_after, n_merged) where n_merged counts tokens
-    containing a learned merge (the SEP marker). The returned frame
-    scans the FINAL apply-chain scratch files, so that one directory
-    outlives the call (tmpfs, one round's tokens; freed on reboot or
-    by the caller's scratch lifecycle)."""
-    import shutil
-
-    tp_train = _tokens_positions(train_docs, text_col)
-    tp_apply = _tokens_positions(apply_docs, text_col)
-    before = tp_apply.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_before")
-    )
-    t_chain = _ChainState()
-    dir_a = None
-    on_scratch = False
-    try:
-        # r16: the train loop batches like bpe_learn — merges per scan
-        # are byte-identical to sequential by _plan_batch's rule, and
-        # the APPLY chain's batch rewrite equals its sequential
-        # per-pair rewrites on ANY corpus by pairwise token
-        # disjointness alone (apply_merge_batch's invariant: two
-        # different batch pairs can never claim overlapping positions,
-        # and a merge neither creates nor destroys another batch
-        # pair's occurrences), so both chains advance scan-wise.
-        n_merges = 0
-        merged_symbols: set[str] = set()
-        r = 0
-        while n_merges < iters:
-            pt = _paired(tp_train)
-            cands = [
-                (
-                    row["pair"],
-                    int(row["cnt"]),
-                    [(v["tok"], v["nxt"]) for v in row["variants"]],
-                )
-                for row in pt.filter(F.col("nxt").isNotNull())
-                .groupBy(F.concat_ws(SEP, "tok", "nxt").alias("pair"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("cnt"),
-                    F.collect_set(F.struct("tok", "nxt")).alias("variants"),
-                )
-                .orderBy(F.desc("cnt"), F.asc("pair"))
-                .limit(16)
-                .collect()
-            ]
-            if not cands:  # train corpus exhausted: no pair left
-                break
-            picked = [
-                p
-                for p, _ in _plan_batch(cands, merged_symbols)[
-                    : iters - n_merges
-                ]
-            ]
-            merged_symbols |= set(picked)
-            n_merges += len(picked)
-            r += 1
-            tp_train, _ = t_chain.advance(
-                apply_merge_batch(pt, picked), r, count=False
-            )
-            tp_apply = apply_merge_batch(_paired(tp_apply), picked)
-            on_scratch = False
-            if r % _CHECKPOINT_EVERY == 0:
-                tp_apply, d, _ = _scratch_checkpoint(tp_apply, count=False)
-                if dir_a is not None:
-                    shutil.rmtree(dir_a, ignore_errors=True)
-                dir_a = d
-                on_scratch = True
-    finally:
-        t_chain.release()  # merges learned
-    if not on_scratch:
-        tp_apply, d, _ = _scratch_checkpoint(tp_apply, count=False)
-        if dir_a is not None:
-            shutil.rmtree(dir_a, ignore_errors=True)
-    after = tp_apply.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_after"),
-        F.sum(F.col("tok").contains(SEP).cast("int"))
-        .cast("long")
-        .alias("n_merged"),
-    )
-    return before.join(after, "doc_id")

@@ -2968,17 +2968,6 @@ def _vp8l_lz77_value(br: _Vp8lBitReader, code: int) -> int:
     return offset + br.bits(extra) + 1
 
 
-def _vp8l_lz77_code(value: int) -> tuple[int, int, int]:
-    """value -> (prefix_code, extra_bits_value, extra_bits_count)."""
-    if value <= 4:
-        return value - 1, 0, 0
-    v = value - 1
-    extra = v.bit_length() - 2
-    rem = v - (2 << extra)
-    code = 2 * (extra + 1) + (rem >> extra)
-    return code, rem & ((1 << extra) - 1), extra
-
-
 # The 120 two-dimensional distance codes (dx, dy) of RFC 9649 section
 # 4.2.2.3, stated EXPLICITLY. An earlier revision reconstructed the
 # table as "neighborhood offsets sorted by squared euclidean distance"

@@ -55,55 +55,52 @@ DRIVER_SAMPLE: tuple[str, ...] = (
     "stream_q8_retract_delete",
     "stream_q9_debug_sink",
     "stream_q10_ttl_expiry",
-    # r15-verdict item 7 pins: stream_q41 + the BPE flagships carry the
-    # round-15 semantic edits (run-parity rewrite, manifest collapse)
-    # that no driver sample has yet verified externally.
+    # BPE flagships: t20 is the sequential reference, t31 and q41 run
+    # the shared batched merge loop.
     "stream_q41_pipeline_ingest",
     "llm_t31_bpe_batched_train",
     "llm_t20_bpe_train",
-    # src_* family pin (no src_* is in the due cohort; s4 is the
-    # least-recently-verified at r9)
+    # src_* family pin (no src_* is in the due cohort)
     "src_s4_partitioned_events",
-    # r16 LRU rotation (threshold: last verified <= r8; the rotation
-    # test recomputes this from the committed CORRECTNESS_r*.json
-    # artifacts).  32 of the 43 due names, oldest first: the two
-    # never-verified r15 late additions (no CORRECTNESS row at all),
-    # the whole last-verified-r7 stratum, then 22 of the 33-name r8
-    # stratum spanning every llm sub-family — leaves llm_p14/p15/p7/p8
-    # + llm_t18/t19/t21-t24/t34 due for r17, where they are the oldest
-    # of all.
-    "llm_m61_av1_symbol_encode",
-    "stream_q46_bvideo_ingest",
-    "an_a52_important_parts",
-    "an_a53_top_supplier",
-    "an_a54_supplier_relationship",
-    "an_a55_small_qty_revenue",
-    "an_a61_shortest_path",
-    "stream_q17_fanout",
-    "stream_q20_semi_join",
-    "stream_q21_dead_letter",
-    "an_a1_pricing_summary",
-    "an_a2_revenue_by_nation",
-    "an_a56_large_volume_customers",
-    "an_a57_excess_shipment_suppliers",
-    "an_a58_global_sales_opportunity",
-    "llm_d14_url_dedup",
-    "llm_d15_bloom_filter",
-    "llm_d17_simhash_pairs",
-    "llm_d18_ingest_dedup",
-    "llm_d19_quality_dedup",
-    "llm_m10_pair_audit",
-    "llm_m5_payload_sig_dedup",
-    "llm_m7_image_patches",
-    "llm_m8_modality_router",
-    "llm_p10_curriculum",
-    "llm_p11_group_split",
-    "llm_p12_length_batching",
-    "llm_p13_corpus_manifest",
-    "llm_s10_maxsim_pruned",
-    "llm_s11_mips_topk",
-    "llm_s16_binary_hamming",
-    "llm_t11_unigram_freq_score",
+    # r16's reworked queries, with no driver row yet (t25/t27 also
+    # moved to bpe_learn + bpe_apply_vocab since).
+    "llm_m47_avif_pixels",
+    "stream_q43_avif_ingest",
+    "stream_q39_decontam_ingest",
+    "llm_d7_neardup_clusters",
+    "llm_t25_bpe_encode",
+    "llm_t27_bpe_sample_train",
+    "llm_m50_av1_structure",
+    "llm_m52_avif_sequence",
+    "llm_m54_avif_quant_layer",
+    # r17 LRU rotation (threshold: last verified <= r9; the rotation
+    # test recomputes it from the committed CORRECTNESS_r*.json
+    # artifacts).  23 of the 42 due names, oldest first: the whole
+    # last-verified-r8 stratum, then 12 of the r9 stratum spanning
+    # every family.
+    "llm_p14_interleave_schedule",
+    "llm_p15_budget_select",
+    "llm_p7_shard_assign",
+    "llm_p8_epoch_plan",
+    "llm_t18_blocklist_filter",
+    "llm_t19_boilerplate_prefix",
+    "llm_t21_readability",
+    "llm_t22_rake_keywords",
+    "llm_t23_domain_drift",
+    "llm_t24_heldout_lm_filter",
+    "llm_t34_classifier_auc",
+    "an_a11_json_extract",
+    "an_a14_cube",
+    "an_a15_sliding_window",
+    "an_a3_top_customers",
+    "an_a4_rollup",
+    "llm_d3_dedup_simhash",
+    "llm_d4_dedup_ngram_jaccard",
+    "llm_m28_webp_anim_cuts",
+    "llm_m2_frame_sample",
+    "llm_s17_cascade_rerank",
+    "llm_s2_ann_lsh_topk",
+    "stream_q33_centroid_drift",
 )
 
 

@@ -10102,35 +10102,36 @@ FROM labeled l LEFT JOIN contaminated c USING (doc_id)
 # T25 — BPE train -> APPLY (tokenize a held-out corpus with learned
 # merges). t20 trains on the corpus it rewrites; a production
 # tokenizer is learned once (train split, even doc_ids) and applied
-# to every later crawl (held-out split, odd doc_ids). Per round the
-# top pair comes from the TRAIN chain only; both chains rewrite with
-# that broadcast pair via the same run-parity relational rewrite
-# (operators/bpe.py::apply_merge) — application inherits training's
-# partition-parallel shape. The oracle unrolls BOTH chains per round.
-# Output: per held-out doc, token counts before/after and how many
-# final tokens contain a learned merge.
+# to every later crawl (held-out split, odd doc_ids). The merges come
+# from the TRAIN split only (operators/bpe.py::bpe_learn); the
+# held-out split is tokenized by the one apply path,
+# bpe_apply_vocab, which applies them per document in priority order.
+# The oracle unrolls the relational rewrite round by round on BOTH
+# splits, top pair from the train chain. Output: per held-out doc,
+# token counts before/after and how many final tokens contain a
+# learned merge.
 # ---------------------------------------------------------------------------
 
 _T25_ITERS = 3
 
 
 def t25_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from table_demo_spark.operators.bpe import bpe_train_apply
+    from table_demo_spark.operators.bpe import bpe_apply_vocab, bpe_learn
 
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 2 == 0)
     held = docs.filter(F.col("doc_id") % 2 == 1)
-    return bpe_train_apply(train, held, iters=_T25_ITERS)
+    return bpe_apply_vocab(held, bpe_learn(train, iters=_T25_ITERS))
 
 
-def _bpe_train_apply_oracle(
+def _bpe_apply_oracle(
     train_where: str, apply_where: str, iters: int
 ) -> str:
     """Shared oracle generator for the BPE train->apply queries (t25,
-    t27): unroll ``iters`` rounds where the top pair comes from the
-    TRAIN chain (t*) only and both chains rewrite with it; the two
-    WHERE clauses select the train/apply corpora from the same
-    ``documents`` table the Spark side filters."""
+    t27, t28, q26, q41): unroll ``iters`` rounds where the top pair
+    comes from the TRAIN chain (t*) only and both chains rewrite with
+    it; the two WHERE clauses select the train/apply corpora from the
+    same ``documents`` table the Spark side filters."""
     sep = "chr(31)"
 
     def rewrite(p: str, nxt: str, top: str) -> str:
@@ -10214,7 +10215,7 @@ FROM before JOIN after USING (doc_id)
 
 
 def _t25_oracle() -> str:
-    return _bpe_train_apply_oracle(
+    return _bpe_apply_oracle(
         "WHERE doc_id % 2 = 0", "WHERE doc_id % 2 = 1", _T25_ITERS
     )
 
@@ -10222,15 +10223,13 @@ def _t25_oracle() -> str:
 # ---------------------------------------------------------------------------
 # T27 — BPE sample-train -> full-corpus apply (the PRODUCTION tokenizer
 # pattern at 100 TB): vocabulary statistics converge on a small sample,
-# so the merge loop — whose per-round cost is dominated by rewriting
+# so the merge loop — whose per-scan cost is dominated by rewriting
 # whatever corpus it trains on — runs over a deterministic hash sample
 # (operators/sampling.py, ~25% here; in production more like 0.1%),
-# and only the LEARNED merges are applied to the full corpus via the
-# same run-parity rewrite. Train cost scales with the SAMPLE, apply
-# cost is one rewrite pass per round over the corpus with zero
-# pair-count aggregations. The oracle states the identical sample
-# predicate from the same constants. Per-round cost curve at 32 rounds
-# in docs/SCALE.md (the eager bounded-cache loop holds two rounds).
+# and only the LEARNED merges are applied to the full corpus in one
+# bpe_apply_vocab pass. Train cost scales with the SAMPLE; apply cost
+# is one corpus scan with zero pair-count aggregations. The oracle
+# states the identical sample predicate from the same constants.
 # ---------------------------------------------------------------------------
 
 _T27_RATE = 0.25
@@ -10239,36 +10238,41 @@ _T27_ITERS = 3
 
 
 def t27_bpe_sample_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from table_demo_spark.operators.bpe import bpe_train_apply
+    from table_demo_spark.operators.bpe import bpe_apply_vocab, bpe_learn
     from table_demo_spark.operators.sampling import hash_sample
 
     docs = load_table(spark, sf_dir, "documents")
     train = hash_sample(docs, _T27_RATE, key_col="doc_id", salt=_T27_SALT)
-    return bpe_train_apply(train, docs, iters=_T27_ITERS)
+    return bpe_apply_vocab(docs, bpe_learn(train, iters=_T27_ITERS))
 
 
-def _t27_oracle() -> str:
+def _t27_sample_where() -> str:
+    """The oracle's statement of the t27 hash-sample train split."""
     from table_demo_spark.operators.sampling import rate_threshold_hex
 
-    predicate = (
+    return (
         f"WHERE substr(md5(CAST(doc_id AS VARCHAR) || '#{_T27_SALT}'), 1, 6)"
         f" < '{rate_threshold_hex(_T27_RATE)}'"
     )
-    return _bpe_train_apply_oracle(predicate, "", _T27_ITERS)
+
+
+def _t27_oracle() -> str:
+    return _bpe_apply_oracle(_t27_sample_where(), "", _T27_ITERS)
 
 
 # ---------------------------------------------------------------------------
 # T28 — the PRODUCTION tokenizer apply path: learn a 32-merge
 # vocabulary on the hash sample (t27's train split), then tokenize the
 # FULL corpus in ONE mapInPandas pass that carries the whole merge
-# list (operators/bpe.py::bpe_apply_vocab). t25/t27's per-round
-# relational rewrite is the right TRAINING shape but its apply cost is
-# one full-corpus rewrite per merge — a real tokenizer has ~30k
-# merges, so apply must be rounds-independent: broadcast the learned
-# vocabulary, one corpus scan, priority-ordered greedy merging per
-# document. The oracle unrolls all 32 rounds of the relational
-# rewrite, so the gate PROVES the one-pass greedy application
-# equivalent to the round-by-round run-parity semantics on every doc.
+# list (operators/bpe.py::bpe_apply_vocab, t25/t27's apply path too).
+# The per-round relational rewrite is the right TRAINING shape, but as
+# an apply path it costs one full-corpus rewrite per merge — a real
+# tokenizer has ~30k merges, so apply must be rounds-independent:
+# broadcast the learned vocabulary, one corpus scan, priority-ordered
+# greedy merging per document. The oracle unrolls all 32 rounds of
+# the relational rewrite, so the gate PROVES the one-pass greedy
+# application equivalent to the round-by-round run-parity semantics
+# on every doc.
 # ---------------------------------------------------------------------------
 _T28_ITERS = 32
 
@@ -10284,13 +10288,7 @@ def t28_bpe_vocab_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t28_oracle() -> str:
-    from table_demo_spark.operators.sampling import rate_threshold_hex
-
-    predicate = (
-        f"WHERE substr(md5(CAST(doc_id AS VARCHAR) || '#{_T27_SALT}'), 1, 6)"
-        f" < '{rate_threshold_hex(_T27_RATE)}'"
-    )
-    return _bpe_train_apply_oracle(predicate, "", _T28_ITERS)
+    return _bpe_apply_oracle(_t27_sample_where(), "", _T28_ITERS)
 
 
 # ---------------------------------------------------------------------------

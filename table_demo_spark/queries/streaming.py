@@ -695,7 +695,7 @@ def q15_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sink.snapshot_df(spark).select("user_id", "n_events", "sum_cents")
 
 
-# transformWithState running totals: integer cents in state make the
+# GroupState running totals: integer cents in state make the
 # final per-user totals equal the batch aggregate exactly, independent
 # of micro-batch slicing. round() on exact-2-decimal doubles is the
 # same integer both engines.
@@ -1154,15 +1154,13 @@ def q26_stream_tokenize_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q26_oracle() -> str:
-    from table_demo_spark.operators.sampling import rate_threshold_hex
-    from table_demo_spark.queries.llmops import _bpe_train_apply_oracle
+    from table_demo_spark.queries.llmops import (
+        _bpe_apply_oracle,
+        _t27_sample_where,
+    )
     from table_demo_spark.streaming.queries import _Q26_ITERS
 
-    predicate = (
-        f"WHERE substr(md5(CAST(doc_id AS VARCHAR) || '#bpetrain'), 1, 6)"
-        f" < '{rate_threshold_hex(0.25)}'"
-    )
-    return _bpe_train_apply_oracle(predicate, "", _Q26_ITERS)
+    return _bpe_apply_oracle(_t27_sample_where(), "", _Q26_ITERS)
 
 
 def q28_media_decode_final(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1676,17 +1674,13 @@ def q41_pipeline_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q41_oracle() -> str:
-    from table_demo_spark.operators.sampling import rate_threshold_hex
     from table_demo_spark.queries.llmops import (
-        _bpe_train_apply_oracle,
+        _bpe_apply_oracle,
         _p16_oracle,
         _p17_oracle,
+        _t27_sample_where,
     )
 
-    train_where = (
-        f"WHERE substr(md5(CAST(doc_id AS VARCHAR) || '#bpetrain'), 1, 6)"
-        f" < '{rate_threshold_hex(0.25)}'"
-    )
     # the composed keep-predicate: survived decontamination (p16's
     # split says 'train') AND won the deterministic mixture draw
     # (p17's per-source threshold) — both full oracle queries embed
@@ -1703,7 +1697,7 @@ def _q41_oracle() -> str:
 )"""
     from table_demo_spark.streaming.queries import _Q26_ITERS
 
-    bpe = _bpe_train_apply_oracle(train_where, kept_where, _Q26_ITERS)
+    bpe = _bpe_apply_oracle(_t27_sample_where(), kept_where, _Q26_ITERS)
     return f"""
 SELECT b.doc_id, b.n_before, b.n_after, b.n_merged,
        CAST(strlen(d.text) AS BIGINT) AS orig_bytes,

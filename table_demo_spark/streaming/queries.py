@@ -19,10 +19,7 @@ Maps SURVEY §2.3's streaming semantics onto Structured Streaming:
   Flink's planner feeds the second aggregation); foreachBatch folds
   those deltas into a durable parquet histogram with a distributed
   sum-merge. No per-key state ever lives in the driver process, so the
-  key domain may be unbounded. (``transformWithStateInPandas`` is the
-  same shape on Spark 4 clusters with protobuf available; this
-  container lacks protobuf, and the GroupState API is equivalent for
-  a single ValueState.)
+  key domain may be unbounded.
 
 Watermark: 61 s — the replay source's bounded disorder is 60 s
 (maxOutOfOrder, TaxiRideQueries.scala:48), and the reference's
@@ -31,17 +28,12 @@ watermark lags maxDelay + 1 ms (TaxiRideSource.java:150).
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -704,9 +696,7 @@ def stream_events_typed(
 #
 # The only state is one long per cell in Spark's state store and the
 # histogram parquet table — nothing key-shaped in the driver, so the
-# key domain may be unbounded (the old ChainedAggSink/-Adapter pair
-# below is kept as the K3 changelog-dispatch consumer for external
-# keyed stores, where the per-key dict is the *target*, not the state).
+# key domain may be unbounded.
 # ---------------------------------------------------------------------------
 _Q3_DELTA_OUT = StructType(
     [
@@ -1195,65 +1185,6 @@ def run_q11_csv_stream(
     return sink, query
 
 
-class ChainedAggSink:
-    """The level-2 aggregation of Q3 as a retract-changelog consumer:
-    maintains the histogram (dept_cnt -> cnt_freq) from accumulate /
-    retract messages — exactly the retracting stream Flink's planner
-    feeds the second aggregation (TaxiRideQueries.scala:153-156,
-    SURVEY §1.4). Bucket moves are O(1) per message."""
-
-    def __init__(self, threshold: int = 0):
-        self.threshold = threshold
-        self.histogram: Counter = Counter()
-
-    def consume(self, accumulate: bool, row: dict) -> None:
-        cnt = row["dept_cnt"]
-        if cnt <= self.threshold:
-            return
-        if accumulate:
-            self.histogram[cnt] += 1
-        else:
-            self.histogram[cnt] -= 1
-            if self.histogram[cnt] == 0:
-                del self.histogram[cnt]
-
-    def snapshot(self) -> list[dict]:
-        return [
-            {"dept_cnt": k, "cnt_freq": v} for k, v in self.histogram.items()
-        ]
-
-
-def run_q3_chained_agg_via_adapter(
-    spark: SparkSession,
-    sf_dir: str,
-    speed: float = 2_000_000.0,
-    threshold: int = 0,
-    ttl_ms: int | None = None,
-):
-    """K3 changelog-dispatch variant of Q3: level 1 runs as a native
-    update-mode agg; a RetractStreamAdapter diffs its per-batch deltas
-    into the (retract, accumulate) changelog an *external keyed store*
-    consumes (the ElasticUpsertTableSink.scala:140-147 dispatch path).
-    The in-process ChainedAggSink stands in for that store — use
-    ``run_q3_stream`` for the distributed engine-side aggregation."""
-    from table_demo_spark.streaming.retract import RetractStreamAdapter
-
-    ckpt = _checkpoint_dir()
-    departures = stream_departures(
-        stream_rides(spark, sf_dir, speed, frontier_key=ckpt)
-    )
-    level1 = departures.groupBy("cell").agg(F.count("ride_id").alias("dept_cnt"))
-    sink = ChainedAggSink(threshold)
-    adapter = RetractStreamAdapter(("cell",), sink.consume, ttl_ms=ttl_ms)
-    query = (
-        level1.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(adapter.foreach_batch())
-        .start()
-    )
-    return sink, query
-
-
 # ---------------------------------------------------------------------------
 # Q13 streaming — sliding (hopping) window aggregation.
 #
@@ -1344,14 +1275,9 @@ def run_q14_topk(
 
 
 # ---------------------------------------------------------------------------
-# Q15 streaming — per-user running totals on transformWithState.
+# Q15 streaming — per-user running totals in arbitrary state.
 #
-# The modern Spark 4 arbitrary-state API (transformWithStateInPandas):
-# unlike applyInPandasWithState's single opaque state tuple, the
-# StatefulProcessor owns named, individually-typed state variables
-# with per-variable TTL, timers, and Arrow-batched input — the
-# designated successor for every custom stateful operator in this
-# repo. This query keeps one ValueState of exact integer totals
+# One GroupState (applyInPandasWithState) of exact integer totals
 # (event count, value cents) per user: integer state means the
 # running sum is associativity-proof, so the final emitted totals
 # hash-match the batch aggregate no matter how the replay slices
@@ -1360,58 +1286,7 @@ def run_q14_topk(
 _Q15_OUT = "user_id long, n_events long, sum_cents long"
 
 
-def _running_totals_processor() -> StatefulProcessor:
-    """Built inside a function so cloudpickle serializes the class BY
-    VALUE: the transformWithState Python runner is a separate process
-    that must not need this repo on its import path (the driver's
-    session is vanilla — PYTHONPATH is not propagated)."""
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, cents long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, cents = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotals()
-
-
-def tws_available() -> bool:
-    """transformWithState needs the protobuf state-server client; this
-    container ships pyspark without google.protobuf (and installs are
-    off), so the capability is probed, never assumed.
-
-    Re-probed round 6 (2026-08-15): ``import google.protobuf`` still
-    raises ModuleNotFoundError in-container, so q15 (and q3 level 1)
-    continue on the GroupState fallback. If the probe ever flips,
-    run_q15 picks up the modern API with no code change."""
-    try:
-        from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _running_totals_fallback(ev: DataFrame) -> DataFrame:
-    """Same operator on the GroupState API (applyInPandasWithState) —
-    semantically identical for a single ValueState; used where the
-    transformWithState runtime is unavailable."""
-
+def _running_totals(ev: DataFrame) -> DataFrame:
     def fn(
         key: Tuple[int],
         pdfs: Iterator[pd.DataFrame],
@@ -1442,9 +1317,7 @@ def run_q15_running_totals(
     sink=None,
 ):
     """Per-user exact running totals into a durable upsert sink.
-    Returns (sink, query). Uses transformWithStateInPandas (named
-    per-variable state, the Spark 4 successor API) when its protobuf
-    runtime is present; the GroupState fallback is bit-identical."""
+    Returns (sink, query)."""
 
     from table_demo_spark.streaming.upsert import ParquetUpsertSink
 
@@ -1456,43 +1329,13 @@ def run_q15_running_totals(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q15-"), ("user_id",)
     )
-
-    def start(totals: DataFrame):
-        return (
-            totals.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink.apply_batch)
-            .start()
-        )
-
-    if not tws_available():
-        return sink, start(_running_totals_fallback(ev))
-
-    # transformWithState requires the RocksDB state store; the provider
-    # conf is read at query START, so it stays set until then and is
-    # restored afterwards (queries already running are unaffected —
-    # they bound their provider at their own start).
-    saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
+    query = (
+        _running_totals(ev)
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(sink.apply_batch)
+        .start()
     )
-    try:
-        totals = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_running_totals_processor(),
-            outputStructType=_Q15_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-        query = start(totals)
-    finally:
-        if saved is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", saved
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     return sink, query
 
 

@@ -23,8 +23,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from table_demo_spark.plans.modes import ContinuousPlan, infer_plan
-
 
 class MemoryUpsertSink:
     """Thread-safe keyed row store; doc id = ':'-joined key values."""
@@ -338,40 +336,6 @@ def foreach_batch_upsert(
         sink.upsert([r.asDict() for r in batch_df.collect()])
 
     return fn
-
-
-def run_to_upsert_sink(
-    stream_df: DataFrame,
-    plan: ContinuousPlan | None = None,
-    flatten_window: str | None = "window",
-) -> tuple[MemoryUpsertSink, "object"]:
-    """Bind a continuous query to a MemoryUpsertSink — the engine-side
-    analog of ``table.writeToSink(new ElasticUpsertTableSink(...))``
-    (TaxiRideQueries.scala:91-99): infer output mode + upsert keys from
-    the plan, start the stream. Returns (sink, StreamingQuery)."""
-    if plan is None:
-        plan = infer_plan(stream_df)
-    df = stream_df
-    keys = list(plan.upsert_keys)
-    if flatten_window and flatten_window in df.columns:
-        # window struct -> its end timestamp as the key component
-        from pyspark.sql import functions as F
-
-        df = df.withColumn(flatten_window, F.unix_millis(F.col(f"{flatten_window}.end")))
-    sink = MemoryUpsertSink(tuple(keys))
-    query = (
-        df.writeStream.outputMode(plan.output_mode)
-        .foreachBatch(foreach_batch_upsert(sink))
-        .option("checkpointLocation", _tmp_checkpoint())
-        .start()
-    )
-    return sink, query
-
-
-def _tmp_checkpoint() -> str:
-    from table_demo_spark.scratch import scratch_dir
-
-    return scratch_dir("tds-ckpt-")
 
 
 class VersionedCdcSink:

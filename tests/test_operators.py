@@ -664,48 +664,48 @@ def test_bpe_train_greedy_merge_semantics(spark):
     assert r2.n_tokens_after == 4
 
 
-def test_bpe_apply_vocab_equals_relational_rewrite(spark):
+def test_bpe_apply_vocab_equals_sequential_apply(spark):
     """The one-pass vectorized apply (bpe_apply_vocab) must produce
-    the identical per-doc stats as the per-round relational rewrite
-    (bpe_train_apply) for the same learned vocabulary — including the
-    interactions the single pass must get right: priority order,
-    overlapping candidate pairs (a,a runs), merges consuming tokens a
-    later merge would have used, and merged tokens participating in
-    later merges. 6 merges crosses a _CHECKPOINT_EVERY boundary, so
-    both chain-materialization modes are on the path."""
-    from table_demo_spark.operators.bpe import (
-        SEP,
-        bpe_apply_vocab,
-        bpe_learn,
-        bpe_train_apply,
-    )
+    the identical per-doc stats as an independent sequential apply
+    (_reference_bpe_apply) of the same learned vocabulary to a corpus
+    OTHER than the one it was learned on — including the interactions
+    the single pass must get right: priority order, overlapping
+    candidate pairs (a,a runs), merges consuming tokens a later merge
+    would have used, merged tokens participating in later merges, and
+    splits of a multi-token merge the train corpus never showed. One
+    hand-built pair (6 merges crosses a _CHECKPOINT_EVERY boundary in
+    bpe_learn) plus seeded random train/apply pairs over a tiny
+    alphabet, where such unseen splits are common."""
+    import random
 
-    train = spark.createDataFrame(
-        [
-            (1, "a a a a b c d"),
-            (2, "a a c a b"),
-            (3, "b c d a a b c"),
-            (4, "d d a b c a a"),
-        ],
-        "doc_id long, text string",
-    )
-    held = spark.createDataFrame(
-        [
-            (10, "a a a b c d d"),
-            (11, "c a b x y"),
-            (12, "q r s"),  # no merges apply
-            (13, ""),
-        ],
-        "doc_id long, text string",
-    )
-    iters = 6
-    want = sorted(
-        map(tuple, bpe_train_apply(train, held, iters=iters).collect())
-    )
-    merges = bpe_learn(train, iters=iters)
-    assert len(merges) == iters and all(SEP in m for m in merges)
-    got = sorted(map(tuple, bpe_apply_vocab(held, merges).collect()))
-    assert got == want
+    from table_demo_spark.operators.bpe import SEP, bpe_apply_vocab, bpe_learn
+
+    def frame(texts):
+        return spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+
+    train = ["a a a a b c d", "a a c a b", "b c d a a b c", "d d a b c a a"]
+    held = ["a a a b c d d", "c a b x y", "q r s", ""]
+    merges = bpe_learn(frame(train), iters=6)
+    assert merges == _reference_bpe_train([t.split(" ") for t in train], 6)
+    assert all(SEP in m for m in merges)
+    cases = [(merges, held)]
+    rng = random.Random(17)
+    for _ in range(6):
+        train, held = (
+            [
+                " ".join(rng.choices("abc", k=rng.randint(1, 12)))
+                for _ in range(rng.randint(2, 5))
+            ]
+            for _ in range(2)
+        )
+        hist = _py_sequential_bpe([t.split(" ") for t in train], 8)
+        cases.append(([p for p, _ in hist], held))
+    for merges, held in cases:
+        got = bpe_apply_vocab(frame(held), merges).collect()
+        want = _reference_bpe_apply([t.split(" ") for t in held], merges)
+        assert sorted(map(tuple, got)) == want, (merges, held)
 
 
 def test_split_hot_join_equals_plain_join(spark):
@@ -1105,32 +1105,24 @@ def _reference_bpe_train(token_docs, iters):
     semantics, implemented with none of the engine's relational
     machinery — counts pairs with a dict, picks (max count, lexico
     smallest pair string), merges left-to-right non-overlapping."""
-    from collections import Counter
+    return [pair for pair, _ in _py_sequential_bpe(token_docs, iters)]
 
+
+def _reference_bpe_apply(token_docs, merges):
+    """Independent sequential apply: each merge in priority order as
+    one greedy left-to-right pass over every doc. Returns sorted
+    (doc_id, n_before, n_after, n_merged) rows."""
     from table_demo_spark.operators.bpe import SEP
 
-    docs = [list(t) for t in token_docs]
-    merges = []
-    for _ in range(iters):
-        counts = Counter()
-        for toks in docs:
-            for a, b in zip(toks, toks[1:]):
-                counts[a + SEP + b] += 1
-        pair = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(pair)
-        nxt_docs = []
-        for toks in docs:
-            out, i = [], 0
-            while i < len(toks):
-                if i + 1 < len(toks) and toks[i] + SEP + toks[i + 1] == pair:
-                    out.append(pair)
-                    i += 2
-                else:
-                    out.append(toks[i])
-                    i += 1
-            nxt_docs.append(out)
-        docs = nxt_docs
-    return merges
+    rows = []
+    for doc_id, toks in enumerate(token_docs):
+        out = list(toks)
+        for pair in merges:
+            out = _py_merge_one(out, pair)
+        rows.append(
+            (doc_id, len(toks), len(out), sum(SEP in t for t in out))
+        )
+    return rows
 
 
 def test_bpe_learn_matches_independent_reference(spark):

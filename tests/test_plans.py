@@ -94,6 +94,8 @@ _PYTHON_ALLOWED = {
     "llm_m13_wav_energy",  # MapInPandas (real RIFF/WAVE PCM decode)
     "llm_m14_png_luma",  # MapInPandas (real PNG inflate+unfilter decode)
     "llm_m15_gif_scene_cuts",  # MapInPandas (real GIF LZW decode feeding lag window)
+    "llm_t25_bpe_encode",  # MapInPandas (one-pass vocab apply, merge list in closure)
+    "llm_t27_bpe_sample_train",  # MapInPandas (one-pass vocab apply, merge list in closure)
     "llm_t28_bpe_vocab_apply",  # MapInPandas (one-pass vocab apply, merge list in closure)
     "llm_m16_pcm_vad_segments",  # MapInPandas (real RIFF decode + frame energies)
     "llm_m17_jpeg_dc",  # MapInPandas (real JPEG entropy decode to DC plane)
@@ -498,10 +500,8 @@ def test_round3_additions_have_scale_safe_shapes(spark):
             (),
         ),
         ("llm_p16_decontaminated_split", ("CartesianProduct",), ()),
-        # t25's returned frame is the post-training stats join (the
-        # per-round min_by plan is pinned separately by
-        # test_bpe_round_top_pair_is_min_by_aggregate — the eager
-        # training loop truncates it out of the final plan).
+        # t25's returned frame is the one-pass vocabulary apply (the
+        # eager training loop truncates itself out of the final plan).
         (
             "llm_t25_bpe_encode",
             ("CartesianProduct", "Exchange SinglePartition"),
@@ -634,7 +634,7 @@ def test_no_single_task_global_sort_rankings(spark):
 
 
 def test_bpe_round_top_pair_is_min_by_aggregate(spark):
-    """t20/t25's per-round top-1 merge selection (the plan the eager
+    """t20's per-round top-1 merge selection (the plan the eager
     training loop executes each round — the r2 global-sort fix, pinned
     here directly since the literal-rebroadcast loop truncates it out
     of the queries' returned frames): a min_by aggregate with map-side
@@ -1044,18 +1044,15 @@ def test_image_phash_candidates_are_banded_equi_join(spark):
 
 def test_t27_sample_train_job_count_is_pinned(spark):
     """r6 watch item: llm_t27's shape is many SEQUENTIAL tiny jobs
-    (per-round pair-count + bounded-cache materializations), whose
-    wall-clock under contention inflates superlinearly — so the
-    sequential-round job COUNT must not silently grow when
-    operators/bpe.py's shared helpers change. Measured 27 jobs/run
-    (stable across runs and scale factors, 2026-08-15: 3 rounds x
-    {pair-count agg, two chain rewrites + eager cache
-    materializations} + the final before/after join)."""
+    (per-scan candidate collects in bpe_learn, then the one-pass
+    apply), whose wall-clock under contention inflates superlinearly
+    — so the job COUNT must not silently grow when operators/bpe.py's
+    shared helpers change. Measured 11 jobs/run at local[4]."""
     st = spark.sparkContext.statusTracker()
     before = len(st.getJobIdsForGroup(None) or [])
     _query("llm_t27_bpe_sample_train")(spark, SF_SMOKE).count()
     after = len(st.getJobIdsForGroup(None) or [])
-    assert after - before <= 27, f"t27 now runs {after - before} jobs (was 27)"
+    assert after - before <= 11, f"t27 now runs {after - before} jobs (was 11)"
 
 
 def test_s24_batched_hierarchy_job_count_is_pinned(spark):
