@@ -31,6 +31,7 @@ from table_demo_spark.scratch import scratch_dir
 from pyspark.sql import DataFrame, SparkSession
 
 from table_demo_spark.plans.modes import ContinuousPlan, infer_plan
+from table_demo_spark.streaming import start_stream
 
 
 class TableEnvironment:
@@ -113,10 +114,9 @@ class TableEnvironment:
             sink.foreach_batch()(df, 0)
             return sink, None
         ckpt = checkpoint or scratch_dir("tds-tenv-ckpt-")
-        query = (
+        query = start_stream(
             df.writeStream.outputMode(plan.output_mode)
             .option("checkpointLocation", ckpt)
             .foreachBatch(sink.foreach_batch())
-            .start()
         )
         return sink, query

@@ -24,6 +24,7 @@ on pacing, only completion time does.
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,51 +53,25 @@ from table_demo_spark.queries.reference import (
 DRIVER_SPEED = 5e8  # ~16 years of event time per wall-clock second
 WATERMARK_MS = 61_000  # streaming/queries.py WATERMARK
 
-# State partitions for the micro-batch stateful operators below. These
-# drain a whole fixture in a couple of micro-batches, so per-partition
-# state-store open/commit overhead dominates over parallelism — fewer,
-# fatter state partitions win (measured at sf0.1: 32 -> 4 partitions cuts
-# the full q1 drain from 8.2s to 5.3s). Round 3 re-A/B'd 4 vs 2 vs 1
-# INTERLEAVED (sequential A/Bs drift): 2 and 4 are indistinguishable
-# within the box's ±6% noise on q1/q2/q22, and the Python-stateful
-# group (q3/q15/q16) leans toward 4 — keeping 4. A real cluster
-# deployment sizes this to executor count instead; AQE cannot
-# (streaming state partition count is fixed at the first checkpoint).
-STATE_PARTITIONS = "4"
-
-
-class _state_partitions:
-    """Scope streaming-drain session confs around one run.
-
-    ``no_data=False`` additionally disables no-data micro-batches for
-    queries whose output emits within the data batch itself (the
-    ``quiet_polls=1`` drains: update-mode aggregations, inner joins) —
-    the trailing watermark-advance batch only performs state cleanup
-    there, and skipping it saves ~0.5 s per drain (round-3 A/B:
-    q1 3.3 -> 2.9 s). Watermark-GATED emission (append-mode timeouts,
-    session close, outer-join null padding) MUST keep no-data batches:
-    their output trails data by watermark advances."""
-
-    def __init__(self, spark: SparkSession, no_data: bool = True):
-        self._spark = spark
-        self._no_data = no_data
-
-    def __enter__(self):
-        conf = self._spark.conf
-        self._saved = conf.get("spark.sql.shuffle.partitions")
-        conf.set("spark.sql.shuffle.partitions", STATE_PARTITIONS)
-        self._saved_nd = conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        )
-        if not self._no_data:
-            conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-
-    def __exit__(self, *exc):
-        conf = self._spark.conf
-        conf.set("spark.sql.shuffle.partitions", self._saved)
-        conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", self._saved_nd
-        )
+@contextmanager
+def _no_data_batches_off(spark: SparkSession):
+    """Disable no-data micro-batches around one drain, for queries whose
+    output emits within the data batch itself (the ``quiet_polls=1``
+    drains: update-mode aggregations, inner joins) — the trailing
+    watermark-advance batch only performs state cleanup there, and
+    skipping it saves ~0.5 s per drain (round-3 A/B: q1 3.3 -> 2.9 s).
+    Watermark-GATED emission (append-mode timeouts, session close,
+    outer-join null padding) MUST keep no-data batches: their output
+    trails data by watermark advances. The state partition count is not
+    set here: every runner starts its stream through
+    ``streaming.start_stream``, which pins it."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    saved = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
 
 # Transient executor/worker spawn failures at stream start: under heavy
@@ -244,7 +219,7 @@ def _append_sink():
 def q1_stream_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q1_stream
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q1_stream(spark, sf_dir, speed=DRIVER_SPEED)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -258,9 +233,8 @@ def q2_stream_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q2_stream
 
     sink = _append_sink()
-    with _state_partitions(spark):
-        _, query = run_q2_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
-        _drain(query, sink.count)
+    _, query = run_q2_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
+    _drain(query, sink.count)
     return sink.snapshot_df(spark).select(
         "cell", "ride_id", "rowtime_ms", "dept_cnt"
     )
@@ -269,7 +243,7 @@ def q2_stream_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_stream_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q3_stream
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q3_stream(
             spark, sf_dir, speed=DRIVER_SPEED, threshold=Q3_THRESHOLD
         )
@@ -302,9 +276,8 @@ def q4_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q4_session_stream
 
     sink = _append_sink()
-    with _state_partitions(spark):
-        _, query = q4_session_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
-        _drain(query, sink.count)
+    _, query = q4_session_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
+    _drain(query, sink.count)
     return sink.snapshot_df(spark).select("user_id", "session_start", "n_events")
 
 
@@ -345,7 +318,7 @@ def q5_join_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q5_join_stream
 
     sink = _append_sink()
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = q5_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -378,7 +351,7 @@ def q6_dedup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q6_dedup_stream
 
     sink = _append_sink()
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = q6_dedup_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select("user_id", "event_type")
@@ -393,7 +366,7 @@ Q6_DEDUP_ORACLE = "SELECT DISTINCT user_id, event_type FROM events"
 def q7_enrich_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q7_enrich_stream
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = q7_enrich_stream(spark, sf_dir, speed=DRIVER_SPEED)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -418,7 +391,7 @@ def q8_retract_delete_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q8_retract_delete
 
     sink = _parquet_sink(("cell",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = run_q8_retract_delete(
             spark, sf_dir, speed=DRIVER_SPEED, limit=_Q8_LIMIT, sink=sink
         )
@@ -444,7 +417,7 @@ HAVING count(*) <= {_Q8_LIMIT}
 def q9_debug_sink_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q9_debug_sink
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q9_debug_sink(spark, sf_dir, speed=DRIVER_SPEED)
         _drain(query, lambda: len(sink.log()), quiet_polls=1)
     assert len(sink.log()) >= len(sink.snapshot())  # every change logged
@@ -471,11 +444,10 @@ def q10_ttl_expiry_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q10_ttl_expiry
 
     sink = _parquet_sink(("cell",))
-    with _state_partitions(spark):
-        _, query = run_q10_ttl_expiry(
-            spark, sf_dir, speed=DRIVER_SPEED, ttl_ms=_Q10_TTL_MS, sink=sink
-        )
-        _drain(query, lambda: sink.count(spark))
+    _, query = run_q10_ttl_expiry(
+        spark, sf_dir, speed=DRIVER_SPEED, ttl_ms=_Q10_TTL_MS, sink=sink
+    )
+    _drain(query, lambda: sink.count(spark))
     return sink.snapshot_df(spark).select("cell", "dept_cnt")
 
 
@@ -565,7 +537,7 @@ def q11_csv_stream_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q11_csv_stream
 
     sink = _parquet_sink(("cell", "dept_time"))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = run_q11_csv_stream(spark, sf_dir, sink=sink)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select("cell", "dept_time", "dept_cnt")
@@ -575,9 +547,8 @@ def q12_left_join_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q12_left_join_stream
 
     sink = _append_sink()
-    with _state_partitions(spark):
-        _, query = q12_left_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
-        _drain(query, sink.count)
+    _, query = q12_left_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
+    _drain(query, sink.count)
     out = sink.snapshot_df(spark)
     # Null purchase columns (expired unmatched clicks) -> -1 sentinels:
     # the driver's compare needs stable int64 dtype on both sides, and
@@ -631,7 +602,7 @@ def q13_sliding_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q13_sliding_stream
 
     sink = _parquet_sink(("event_type", "win_start"))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = q13_sliding_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
         _drain(query, lambda: sink.count(spark), quiet_polls=1)
     return sink.snapshot_df(spark).select("event_type", "win_start", "n")
@@ -657,7 +628,7 @@ def q14_topk_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q14_topk
 
     sink = _parquet_sink(("cell",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = run_q14_topk(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
         _drain(query, lambda: sink.count(spark), quiet_polls=1)
     # read-path k-selection over the materialized view: TakeOrdered
@@ -687,7 +658,7 @@ def q15_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q15_running_totals
 
     sink = _parquet_sink(("user_id",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, query = run_q15_running_totals(
             spark, sf_dir, speed=DRIVER_SPEED, sink=sink
         )
@@ -712,7 +683,7 @@ def q16_hll_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.operators.sketch import hll_estimate
     from table_demo_spark.streaming.queries import run_q16_hll_sketch
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q16_hll_sketch(spark, sf_dir, speed=DRIVER_SPEED)
         _drain(query, lambda: sink.count(spark), quiet_polls=1)
     return hll_estimate(sink.snapshot_df(spark), ["event_type"]).select(
@@ -762,7 +733,7 @@ def q17_fanout_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.operators.sketch import hll_estimate
     from table_demo_spark.streaming.queries import run_q17_fanout
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         archive, sketch, query = run_q17_fanout(
             spark, sf_dir, speed=DRIVER_SPEED
         )
@@ -822,7 +793,7 @@ FROM cnt JOIN est USING (event_type)
 def q18_cdc_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q18_cdc_apply
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q18_cdc_apply(spark, sf_dir, speed=DRIVER_SPEED)
         _drain(query, lambda: sink.count(spark), quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -855,9 +826,8 @@ def q19_anti_join_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q19_anti_join_stream
 
     sink = _append_sink()
-    with _state_partitions(spark):
-        _, query = q19_anti_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
-        _drain(query, sink.count)
+    _, query = q19_anti_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
+    _drain(query, sink.count)
     return sink.snapshot_df(spark).select("view_id", "user_id", "view_ms")
 
 
@@ -894,9 +864,8 @@ def q20_semi_join_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q20_semi_join_stream
 
     sink = _append_sink()
-    with _state_partitions(spark):
-        _, query = q20_semi_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
-        _drain(query, sink.count)
+    _, query = q20_semi_join_stream(spark, sf_dir, speed=DRIVER_SPEED, sink=sink)
+    _drain(query, sink.count)
     return sink.snapshot_df(spark).select("view_id", "user_id", "view_ms")
 
 
@@ -922,7 +891,7 @@ FROM v JOIN p ON v.user_id = p.user_id
 def q21_dead_letter_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q21_dead_letter
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         counts, dlq, query = run_q21_dead_letter(spark, sf_dir)
         _drain(query, lambda: counts.count() + dlq.count(), quiet_polls=1)
     ok_rows = counts.snapshot_df(spark).select(
@@ -969,11 +938,10 @@ def q22_full_outer_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import q22_full_outer_join_stream
 
     sink = _append_sink()
-    with _state_partitions(spark):
-        _, query = q22_full_outer_join_stream(
-            spark, sf_dir, speed=DRIVER_SPEED, sink=sink
-        )
-        _drain(query, sink.count)
+    _, query = q22_full_outer_join_stream(
+        spark, sf_dir, speed=DRIVER_SPEED, sink=sink
+    )
+    _drain(query, sink.count)
     return sink.snapshot_df(spark).select(
         "user_id", "click_id", "purchase_id", "click_ms", "purchase_ms"
     )
@@ -1024,6 +992,7 @@ def q23_http_upsert_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the wire during the drain, and the final store must still equal
     the batch Q1 answer exactly (same oracle as stream_q1) — retry +
     replay convergence, verified by value hash, not argued."""
+    from table_demo_spark.streaming import start_stream
     from table_demo_spark.streaming.http_sink import EsStubServer, HttpUpsertSink
     from table_demo_spark.streaming.queries import (
         _checkpoint_dir,
@@ -1037,7 +1006,7 @@ def q23_http_upsert_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         server.fail_next(1)  # first bulk POST 503s -> client must retry
         sink = HttpUpsertSink(server.url, ("cell", "dept_time"))
         ckpt = _checkpoint_dir()
-        with _state_partitions(spark, no_data=False):
+        with _no_data_batches_off(spark):
             out = q1_stream(
                 stream_departures(
                     stream_rides(
@@ -1045,11 +1014,10 @@ def q23_http_upsert_final(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
             )
-            query = (
+            query = start_stream(
                 out.writeStream.outputMode("update")
                 .option("checkpointLocation", ckpt)
                 .foreachBatch(sink.foreach_batch())
-                .start()
             )
             _drain(query, lambda: len(sink.snapshot()), quiet_polls=1)
         rows = sink.snapshot()
@@ -1076,7 +1044,7 @@ def q24_http_retract_delete_final(spark: SparkSession, sf_dir: str) -> DataFrame
     try:
         server.fail_next(1)
         sink = HttpUpsertSink(server.url, ("cell",))
-        with _state_partitions(spark, no_data=False):
+        with _no_data_batches_off(spark):
             _, query = run_q8_retract_delete(
                 spark, sf_dir, speed=DRIVER_SPEED, limit=_Q8_LIMIT, sink=sink
             )
@@ -1110,7 +1078,7 @@ def q25_streaming_neardup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.queries.llmops import JACCARD_THRESHOLD
     from table_demo_spark.streaming.queries import run_q25_streaming_neardup
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query, cleanup = run_q25_streaming_neardup(
             spark, sf_dir, threshold=JACCARD_THRESHOLD
         )
@@ -1145,7 +1113,7 @@ def q26_stream_tokenize_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.streaming.queries import run_q26_stream_tokenize
 
     sink = None
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q26_stream_tokenize(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1174,7 +1142,7 @@ def q28_media_decode_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash."""
     from table_demo_spark.streaming.queries import run_q28_media_decode
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q28_media_decode(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1193,7 +1161,7 @@ def q43_avif_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary breaks the value hash."""
     from table_demo_spark.streaming.queries import run_q43_avif_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q43_avif_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1217,7 +1185,7 @@ def q45_hevc_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic doc_id-keyed subsample per micro-batch)."""
     from table_demo_spark.streaming.queries import run_q45_hevc_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q45_hevc_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1244,7 +1212,7 @@ def q46_bvideo_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic doc_id-keyed subsample per micro-batch)."""
     from table_demo_spark.streaming.queries import run_q46_bvideo_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q46_bvideo_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1264,7 +1232,7 @@ def q30_color_decode_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     contents = batch m19 exactly (its oracle verbatim)."""
     from table_demo_spark.streaming.queries import run_q30_color_media_decode
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q30_color_media_decode(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1287,7 +1255,7 @@ def q34_media_triage_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundary breaks the hash."""
     from table_demo_spark.streaming.queries import run_q34_media_triage
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q34_media_triage(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -1375,7 +1343,7 @@ def q35_graph_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q35_graph_ingest,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q35_graph_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return q35_final_edges(sink.snapshot_df(spark))
@@ -1409,7 +1377,7 @@ def q36_graph_reshard_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q36_graph_reshard,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q36_graph_reshard(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return q36_final_edges(spark, sink)
@@ -1443,7 +1411,7 @@ def q38_hnsw_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q38_hnsw_ingest,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q38_hnsw_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return q38_final_edges(spark, sink)
@@ -1510,7 +1478,7 @@ def s25_serve_hnsw_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q38_hnsw_ingest,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q38_hnsw_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     store = q38_final_edges(spark, sink).persist()
@@ -1589,7 +1557,7 @@ def q39_decontam_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination on one hash chain."""
     from table_demo_spark.streaming.queries import run_q39_decontam_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q39_decontam_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select("doc_id", "split")
@@ -1610,7 +1578,7 @@ def q40_mixture_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot change the sample). Oracle = p17's SQL verbatim."""
     from table_demo_spark.streaming.queries import run_q40_mixture_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q40_mixture_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     agg = (
@@ -1659,7 +1627,7 @@ def q41_pipeline_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.operators import compress
     from table_demo_spark.streaming.queries import run_q41_pipeline_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query, dicts = run_q41_pipeline_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     snap = sink.snapshot_df(spark)
@@ -1724,7 +1692,7 @@ def s20_serve_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q35_graph_ingest,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q35_graph_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     edges = q35_final_edges(sink.snapshot_df(spark)).select("src", "dst")
@@ -1753,7 +1721,7 @@ def s22_serve_resharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q36_graph_reshard,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q36_graph_reshard(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     edges = q36_final_edges(spark, sink).select("src", "dst")
@@ -1779,7 +1747,7 @@ def q37_dict_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.operators import compress
     from table_demo_spark.streaming.queries import run_q37_dict_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query, dicts = run_q37_dict_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return compress.decompress_stats(sink.snapshot_df(spark), dicts)
@@ -1801,7 +1769,7 @@ def q31_temporal_enrich_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     or enriched twice breaks the value hash."""
     from table_demo_spark.streaming.queries import run_q31_temporal_enrich
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q31_temporal_enrich(
             spark, sf_dir, speed=DRIVER_SPEED
         )
@@ -1824,7 +1792,7 @@ def q29_ann_index_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import run_q29_ann_index_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query, _ = run_q29_ann_index_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
 
@@ -1878,7 +1846,7 @@ def q27_available_now_final(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "AvailableNow invocation exceeded 180s before terminating"
             )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query, ckpt = run_q27_available_now(spark, sf_dir)
         await_done(query)
         _, query2, _ = run_q27_available_now(
@@ -1911,7 +1879,7 @@ def q42_state_audit_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint's offset log says that batch had consumed."""
     from table_demo_spark.streaming.queries import run_q42_state_rollup
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         query, ckpt = run_q42_state_rollup(spark, sf_dir)
         try:
             done = query.awaitTermination(180)
@@ -1971,7 +1939,7 @@ def q44_watermark_eviction_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_q44_watermark_rollup,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         query, ckpt = run_q44_watermark_rollup(spark, sf_dir)
         try:
             done = query.awaitTermination(180)
@@ -2099,7 +2067,7 @@ def q33_centroid_drift_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch breaks the value hash."""
     from table_demo_spark.streaming.queries import run_q33_centroid_drift
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q33_centroid_drift(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return sink.snapshot_df(spark).select(
@@ -2182,7 +2150,7 @@ def q32_phash_index_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table_demo_spark.queries.llmops import phash_pairs
     from table_demo_spark.streaming.queries import run_q32_phash_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q32_phash_ingest(spark, sf_dir)
         _drain(query, sink.count, quiet_polls=1)
     return phash_pairs(sink.snapshot_df(spark)).select(

@@ -50,7 +50,12 @@ from table_demo_spark.sources.replay import (
     register_replay_source,
 )
 from table_demo_spark.scratch import scratch_dir
-from table_demo_spark.streaming.upsert import MemoryUpsertSink, foreach_batch_upsert
+from table_demo_spark.streaming import start_stream
+from table_demo_spark.streaming.upsert import (
+    MemoryUpsertSink,
+    committed_generation,
+    foreach_batch_upsert,
+)
 
 WATERMARK = "61 seconds"
 
@@ -73,7 +78,10 @@ def _replay_events(
     frontier_key: str | None = None,
 ) -> DataFrame:
     """readStream over the emit-ordered replay dataset for events
-    (prepared once per fixture by a distributed sort, cached)."""
+    (prepared once per fixture by a distributed sort, cached). At most
+    one read task per core: each Python read task pays a fixed
+    worker-side start cost, so a second wave of them adds its full cost
+    to every micro-batch."""
     register_replay_source(spark)
     prepared = ensure_emit_ordered(
         spark, f"{sf_dir}/events.parquet", timecol="ts",
@@ -83,7 +91,10 @@ def _replay_events(
         spark.readStream.format("replay")
         .option("path", prepared)
         .option("speed", speed)
-        .option("numpartitions", n_parts)
+        .option(
+            "numpartitions",
+            min(n_parts, spark.sparkContext.defaultParallelism),
+        )
     )
     if frontier_key is not None:
         reader = reader.option("frontierkey", frontier_key)
@@ -96,11 +107,10 @@ def _start_append(out: DataFrame, sink, ckpt: str):
     foreachBatch keyed store."""
     if hasattr(sink, "bind_stream"):
         return sink.bind_stream(out, ckpt)
-    return (
+    return start_stream(
         out.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
-        .start()
     )
 
 
@@ -178,11 +188,10 @@ def run_q1_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q1sink-"), ("cell", "dept_time")
     )
-    query = (
+    query = start_stream(
         out.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
-        .start()
     )
     return sink, query
 
@@ -492,11 +501,10 @@ def run_q31_temporal_enrich(
         )
         sink.apply_batch(out, batch_id)
 
-    query = (
+    query = start_stream(
         purchases.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", ckpt)
-        .start()
     )
     return sink, query
 
@@ -654,11 +662,10 @@ def q7_enrich_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q7sink-"), ("c_mktsegment",)
     )
-    query = (
+    query = start_stream(
         out.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
-        .start()
     )
     return sink, query
 
@@ -752,30 +759,24 @@ class ParquetHistogramSink:
     (current histogram ∪ batch deltas): O(|histogram| + |deltas|)
     distributed work, zero driver-side rows."""
 
+    _BATCH = "_BATCH.json"
+
     def __init__(self, path: str):
         import json
         import os
-        import re
 
         self.path = path
-        os.makedirs(path, exist_ok=True)
-        gens = [
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"gen=(\d+)", d))
-        ]
-        self._gen = max(gens, default=0)
         # Replay guard: delta application is NOT idempotent (unlike a
         # key-overwrite upsert), and foreachBatch may re-deliver the
         # last uncommitted batch after a restart — each generation
         # records the batch id it applied, and a replayed id is a
-        # no-op. Recovered from disk so the guard survives the process.
+        # no-op. Recovered from disk so the guard survives the process;
+        # a generation without its record is an unfinished write.
+        self._gen = committed_generation(path, self._BATCH)
         self._last_batch = -1
         if self._gen > 0:
-            meta = os.path.join(self._gen_dir(self._gen), "_BATCH.json")
-            if os.path.exists(meta):
-                with open(meta) as f:
-                    self._last_batch = json.load(f)["batch_id"]
+            with open(os.path.join(self.current_dir, self._BATCH)) as f:
+                self._last_batch = json.load(f)["batch_id"]
         self._spark = None
 
     def _gen_dir(self, gen: int) -> str:
@@ -811,7 +812,7 @@ class ParquetHistogramSink:
         )
         nxt = self._gen_dir(self._gen + 1)
         hist.write.mode("overwrite").parquet(nxt)
-        with open(os.path.join(nxt, "_BATCH.json"), "w") as f:
+        with open(os.path.join(nxt, self._BATCH), "w") as f:
             json.dump({"batch_id": batch_id}, f)
         old = self.current_dir
         self._gen += 1
@@ -885,11 +886,10 @@ def run_q3_stream(
     sink = sink if sink is not None else ParquetHistogramSink(
         scratch_dir("tds-hist-")
     )
-    query = (
+    query = start_stream(
         deltas.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.apply_batch)
-        .start()
     )
     return sink, query
 
@@ -968,11 +968,10 @@ def run_q8_retract_delete(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q8-"), ("cell",)
     )
-    query = (
+    query = start_stream(
         changelog.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.apply_changelog)
-        .start()
     )
     return sink, query
 
@@ -1003,11 +1002,10 @@ def run_q9_debug_sink(
         .alias("revenue"),
     )
     sink = ConsoleDebugSink(("event_type",), echo=echo)
-    query = (
+    query = start_stream(
         out.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
-        .start()
     )
     return sink, query
 
@@ -1120,11 +1118,10 @@ def run_q10_ttl_expiry(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q10-"), ("cell",)
     )
-    query = (
+    query = start_stream(
         changelog.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.apply_changelog)
-        .start()
     )
     return sink, query
 
@@ -1176,11 +1173,10 @@ def run_q11_csv_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q11-"), ("cell", "dept_time")
     )
-    query = (
+    query = start_stream(
         out.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
-        .start()
     )
     return sink, query
 
@@ -1223,11 +1219,10 @@ def q13_sliding_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q13-"), ("event_type", "win_start")
     )
-    query = (
+    query = start_stream(
         out.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.apply_batch)
-        .start()
     )
     return sink, query
 
@@ -1265,11 +1260,10 @@ def run_q14_topk(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q14-"), ("cell",)
     )
-    query = (
+    query = start_stream(
         counts.writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.apply_batch)
-        .start()
     )
     return sink, query
 
@@ -1329,12 +1323,11 @@ def run_q15_running_totals(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q15-"), ("user_id",)
     )
-    query = (
+    query = start_stream(
         _running_totals(ev)
         .writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.apply_batch)
-        .start()
     )
     return sink, query
 
@@ -1360,18 +1353,9 @@ class ParquetSketchSink:
     readers never see a half-written table."""
 
     def __init__(self, path: str, group_cols: tuple[str, ...]):
-        import os
-        import re
-
         self.path = path
         self.group_cols = list(group_cols)
-        os.makedirs(path, exist_ok=True)
-        gens = [
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"gen=(\d+)", d))
-        ]
-        self._gen = max(gens, default=0)
+        self._gen = committed_generation(path)
         self._spark = None
 
     def _gen_dir(self, gen: int) -> str:
@@ -1456,11 +1440,10 @@ def run_q16_hll_sketch(
             hll_registers(batch_df, ["event_type"], "user_id"), batch_id
         )
 
-    query = (
+    query = start_stream(
         ev.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch(handle)
-        .start()
     )
     return sink, query
 
@@ -1544,11 +1527,10 @@ def run_q17_fanout(
         finally:
             batch_df.unpersist()
 
-    query = (
+    query = start_stream(
         ev.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch(handle)
-        .start()
     )
     return archive, sketch, query
 
@@ -1612,11 +1594,10 @@ def run_q18_cdc_apply(
         )
         sink.apply_changelog(last, batch_id)
 
-    query = (
+    query = start_stream(
         ev.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch(handle)
-        .start()
     )
     return sink, query
 
@@ -1758,37 +1739,22 @@ class ParquetCountSink:
     def __init__(self, path: str, group_cols: tuple[str, ...]):
         import json
         import os
-        import re
-        import shutil
 
         self.path = path
         self.group_cols = list(group_cols)
-        os.makedirs(path, exist_ok=True)
-        gens = sorted(
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"gen=(\d+)", d))
-        )
-        self._gen = 0
-        self._max_applied = -1
         # A generation dir without _applied.json is an UNCOMMITTED
         # write: apply_batch writes gen=N+1's parquet first and the
         # marker second, so a crash between the two leaves a marker-less
         # max generation while gen=N (only rmtree'd after the marker
-        # write) still exists. Resetting _max_applied to -1 here would
+        # write) still exists. Resetting _max_applied to -1 there would
         # double-count the checkpoint's replay of the already-summed
-        # batch — instead discard the torn write and fall back to the
-        # newest committed generation.
-        while gens:
-            g = gens[-1]
-            try:
-                with open(os.path.join(self._gen_dir(g), self._APPLIED)) as f:
-                    self._max_applied = json.load(f)["max_batch_id"]
-                self._gen = g
-                break
-            except (OSError, ValueError, KeyError):
-                shutil.rmtree(self._gen_dir(g), ignore_errors=True)
-                gens.pop()
+        # batch — instead the torn write is discarded and the newest
+        # committed generation adopted.
+        self._gen = committed_generation(path, self._APPLIED)
+        self._max_applied = -1
+        if self._gen > 0:
+            with open(os.path.join(self.current_dir, self._APPLIED)) as f:
+                self._max_applied = json.load(f)["max_batch_id"]
 
     def _gen_dir(self, gen: int) -> str:
         return f"{self.path}/gen={gen}"
@@ -1919,11 +1885,10 @@ def run_q21_dead_letter(
         finally:
             batch_df.unpersist()
 
-    query = (
+    query = start_stream(
         lines.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch(handle)
-        .start()
     )
     return counts, dlq, query
 
@@ -2585,11 +2550,10 @@ def run_q33_centroid_drift(
         )
     _, apply = _q33_make_apply(sink, cent0)
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query
 
@@ -2634,12 +2598,11 @@ def run_q27_available_now(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
     )
-    query = (
+    query = start_stream(
         agg.writeStream.outputMode("update")
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
-        .start()
     )
     return sink, query, ckpt
 
@@ -3000,11 +2963,10 @@ def run_q35_graph_ingest(
         )
         seen.unpersist()
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query
 
@@ -3280,11 +3242,10 @@ def run_q36_graph_reshard(
             vec_dir, meta_dir, sink.path, Q36_TARGET_BUCKET,
         )
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query
 
@@ -3360,11 +3321,10 @@ def run_q38_hnsw_ingest(
                 Q36_TARGET_BUCKET,
             )
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query
 
@@ -3518,11 +3478,10 @@ def run_q39_decontam_ingest(
         finally:
             arr.unpersist()
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query
 
@@ -3623,11 +3582,10 @@ def run_q40_mixture_ingest(
             .parquet(os.path.join(sink.path, f"b={batch_id}"))
         )
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query
 
@@ -3845,11 +3803,10 @@ def run_q25_streaming_neardup(
         if shingles.should_compact(min_rows=compact_min_rows):
             shingles.compact(["doc_id"], keep=keep)
 
-    query = (
+    query = start_stream(
         docs.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch(apply)
-        .start()
     )
 
     def cleanup() -> None:
@@ -3885,12 +3842,11 @@ def run_q42_state_rollup(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
     )
-    query = (
+    query = start_stream(
         agg.writeStream.outputMode("update")
         .format("noop")
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
-        .start()
     )
     return query, ckpt
 
@@ -4006,12 +3962,11 @@ def run_q44_watermark_rollup(
         .groupBy(F.window("ts", Q44_WINDOW))
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    query = (
+    query = start_stream(
         agg.writeStream.outputMode("append")
         .format("noop")
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
-        .start()
     )
     return query, ckpt
 
@@ -4269,11 +4224,10 @@ def run_q41_pipeline_ingest(
         finally:
             arr.unpersist()
 
-    query = (
+    query = start_stream(
         stream.writeStream.outputMode("append")
         .foreachBatch(apply)
         .option("checkpointLocation", checkpoint or _checkpoint_dir())
-        .start()
     )
     return sink, query, dicts
 

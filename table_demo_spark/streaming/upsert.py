@@ -18,10 +18,43 @@ adapts any keyed store to ``writeStream.foreachBatch``. A real target
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame
+
+from table_demo_spark.streaming import start_stream
+
+
+def committed_generation(path: str, marker: str = "_SUCCESS") -> int:
+    """Resume point of a generation-flip sink rooted at ``path``: the
+    highest ``gen=N`` directory holding ``marker`` (by default the
+    ``_SUCCESS`` file Spark's job commit leaves), or 0 if none does.
+
+    Each sink writes generation N+1 in full, marks it, and only then
+    removes generation N. A process that dies in between leaves a newer
+    generation without the marker — empty, or holding part files —
+    beside the intact one. Adopting it would make the next batch merge
+    with a partial table and drop every key it lacks, so every unmarked
+    generation above the committed one is discarded."""
+    os.makedirs(path, exist_ok=True)
+    gens = sorted(
+        (
+            int(m.group(1))
+            for d in os.listdir(path)
+            if (m := re.fullmatch(r"gen=(\d+)", d))
+        ),
+        reverse=True,
+    )
+    for g in gens:
+        d = os.path.join(path, f"gen={g}")
+        if os.path.exists(os.path.join(d, marker)):
+            return g
+        shutil.rmtree(d, ignore_errors=True)
+    return 0
 
 
 class MemoryUpsertSink:
@@ -68,22 +101,12 @@ class ParquetUpsertSink:
     in-place parquet overwrite never arises."""
 
     def __init__(self, path: str, key_cols: tuple[str, ...]):
-        import os
-        import re
-
         self.path = path
         self.key_cols = key_cols
-        os.makedirs(path, exist_ok=True)
-        # Resume the merge chain after a process restart: adopt the
-        # highest generation already on disk (otherwise the first
-        # replayed batch would merge with nothing and silently drop
-        # every previously upserted key).
-        gens = [
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"gen=(\d+)", d))
-        ]
-        self._gen = max(gens, default=0)
+        # Resume the merge chain after a process restart (otherwise the
+        # first replayed batch would merge with nothing and silently
+        # drop every previously upserted key).
+        self._gen = committed_generation(path)
 
     def _gen_dir(self, gen: int) -> str:
         return f"{self.path}/gen={gen}"
@@ -93,8 +116,6 @@ class ParquetUpsertSink:
         return self._gen_dir(self._gen) if self._gen > 0 else None
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
@@ -130,8 +151,6 @@ class ParquetUpsertSink:
         'D' remove their key from the table, every other row upserts.
         Deletes of absent keys are no-ops (left-anti join). Same
         generation-flip write discipline as ``apply_batch``."""
-        import shutil
-
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
@@ -185,7 +204,6 @@ class ParquetUpsertSink:
         drain, and a full distributed count per poll would dominate
         the drain time."""
         import glob
-        import os
 
         import pyarrow.parquet as pq
 
@@ -237,7 +255,7 @@ class ParquetAppendSink:
             # for stream_q29, so the probe's IN-list prunes whole
             # directories at scan time.
             writer = writer.partitionBy(*self.partition_by)
-        return writer.start()
+        return start_stream(writer)
 
     def count(self, spark=None) -> int:
         """Footer-metadata row count over written part files — the
@@ -246,7 +264,6 @@ class ParquetAppendSink:
         goes through the log). Recursive so partitioned layouts
         (partition_by) are counted too."""
         import glob
-        import os
 
         import pyarrow.parquet as pq
 
@@ -267,7 +284,6 @@ class ParquetAppendSink:
         """MemoryUpsertSink-compatible convenience for tests/demos
         (see ParquetUpsertSink.snapshot)."""
         import glob
-        import os
 
         from pyspark.sql import SparkSession
 
@@ -368,19 +384,10 @@ class VersionedCdcSink:
         key_cols: tuple[str, ...],
         version_cols: tuple[str, ...],
     ):
-        import os
-        import re
-
         self.path = path
         self.key_cols = key_cols
         self.version_cols = version_cols
-        os.makedirs(path, exist_ok=True)
-        gens = [
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"gen=(\d+)", d))
-        ]
-        self._gen = max(gens, default=0)
+        self._gen = committed_generation(path)
 
     def _gen_dir(self, gen: int) -> str:
         return f"{self.path}/gen={gen}"
@@ -392,8 +399,6 @@ class VersionedCdcSink:
     def apply_changelog(
         self, batch_df: DataFrame, batch_id: int, op_col: str = "__op"
     ) -> None:
-        import shutil
-
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
@@ -424,7 +429,6 @@ class VersionedCdcSink:
         """Footer-metadata row count (tombstones included) — the
         drain-poll stability probe, no Spark job per poll."""
         import glob
-        import os
 
         import pyarrow.parquet as pq
 

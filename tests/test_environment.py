@@ -65,7 +65,7 @@ def test_write_to_sink_streaming_roundtrip(tenv, spark):
     """Entry point C end-to-end through the facade: scan_stream ->
     continuous per-cell count -> write_to_sink (update mode, inferred
     key = grouping column) drains to the batch answer."""
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain
     from table_demo_spark.streaming.queries import stream_departures
 
     out = (
@@ -76,9 +76,8 @@ def test_write_to_sink_streaming_roundtrip(tenv, spark):
     plan = tenv.infer(out)
     assert plan.output_mode == "update"
     assert plan.upsert_keys == ("cell",)
-    with _state_partitions(spark):
-        sink, query = tenv.write_to_sink(out)
-        _drain(query, lambda: len(sink.snapshot()), quiet_polls=1)
+    sink, query = tenv.write_to_sink(out)
+    _drain(query, lambda: len(sink.snapshot()), quiet_polls=1)
     from table_demo_spark.functions.taxi import in_nyc, to_cell_id
 
     want = {
@@ -104,17 +103,16 @@ def test_write_to_sink_traces_q1_keys_through_projection(tenv, spark):
     ``unix_millis(w.end) AS dept_time`` projection, and a watermarked
     single window agg is append-only (the sink's appendOnly fast path,
     :76-80)."""
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain
     from table_demo_spark.streaming.queries import q1_stream, stream_departures
 
     out = q1_stream(stream_departures(tenv.scan_stream("rides", speed=5e8)))
     plan = tenv.infer(out)
     assert plan.upsert_keys == ("cell", "dept_time")
     assert plan.is_append_only  # single watermarked window agg
-    with _state_partitions(spark):
-        sink, query = tenv.write_to_sink(out)  # no explicit sink
-        assert sink.key_cols == ("cell", "dept_time")
-        _drain(query, lambda: len(sink.snapshot()), quiet_polls=1)
+    sink, query = tenv.write_to_sink(out)  # no explicit sink
+    assert sink.key_cols == ("cell", "dept_time")
+    _drain(query, lambda: len(sink.snapshot()), quiet_polls=1)
     # Append mode emits exactly the watermark-closed windows: every
     # emitted row must match the batch answer (subset, nonempty).
     want = {

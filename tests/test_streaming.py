@@ -505,6 +505,122 @@ def test_q1_stream_checkpoint_recovery_is_exactly_once(spark, tmp_path, batch_fr
     pd.testing.assert_frame_equal(got.astype("int64"), want.astype("int64"))
 
 
+def _state_partition_counts(query) -> set[int]:
+    return {
+        op["numShufflePartitions"]
+        for p in query.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def test_streams_start_at_state_partitions_and_keep_the_session(spark):
+    """Every stream starts through ``streaming.start_stream``: its
+    stateful operator runs at STATE_PARTITIONS whatever the session's
+    shuffle partition count, the caller's session keeps its own count
+    (also when ``start()`` raises), and the replay source reads with at
+    most one task per core."""
+    from pyspark.sql.utils import AnalysisException
+
+    from table_demo_spark.queries.streaming import DRIVER_SPEED
+    from table_demo_spark.streaming import STATE_PARTITIONS, start_stream
+    from table_demo_spark.streaming.queries import _replay_events, run_q1_stream
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        _, q = run_q1_stream(spark, SF_SMOKE, speed=DRIVER_SPEED)
+        assert spark.conf.get(key) == "32"
+        _run_until_done(q)
+        assert _state_partition_counts(q) == {int(STATE_PARTITIONS)}
+
+        events = _replay_events(spark, SF_SMOKE, DRIVER_SPEED)
+        with pytest.raises(AnalysisException):
+            # complete mode needs an aggregation: start() itself fails
+            start_stream(
+                events.writeStream.outputMode("complete").format("noop")
+            )
+        assert spark.conf.get(key) == "32"
+
+        parts: list[int] = []
+        q = start_stream(
+            events.writeStream.foreachBatch(
+                lambda df, _: parts.append(df.rdd.getNumPartitions())
+            )
+        )
+        _run_until_done(q)
+        assert max(parts) == min(8, spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_q1_restart_keeps_the_checkpoint_partition_count(
+    spark, tmp_path, batch_frames
+):
+    """A checkpoint written at another shuffle partition count keeps
+    it: a restart through ``start_stream`` takes the count from the
+    offset log. Crash forgery as in the q33 restart test: drain, delete
+    the last commit marker, restart with a rebuilt sink — the replayed
+    batch must run at the recorded count and end at the batch answer."""
+    import os
+
+    from table_demo_spark.queries.streaming import _no_data_batches_off
+    from table_demo_spark.streaming import STATE_PARTITIONS, start_stream
+    from table_demo_spark.streaming.queries import (
+        q1_stream,
+        stream_departures,
+        stream_rides,
+    )
+    from table_demo_spark.streaming.upsert import ParquetUpsertSink
+
+    ckpt = str(tmp_path / "ckpt")
+    path = str(tmp_path / "q1")
+
+    def writer():
+        out = q1_stream(
+            stream_departures(stream_rides(spark, SF_SMOKE, speed=SPEED))
+        )
+        sink = ParquetUpsertSink(path, ("cell", "dept_time"))  # rebuilt
+        return (
+            out.writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(sink.foreach_batch())
+        )
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    written = 2
+    assert written != int(STATE_PARTITIONS)
+    with _no_data_batches_off(spark):
+        spark.conf.set(key, str(written))
+        try:
+            q = writer().start()
+        finally:
+            spark.conf.set(key, saved)
+        _run_until_done(q)
+        assert _state_partition_counts(q) == {written}
+        last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(f"{ckpt}/commits/{f}"):
+                os.remove(f"{ckpt}/commits/{f}")
+
+        q2 = start_stream(writer())
+        _run_until_done(q2)
+    assert [p["batchId"] for p in q2.recentProgress][:1] == [last]
+    assert _state_partition_counts(q2) == {written}
+
+    got = (
+        ParquetUpsertSink(path, ("cell", "dept_time"))
+        .snapshot_df(spark)
+        .toPandas()[["cell", "dept_time", "dept_cnt"]]
+        .sort_values(["cell", "dept_time"], ignore_index=True)
+    )
+    want = batch_frames["q1"].sort_values(
+        ["cell", "dept_time"], ignore_index=True
+    )[["cell", "dept_time", "dept_cnt"]]
+    pd.testing.assert_frame_equal(got.astype("int64"), want.astype("int64"))
+
+
 def test_replay_reader_restart_resumes_frontier_without_regression(spark):
     """Root cause of a flaky recovery failure: a reader restarted from a
     checkpoint starts a fresh pacing clock, so latestOffset() sat below
@@ -588,6 +704,55 @@ def test_parquet_upsert_sink_resumes_after_process_restart(spark, tmp_path):
     s2.apply_batch(spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string"), 1)
     got = {r["k"]: r["v"] for r in s2.snapshot_df(spark).collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
+
+
+@pytest.mark.parametrize("torn", ["empty", "no_success"])
+def test_generation_sinks_resume_from_last_committed_generation(
+    spark, tmp_path, torn
+):
+    """A stop mid-batch can leave gen=2 unfinished beside an intact
+    gen=1: an empty directory, or part files without the ``_SUCCESS``
+    of a committed write. A rebuilt sink must resume from gen=1 and
+    discard gen=2 — adopting it would merge the next batch with a
+    partial table and drop gen=1's keys."""
+    import os
+
+    from table_demo_spark.streaming.upsert import (
+        ParquetUpsertSink,
+        VersionedCdcSink,
+    )
+
+    rows = "k long, v long, __op string"
+    cases = [
+        (
+            lambda p: ParquetUpsertSink(p, ("k",)),
+            lambda sink, df, b: sink.apply_batch(df.drop("__op"), b),
+            lambda sink: sink.snapshot_df(spark),
+        ),
+        (
+            lambda p: VersionedCdcSink(p, ("k",), ("v",)),
+            lambda sink, df, b: sink.apply_changelog(df, b),
+            lambda sink: sink.snapshot_df(spark),
+        ),
+    ]
+    for i, (make, apply, read) in enumerate(cases):
+        path = str(tmp_path / f"sink{i}")
+        sink = make(path)
+        apply(sink, spark.createDataFrame([(1, 10, "U"), (2, 20, "U")], rows), 0)
+        assert sink.current_dir == f"{path}/gen=1"
+        gen2 = f"{path}/gen=2"
+        if torn == "empty":
+            os.makedirs(gen2)
+        else:
+            spark.createDataFrame([(9, 90)], "k long, v long").write.parquet(gen2)
+            os.remove(f"{gen2}/_SUCCESS")
+
+        reborn = make(path)
+        assert reborn.current_dir == f"{path}/gen=1"
+        assert not os.path.exists(gen2)
+        apply(reborn, spark.createDataFrame([(3, 30, "U")], rows), 1)
+        got = {(r.k, r.v) for r in read(reborn).collect()}
+        assert got == {(1, 10), (2, 20), (3, 30)}, type(reborn).__name__
 
 
 def test_upsert_key_inference_ignores_window_lookalike_columns(spark):
@@ -1085,7 +1250,7 @@ def test_q29_index_at_ingest_layout_prunes_and_matches_batch(spark):
     from pyspark.sql import functions as F
 
     from table_demo_spark.operators import similarity as S
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import run_q29_ann_index_ingest
     from tests.test_plans import formatted_plan
@@ -1113,7 +1278,7 @@ def test_q29_index_at_ingest_layout_prunes_and_matches_batch(spark):
     }
     assert inline_assign == batch_assign
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query, _ = run_q29_ann_index_ingest(spark, SF_SMOKE)
         _drain(query, sink.count, quiet_polls=1)
 
@@ -1157,12 +1322,12 @@ def test_q33_store_probe_is_partition_pruned_and_retrain_routes(spark):
     from pyspark.sql import functions as F
 
     from table_demo_spark.operators import similarity as S
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import run_q33_centroid_drift
     from tests.test_plans import formatted_plan
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, query = run_q33_centroid_drift(spark, SF_SMOKE)
         _drain(query, sink.count, quiet_polls=1)
 
@@ -1241,7 +1406,7 @@ def test_q33_restart_replay_matches_uninterrupted_run(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q33_centroid_drift
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1254,7 +1419,7 @@ def test_q33_restart_replay_matches_uninterrupted_run(spark, tmp_path):
         }
 
     # uninterrupted reference run
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         ref_sink, q = run_q33_centroid_drift(spark, SF_SMOKE)
         _drain(q, ref_sink.count, quiet_polls=1)
     want = rows(ref_sink)
@@ -1266,7 +1431,7 @@ def test_q33_restart_replay_matches_uninterrupted_run(spark, tmp_path):
     sink = ParquetAppendSink(
         str(tmp_path / "store"), ("b", "gen", "centroid_id")
     )
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q = run_q33_centroid_drift(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1275,7 +1440,7 @@ def test_q33_restart_replay_matches_uninterrupted_run(spark, tmp_path):
     crc = os.path.join(ckpt, "commits", ".3.crc")
     if os.path.exists(crc):  # local-fs checksum shadow of the marker
         os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2 = run_q33_centroid_drift(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1332,7 +1497,7 @@ def test_q35_restart_replay_matches_uninterrupted_run(spark, tmp_path):
     final edge store must equal the uninterrupted run's."""
     import os
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q35_graph_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1344,7 +1509,7 @@ def test_q35_restart_replay_matches_uninterrupted_run(spark, tmp_path):
             .collect()
         }
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         ref_sink, q = run_q35_graph_ingest(spark, SF_SMOKE)
         _drain(q, ref_sink.count, quiet_polls=1)
     want = rows(ref_sink)
@@ -1352,14 +1517,14 @@ def test_q35_restart_replay_matches_uninterrupted_run(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     sink = ParquetAppendSink(str(tmp_path / "store"), ("b",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q = run_q35_graph_ingest(spark, SF_SMOKE, sink=sink, checkpoint=ckpt)
         _drain(q, sink.count, quiet_polls=1)
     os.remove(os.path.join(ckpt, "commits", "3"))
     crc = os.path.join(ckpt, "commits", ".3.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2 = run_q35_graph_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1377,13 +1542,13 @@ def test_q36_reshard_crosses_boundary_and_pins_occupancy(spark):
     from pyspark.sql import functions as F
 
     from table_demo_spark.operators import similarity
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import (
         Q36_TARGET_BUCKET,
         run_q36_graph_reshard,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, q = run_q36_graph_reshard(spark, SF_SMOKE)
         _drain(q, sink.count, quiet_polls=1)
     meta = sorted(
@@ -1415,7 +1580,7 @@ def test_q36_restart_replays_the_reshard_batch(spark, tmp_path):
     uninterrupted run's, generation labels included."""
     import os
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q36_graph_reshard
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1428,7 +1593,7 @@ def test_q36_restart_replays_the_reshard_batch(spark, tmp_path):
             .collect()
         }
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         ref_sink, q = run_q36_graph_reshard(spark, SF_SMOKE)
         _drain(q, ref_sink.count, quiet_polls=1)
     want = rows(ref_sink)
@@ -1438,7 +1603,7 @@ def test_q36_restart_replays_the_reshard_batch(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     sink = ParquetAppendSink(str(tmp_path / "store"), ("g", "b"))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q = run_q36_graph_reshard(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1448,7 +1613,7 @@ def test_q36_restart_replays_the_reshard_batch(spark, tmp_path):
         crc = os.path.join(ckpt, "commits", f".{n}.crc")
         if os.path.exists(crc):
             os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2 = run_q36_graph_reshard(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1467,11 +1632,11 @@ def test_q38_layers_reshard_independently(spark):
     from pyspark.sql import functions as F
 
     from table_demo_spark.queries.llmops import _s23_layer_col
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import run_q38_hnsw_ingest
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, q = run_q38_hnsw_ingest(spark, SF_SMOKE)
         _drain(q, sink.count, quiet_polls=1)
     meta = spark.read.parquet(sink.path.rstrip("/") + "-meta")
@@ -1513,7 +1678,7 @@ def test_q38_restart_replays_the_reshard_batch(spark, tmp_path):
     labels included."""
     import os
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q38_hnsw_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1526,7 +1691,7 @@ def test_q38_restart_replays_the_reshard_batch(spark, tmp_path):
             .collect()
         }
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         ref_sink, q = run_q38_hnsw_ingest(spark, SF_SMOKE)
         _drain(q, ref_sink.count, quiet_polls=1)
     want = rows(ref_sink)
@@ -1536,7 +1701,7 @@ def test_q38_restart_replays_the_reshard_batch(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     sink = ParquetAppendSink(str(tmp_path / "store"), ("lv", "g", "b"))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q = run_q38_hnsw_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1546,7 +1711,7 @@ def test_q38_restart_replays_the_reshard_batch(spark, tmp_path):
         crc = os.path.join(ckpt, "commits", f".{n}.crc")
         if os.path.exists(crc):
             os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2 = run_q38_hnsw_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1562,7 +1727,7 @@ def test_q39_restart_replays_byte_stably(spark, tmp_path):
     split rows — and the full drain equals llm_p16's batch split."""
     import os
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q39_decontam_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1574,7 +1739,7 @@ def test_q39_restart_replays_byte_stably(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     sink = ParquetAppendSink(str(tmp_path / "store"), ("b",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q = run_q39_decontam_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1589,7 +1754,7 @@ def test_q39_restart_replays_byte_stably(spark, tmp_path):
     crc = os.path.join(ckpt, "commits", f".{last}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2 = run_q39_decontam_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1608,7 +1773,7 @@ def test_q40_restart_replays_byte_stably(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q40_mixture_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1626,7 +1791,7 @@ def test_q40_restart_replays_byte_stably(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     sink = ParquetAppendSink(str(tmp_path / "store"), ("b",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q = run_q40_mixture_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1641,7 +1806,7 @@ def test_q40_restart_replays_byte_stably(spark, tmp_path):
     crc = os.path.join(ckpt, "commits", f".{last}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2 = run_q40_mixture_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1658,14 +1823,14 @@ def test_q35_incremental_graph_equals_batch_build(spark):
     what makes the incremental graph converge to the batch graph."""
     from table_demo_spark.operators import similarity
     from table_demo_spark.queries.llmops import s18_graph_edges
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import (
         q35_final_edges,
         run_q35_graph_ingest,
     )
 
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         sink, q = run_q35_graph_ingest(spark, SF_SMOKE)
         _drain(q, sink.count, quiet_polls=1)
     got = {
@@ -1691,7 +1856,7 @@ def test_q41_pipeline_restart_replays_byte_stably(spark, tmp_path):
     replay pin."""
     import os
 
-    from table_demo_spark.queries.streaming import _drain, _state_partitions
+    from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q41_pipeline_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
 
@@ -1712,7 +1877,7 @@ def test_q41_pipeline_restart_replays_byte_stably(spark, tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     sink = ParquetAppendSink(str(tmp_path / "store"), ("b",))
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q, _ = run_q41_pipeline_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1727,7 +1892,7 @@ def test_q41_pipeline_restart_replays_byte_stably(spark, tmp_path):
     crc = os.path.join(ckpt, "commits", f".{last}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         _, q2, _ = run_q41_pipeline_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
@@ -1748,12 +1913,12 @@ def test_q42_statestore_batch_versions_time_travel(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from table_demo_spark.queries.streaming import _state_partitions
+    from table_demo_spark.queries.streaming import _no_data_batches_off
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import run_q42_state_rollup
 
     ckpt = str(tmp_path / "ckpt")
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         query, _ = run_q42_state_rollup(
             spark, SF_SMOKE, checkpoint=ckpt, files_per_trigger=1
         )
@@ -1823,7 +1988,7 @@ def test_q44_watermark_eviction_audit_semantics(spark, tmp_path):
     import os
 
     from table_demo_spark.queries.streaming import (
-        _state_partitions,
+        _no_data_batches_off,
         q44_watermark_eviction_final,
     )
     from table_demo_spark.sources.batch import load_table
@@ -1833,7 +1998,7 @@ def test_q44_watermark_eviction_audit_semantics(spark, tmp_path):
     )
 
     ckpt = str(tmp_path / "ckpt")
-    with _state_partitions(spark, no_data=False):
+    with _no_data_batches_off(spark):
         query, _ = run_q44_watermark_rollup(
             spark, SF_SMOKE, checkpoint=ckpt
         )
