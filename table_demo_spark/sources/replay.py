@@ -244,45 +244,51 @@ class _RangePartition(InputPartition):
     slices: tuple  # tuple[_Slice, ...]
 
 
-# Replay-frontier persistence, keyed by (prepared dir, frontier key). A
-# reader restarted from a checkpoint must RESUME the replay frontier
-# where its predecessor left off: a fresh wall clock would re-traverse
-# [t0, K) and report latestOffset below the committed offset K for a
-# while, during which the engine sees "no new data" —
-# processAllAvailable() returns early and the stream tail is silently
-# never processed. The reader lives in a dedicated Python worker process
-# (python_streaming_source_runner) that dies with the query, so the
-# frontier must survive OUTSIDE that process: a small file on the driver
-# host (where the stream-reader worker always runs). Fresh queries reset
-# it — the engine calls initialOffset() only when there is no checkpoint,
-# which is exactly the fresh/restart discriminator.
+# Replay-frontier persistence. A reader restarted from a checkpoint
+# must RESUME the replay frontier where its predecessor left off: a
+# fresh wall clock would re-traverse [t0, K) and report latestOffset
+# below the committed offset K for a while, during which the engine
+# sees "no new data" — processAllAvailable() returns early and the
+# stream tail is silently never processed. The reader lives in a
+# dedicated Python worker process (python_streaming_source_runner) that
+# dies with the query, so the frontier must survive OUTSIDE that
+# process: a small file in the query's checkpoint directory, passed as
+# the ``frontierkey`` option, one per prepared dataset. A fresh
+# checkpoint holds no frontier, so a fresh query paces from row 0 even
+# though the engine calls latestOffset() before initialOffset(). A
+# reader without a frontier key persists nothing and always starts at
+# row 0.
 
 
-def _frontier_path(key: tuple) -> str:
+def _frontier_path(frontier_key: str, path: str) -> str | None:
     import hashlib
     import os
-    import tempfile
 
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    return os.path.join(
-        tempfile.gettempdir(), f"replay-frontier-{os.getuid()}-{digest}"
-    )
+    if not frontier_key:
+        return None
+    digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:16]
+    return os.path.join(frontier_key, f"replay-frontier-{digest}")
 
 
-def _frontier_read(key: tuple) -> int:
+def _frontier_read(path: str | None) -> int:
+    if path is None:
+        return 0
     try:
-        with open(_frontier_path(key)) as f:
+        with open(path) as f:
             return int(f.read().strip() or 0)
     except (OSError, ValueError):
         return 0
 
 
-def _frontier_write(key: tuple, idx: int) -> None:
+def _frontier_write(path: str | None, idx: int) -> None:
     import os
     import tempfile
 
-    path = _frontier_path(key)
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
+    if path is None:
+        return
+    fd, tmp = tempfile.mkstemp(
+        prefix=".frontier-", dir=os.path.dirname(path)
+    )
     try:
         with os.fdopen(fd, "w") as f:
             f.write(str(idx))
@@ -321,12 +327,11 @@ class ReplayStreamReader(DataSourceStreamReader):
             )
         self._speed = float(options.get("speed", 600.0))
         self._n_parts = int(options.get("numpartitions", 8))
-        # Per-query discriminator for the persisted frontier (callers
-        # pass their checkpoint dir): without it, two concurrent queries
-        # over one prepared dataset would share — and corrupt — one
-        # frontier file (a fresh query's initialOffset() reset would
-        # rewind a running query's pacing clock).
-        self._frontier_key = options.get("frontierkey", "")
+        # The query's checkpoint directory, where the frontier persists
+        # (see _frontier_path); each query has its own.
+        self._frontier = _frontier_path(
+            options.get("frontierkey", ""), self._path
+        )
 
         files = _parquet_files(self._path)
         counts: list[int] = []
@@ -361,9 +366,8 @@ class ReplayStreamReader(DataSourceStreamReader):
         self._emit_cache: dict[int, "np.ndarray"] = {}
 
         self._wall_start = time.time()
-        self._clock_key = (os.path.abspath(self._path), self._frontier_key)
         # assume restart-resume until initialOffset() proves fresh start
-        self._base_idx = min(_frontier_read(self._clock_key), self._n)
+        self._base_idx = min(_frontier_read(self._frontier), self._n)
         self._seen_hi = 0  # highest offset the engine has shown us (WAL)
 
     def __getstate__(self):
@@ -407,13 +411,13 @@ class ReplayStreamReader(DataSourceStreamReader):
         return due
 
     def _advance_frontier(self, idx: int) -> None:
-        if idx > _frontier_read(self._clock_key):
-            _frontier_write(self._clock_key, idx)
+        if idx > _frontier_read(self._frontier):
+            _frontier_write(self._frontier, idx)
 
     def initialOffset(self) -> dict:
         # fresh query (no checkpoint): replay — and pace — from the start
         self._base_idx = 0
-        _frontier_write(self._clock_key, 0)
+        _frontier_write(self._frontier, 0)
         return {"idx": 0}
 
     def latestOffset(self) -> dict:

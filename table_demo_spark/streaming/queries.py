@@ -52,8 +52,9 @@ from table_demo_spark.sources.replay import (
 from table_demo_spark.scratch import scratch_dir
 from table_demo_spark.streaming import start_stream
 from table_demo_spark.streaming.upsert import (
+    GenerationSink,
     MemoryUpsertSink,
-    committed_generation,
+    footer_rows,
     foreach_batch_upsert,
 )
 
@@ -62,9 +63,9 @@ WATERMARK = "61 seconds"
 
 def _checkpoint_dir() -> str:
     """Fresh checkpoint dir, used BOTH as writeStream checkpointLocation
-    and as the replay source's frontier discriminator — concurrent
-    queries with identical replay options must not share a pacing
-    frontier (see sources/replay.py)."""
+    and as the replay source's ``frontierkey``: the source keeps its
+    pacing frontier there, so a restart resumes it and no other query
+    shares it (see sources/replay.py)."""
 
     return scratch_dir("tds-ckpt-")
 
@@ -751,106 +752,30 @@ def _q3_level1_fn(threshold: int, ttl_ms: int | None):
     return fn
 
 
-class ParquetHistogramSink:
+class ParquetHistogramSink(GenerationSink):
     """Durable level-2 aggregate: a parquet table of (dept_cnt,
     cnt_freq) maintained by a distributed sum-merge of changelog deltas
-    per micro-batch — generation-flip writes like ParquetUpsertSink so
-    readers never see a half-written table. The merge is a groupBy over
-    (current histogram ∪ batch deltas): O(|histogram| + |deltas|)
-    distributed work, zero driver-side rows."""
+    per micro-batch. The merge is a groupBy over (current histogram ∪
+    batch deltas): O(|histogram| + |deltas|) distributed work, zero
+    driver-side rows. Delta folding is NOT idempotent, and foreachBatch
+    may re-deliver the last batch after a restart, so a batch id at or
+    below the store's committed one is skipped."""
 
-    _BATCH = "_BATCH.json"
-
-    def __init__(self, path: str):
-        import json
-        import os
-
-        self.path = path
-        # Replay guard: delta application is NOT idempotent (unlike a
-        # key-overwrite upsert), and foreachBatch may re-deliver the
-        # last uncommitted batch after a restart — each generation
-        # records the batch id it applied, and a replayed id is a
-        # no-op. Recovered from disk so the guard survives the process;
-        # a generation without its record is an unfinished write.
-        self._gen = committed_generation(path, self._BATCH)
-        self._last_batch = -1
-        if self._gen > 0:
-            with open(os.path.join(self.current_dir, self._BATCH)) as f:
-                self._last_batch = json.load(f)["batch_id"]
-        self._spark = None
-
-    def _gen_dir(self, gen: int) -> str:
-        return f"{self.path}/gen={gen}"
-
-    @property
-    def current_dir(self) -> str | None:
-        return self._gen_dir(self._gen) if self._gen > 0 else None
+    empty_schema = "dept_cnt long, cnt_freq long"
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import json
-        import os
-        import shutil
-
-        self._spark = batch_df.sparkSession
-        if batch_id <= self._last_batch:
-            return  # replayed batch: deltas already folded in
-        if batch_df.isEmpty():
-            self._last_batch = batch_id
+        if batch_id <= self.store.last_batch or batch_df.isEmpty():
             return
         deltas = batch_df.groupBy("dept_cnt").agg(
             F.sum("delta").alias("cnt_freq")
         )
-        if self.current_dir is not None:
-            cur = self._spark.read.parquet(self.current_dir)
-            merged = cur.unionByName(deltas)
-        else:
-            merged = deltas
         hist = (
-            merged.groupBy("dept_cnt")
+            self.store.union(deltas)
+            .groupBy("dept_cnt")
             .agg(F.sum("cnt_freq").alias("cnt_freq"))
             .filter(F.col("cnt_freq") > 0)
         )
-        nxt = self._gen_dir(self._gen + 1)
-        hist.write.mode("overwrite").parquet(nxt)
-        with open(os.path.join(nxt, self._BATCH), "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        old = self.current_dir
-        self._gen += 1
-        self._last_batch = batch_id
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    def snapshot_df(self, spark: SparkSession) -> DataFrame:
-        if self.current_dir is None:
-            # no deltas ever crossed the threshold (legitimate at small
-            # scale) — the histogram is empty, not an error
-            return spark.createDataFrame([], "dept_cnt long, cnt_freq long")
-        return spark.read.parquet(self.current_dir)
-
-    def count(self, spark: SparkSession = None) -> int:
-        """Footer-metadata row count (no Spark job) — drain-poll probe."""
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        for _ in range(8):  # generation may flip mid-read; retry
-            d = self.current_dir
-            if d is None:
-                return 0
-            try:
-                return sum(
-                    pq.ParquetFile(f).metadata.num_rows
-                    for f in glob.glob(os.path.join(d, "*.parquet"))
-                )
-            except FileNotFoundError:
-                continue
-        return 0
-
-    def snapshot(self) -> list[dict]:
-        if self.current_dir is None:
-            return []
-        return [r.asDict() for r in self.snapshot_df(self._spark).collect()]
+        self.store.commit(hist, batch_id)
 
 
 def run_q3_stream(
@@ -1347,71 +1272,25 @@ def run_q15_running_totals(
 # sketch equals the batch sketch exactly — a full hash-check oracle on
 # an *approximate* operator.
 # ---------------------------------------------------------------------------
-class ParquetSketchSink:
+class ParquetSketchSink(GenerationSink):
     """Durable HLL register store: (group..., bucket, m_j) maintained
-    by distributed max-merge per micro-batch, generation-flip writes so
-    readers never see a half-written table."""
+    by distributed max-merge per micro-batch."""
 
     def __init__(self, path: str, group_cols: tuple[str, ...]):
-        self.path = path
+        super().__init__(path)
         self.group_cols = list(group_cols)
-        self._gen = committed_generation(path)
-        self._spark = None
-
-    def _gen_dir(self, gen: int) -> str:
-        return f"{self.path}/gen={gen}"
-
-    @property
-    def current_dir(self) -> str | None:
-        return self._gen_dir(self._gen) if self._gen > 0 else None
+        cols = ", ".join(f"{c} string" for c in self.group_cols)
+        self.empty_schema = f"{cols}, bucket int, m_j int"
 
     def apply_batch(self, batch_regs: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        self._spark = batch_regs.sparkSession
         if batch_regs.isEmpty():
             return
-        if self.current_dir is not None:
-            cur = self._spark.read.parquet(self.current_dir)
-            merged = cur.unionByName(batch_regs)
-        else:
-            merged = batch_regs
-        regs = merged.groupBy(*self.group_cols, "bucket").agg(
-            F.max("m_j").alias("m_j")
+        regs = (
+            self.store.union(batch_regs)
+            .groupBy(*self.group_cols, "bucket")
+            .agg(F.max("m_j").alias("m_j"))
         )
-        nxt = self._gen_dir(self._gen + 1)
-        regs.write.mode("overwrite").parquet(nxt)
-        old = self.current_dir
-        self._gen += 1
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    def count(self, spark: SparkSession = None) -> int:
-        """Footer-metadata register count (no Spark job)."""
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        for _ in range(8):  # generation may flip mid-read; retry
-            d = self.current_dir
-            if d is None:
-                return 0
-            try:
-                return sum(
-                    pq.ParquetFile(f).metadata.num_rows
-                    for f in glob.glob(os.path.join(d, "*.parquet"))
-                )
-            except FileNotFoundError:
-                continue
-        return 0
-
-    def snapshot_df(self, spark: SparkSession) -> DataFrame:
-        if self.current_dir is None:
-            # an empty stream has an empty sketch, not an error
-            cols = ", ".join(f"{c} string" for c in self.group_cols)
-            return spark.createDataFrame([], f"{cols}, bucket int, m_j int")
-        return spark.read.parquet(self.current_dir)
+        self.store.commit(regs, batch_id)
 
 
 def run_q16_hll_sketch(
@@ -1479,14 +1358,7 @@ class ParquetBatchArchive:
         )
 
     def count(self, spark: SparkSession = None) -> int:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(f"{self.path}/batch=*/*.parquet")
-        )
+        return footer_rows(f"{self.path}/batch=*/*.parquet")
 
     def snapshot_df(self, spark: SparkSession) -> DataFrame:
         return spark.read.option("basePath", self.path).parquet(
@@ -1721,114 +1593,29 @@ def q20_semi_join_stream(
     return sink, _start_append(converted, sink, ckpt)
 
 
-class ParquetCountSink:
+class ParquetCountSink(GenerationSink):
     """Durable additive count store: (group..., n) maintained by
     distributed sum-merge per micro-batch — the counting twin of
     ParquetSketchSink's max-merge (sum is associative/commutative, so
-    partial counts from any micro-batch slicing merge exactly;
-    generation-flip writes keep readers consistent). NOT idempotent
-    under batch replay by algebra (sum double-counts), so the applied
-    high-water batch id is PERSISTED inside each generation directory
-    (_applied.json, written before the pointer flips): after a process
-    restart the rebuilt sink re-reads it and foreachBatch's replay of
-    the last uncommitted batch is skipped — the restart-safety rule the
-    upsert sinks get for free from merge idempotency."""
-
-    _APPLIED = "_applied.json"
+    partial counts from any micro-batch slicing merge exactly). NOT
+    idempotent under batch replay (sum double-counts), so a batch id at
+    or below the store's committed one is skipped."""
 
     def __init__(self, path: str, group_cols: tuple[str, ...]):
-        import json
-        import os
-
-        self.path = path
+        super().__init__(path)
         self.group_cols = list(group_cols)
-        # A generation dir without _applied.json is an UNCOMMITTED
-        # write: apply_batch writes gen=N+1's parquet first and the
-        # marker second, so a crash between the two leaves a marker-less
-        # max generation while gen=N (only rmtree'd after the marker
-        # write) still exists. Resetting _max_applied to -1 there would
-        # double-count the checkpoint's replay of the already-summed
-        # batch — instead the torn write is discarded and the newest
-        # committed generation adopted.
-        self._gen = committed_generation(path, self._APPLIED)
-        self._max_applied = -1
-        if self._gen > 0:
-            with open(os.path.join(self.current_dir, self._APPLIED)) as f:
-                self._max_applied = json.load(f)["max_batch_id"]
-
-    def _gen_dir(self, gen: int) -> str:
-        return f"{self.path}/gen={gen}"
-
-    @property
-    def current_dir(self) -> str | None:
-        return self._gen_dir(self._gen) if self._gen > 0 else None
+        cols = ", ".join(f"{c} string" for c in self.group_cols)
+        self.empty_schema = f"{cols}, n long"
 
     def apply_batch(self, batch_counts: DataFrame, batch_id: int) -> None:
-        import json
-        import os
-        import shutil
-
-        if batch_id <= self._max_applied:  # replayed batch: already summed
+        if batch_id <= self.store.last_batch or batch_counts.isEmpty():
             return
-        spark = batch_counts.sparkSession
-        if batch_counts.isEmpty():
-            self._max_applied = batch_id
-            if self.current_dir is not None:
-                with open(
-                    os.path.join(self.current_dir, self._APPLIED), "w"
-                ) as f:
-                    json.dump({"max_batch_id": batch_id}, f)
-            return
-        if self.current_dir is not None:
-            cur = spark.read.parquet(self.current_dir)
-            merged = cur.unionByName(batch_counts)
-        else:
-            merged = batch_counts
-        counts = merged.groupBy(*self.group_cols).agg(
-            F.sum("n").cast("long").alias("n")
+        counts = (
+            self.store.union(batch_counts)
+            .groupBy(*self.group_cols)
+            .agg(F.sum("n").cast("long").alias("n"))
         )
-        nxt = self._gen_dir(self._gen + 1)
-        counts.write.mode("overwrite").parquet(nxt)
-        with open(os.path.join(nxt, self._APPLIED), "w") as f:
-            json.dump({"max_batch_id": batch_id}, f)
-        old = self.current_dir
-        self._gen += 1
-        self._max_applied = batch_id
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    def count(self, spark: SparkSession = None) -> int:
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        for _ in range(8):
-            d = self.current_dir
-            if d is None:
-                return 0
-            try:
-                files = glob.glob(os.path.join(d, "*.parquet"))
-                total = sum(
-                    pq.ParquetFile(f).metadata.num_rows for f in files
-                )
-            except FileNotFoundError:
-                continue
-            # A generation flip can rmtree d between current_dir and the
-            # glob: the glob then returns [] without raising and a bare
-            # return would report a transient 0 to progress callbacks.
-            # Re-check the pointer (and, for torn reads, the dir) and
-            # retry if the generation moved under us.
-            if self.current_dir != d or (not files and not os.path.isdir(d)):
-                continue
-            return total
-        return 0
-
-    def snapshot_df(self, spark: SparkSession) -> DataFrame:
-        if self.current_dir is None:
-            cols = ", ".join(f"{c} string" for c in self.group_cols)
-            return spark.createDataFrame([], f"{cols}, n long")
-        return spark.read.parquet(self.current_dir)
+        self.store.commit(counts, batch_id)
 
 
 def run_q21_dead_letter(

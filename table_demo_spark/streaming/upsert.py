@@ -14,47 +14,165 @@ keyed dict the tests and demos can assert on. ``foreach_batch_upsert``
 adapts any keyed store to ``writeStream.foreachBatch``. A real target
 (Delta MERGE, JDBC upsert, ES bulk) plugs in by implementing
 ``upsert(rows)`` / ``delete(keys)``.
+
+The durable keyed tables — ``ParquetUpsertSink`` and
+``VersionedCdcSink`` here, the histogram, sketch and count sinks in
+``streaming/queries.py`` — share one on-disk protocol,
+``GenerationStore``: each micro-batch's merged table is written in full
+as the next generation, marked committed with the batch id, and only
+then replaces the previous one. Readers never see a half-written table,
+and a restart resumes from the last committed generation. Each sink
+adds only its merge expression.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
-import re
 import shutil
 import threading
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 from table_demo_spark.streaming import start_stream
 
 
-def committed_generation(path: str, marker: str = "_SUCCESS") -> int:
-    """Resume point of a generation-flip sink rooted at ``path``: the
-    highest ``gen=N`` directory holding ``marker`` (by default the
-    ``_SUCCESS`` file Spark's job commit leaves), or 0 if none does.
+def footer_rows(pattern: str) -> int:
+    """Row total of the parquet files matching the glob ``pattern``
+    (``**`` recurses), read from their footers: no Spark job, so a
+    drain can poll it every few hundred ms. A file removed between the
+    glob and its read counts 0."""
+    import pyarrow.parquet as pq
 
-    Each sink writes generation N+1 in full, marks it, and only then
-    removes generation N. A process that dies in between leaves a newer
-    generation without the marker — empty, or holding part files —
-    beside the intact one. Adopting it would make the next batch merge
-    with a partial table and drop every key it lacks, so every unmarked
-    generation above the committed one is discarded."""
-    os.makedirs(path, exist_ok=True)
-    gens = sorted(
-        (
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"gen=(\d+)", d))
-        ),
-        reverse=True,
-    )
-    for g in gens:
-        d = os.path.join(path, f"gen={g}")
-        if os.path.exists(os.path.join(d, marker)):
-            return g
-        shutil.rmtree(d, ignore_errors=True)
-    return 0
+    total = 0
+    for f in glob.glob(pattern, recursive=True):
+        try:
+            total += pq.ParquetFile(f).metadata.num_rows
+        except OSError:
+            continue
+    return total
+
+
+class GenerationStore:
+    """The generation-flip table rooted at ``path``.
+
+    ``commit`` writes generation N+1 in full as ``gen=N+1``, renames a
+    marker holding the batch id into it, moves the pointer, and only
+    then removes generation N. A process that dies before the rename
+    leaves an unmarked generation beside the intact one — empty, or
+    holding part files. Adopting it would merge the next batch with a
+    partial table and drop every key it lacks, so a new store adopts
+    the newest marked generation and removes all others. The marker's
+    leading ``_`` keeps parquet readers off it."""
+
+    _PREFIX = "gen="
+    _MARKER = "_COMMIT.json"
+
+    def __init__(self, path: str):
+        self.path = path
+        self._gen = 0
+        self.last_batch = -1  # batch id of the current generation
+        os.makedirs(path, exist_ok=True)
+        gens = sorted(
+            (
+                int(n)
+                for d in os.listdir(path)
+                if (n := d.removeprefix(self._PREFIX)) != d and n.isdigit()
+            ),
+            reverse=True,
+        )
+        for g in gens:
+            marker = os.path.join(self._dir(g), self._MARKER)
+            if self._gen == 0 and os.path.exists(marker):
+                with open(marker) as f:
+                    self._gen, self.last_batch = g, json.load(f)["batch_id"]
+            else:
+                shutil.rmtree(self._dir(g), ignore_errors=True)
+
+    def _dir(self, gen: int) -> str:
+        return f"{self.path}/{self._PREFIX}{gen}"
+
+    @property
+    def current_dir(self) -> str | None:
+        return self._dir(self._gen) if self._gen > 0 else None
+
+    def commit(self, df: DataFrame, batch_id: int) -> None:
+        nxt = self._dir(self._gen + 1)
+        df.write.mode("overwrite").parquet(nxt)
+        tmp = os.path.join(nxt, f"{self._MARKER}.tmp")
+        with open(tmp, "w") as f:
+            json.dump({"batch_id": batch_id}, f)
+        os.replace(tmp, os.path.join(nxt, self._MARKER))
+        old = self.current_dir
+        self._gen, self.last_batch = self._gen + 1, batch_id
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+
+    def read(self, spark, empty_schema: str | None = None) -> DataFrame:
+        """The current table; before the first commit an empty frame of
+        ``empty_schema``, which sinks without a fixed schema omit."""
+        if self.current_dir is None:
+            assert empty_schema is not None, "no batch written yet"
+            return spark.createDataFrame([], empty_schema)
+        return spark.read.parquet(self.current_dir)
+
+    def union(self, df: DataFrame) -> DataFrame:
+        """The current table (if any) unioned by name with ``df``."""
+        if self.current_dir is None:
+            return df
+        return self.read(df.sparkSession).unionByName(df)
+
+    def count(self) -> int:
+        """Footer row count of the current table. A commit can move the
+        pointer and remove the old directory between the pointer read
+        and the glob, which reads short or empty without raising — so a
+        count stands only if the pointer held still meanwhile."""
+        for _ in range(8):
+            d = self.current_dir
+            n = footer_rows(f"{d}/*.parquet") if d else 0
+            if d == self.current_dir:
+                return n
+        return 0
+
+
+class GenerationSink:
+    """A durable keyed table in a ``GenerationStore``: subclasses merge
+    each batch with the stored table and ``store.commit`` the result.
+    Sinks whose merge is idempotent take every batch as it comes; the
+    others skip a batch id at or below ``store.last_batch`` — the
+    replay of the last batch after a restart."""
+
+    empty_schema: str | None = None  # snapshot_df before the first commit
+
+    def __init__(self, path: str):
+        self.path = path
+        self.store = GenerationStore(path)
+
+    @property
+    def current_dir(self) -> str | None:
+        return self.store.current_dir
+
+    def count(self, spark=None) -> int:
+        """Footer row count (no Spark job) — the drain-poll probe."""
+        return self.store.count()
+
+    def snapshot_df(self, spark) -> DataFrame:
+        return self.store.read(spark, self.empty_schema)
+
+    def snapshot(self) -> list[dict]:
+        """MemoryUpsertSink-compatible convenience for tests/demos:
+        the current table as row dicts via the active session. The
+        distributed read path is ``snapshot_df`` — this collect is
+        bounded by the sink's key domain, never the stream volume."""
+        from pyspark.sql import SparkSession
+
+        if self.current_dir is None:
+            return []
+        spark = SparkSession.getActiveSession()
+        return [r.asDict() for r in self.snapshot_df(spark).collect()]
 
 
 class MemoryUpsertSink:
@@ -86,61 +204,24 @@ class MemoryUpsertSink:
         return foreach_batch_upsert(self)
 
 
-class ParquetUpsertSink:
-    """Durable key-based upsert target: a parquet directory maintained
-    by MERGE-style read-modify-write per micro-batch — the
+class ParquetUpsertSink(GenerationSink):
+    """Durable key-based upsert target: a parquet table maintained by
+    MERGE-style read-modify-write per micro-batch — the
     production-shaped analog of the Elasticsearch upsert sink (swap for
     Delta ``MERGE INTO`` / ES bulk on a real deployment; the
     foreachBatch contract is identical).
 
-    Each batch is unioned with the current table and deduplicated by
-    key keeping the newest generation (later batch wins — the upsert
-    rule of ElasticUpsertTableSink.scala:127-138). Writes go to a new
-    generation directory, then the pointer flips — readers never see a
-    half-written table, and the overwritten-while-read hazard of
-    in-place parquet overwrite never arises."""
+    Each batch is unioned with the stored table and deduplicated by key
+    keeping the batch's row (later batch wins — the upsert rule of
+    ElasticUpsertTableSink.scala:127-138). Key overwrite is idempotent,
+    so a replayed batch needs no guard."""
 
     def __init__(self, path: str, key_cols: tuple[str, ...]):
-        self.path = path
+        super().__init__(path)
         self.key_cols = key_cols
-        # Resume the merge chain after a process restart (otherwise the
-        # first replayed batch would merge with nothing and silently
-        # drop every previously upserted key).
-        self._gen = committed_generation(path)
-
-    def _gen_dir(self, gen: int) -> str:
-        return f"{self.path}/gen={gen}"
-
-    @property
-    def current_dir(self) -> str | None:
-        return self._gen_dir(self._gen) if self._gen > 0 else None
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        new = batch_df.withColumn("__gen", F.lit(self._gen + 1))
-        if self.current_dir is not None:
-            # stored rows predate every incoming generation
-            cur = spark.read.parquet(self.current_dir).withColumn(
-                "__gen", F.lit(0)
-            )
-            merged = cur.unionByName(new)
-        else:
-            merged = new
-        w = Window.partitionBy(*self.key_cols).orderBy(F.col("__gen").desc())
-        latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__gen")
-        )
-        nxt = self._gen_dir(self._gen + 1)
-        latest.write.mode("overwrite").parquet(nxt)
-        old = self.current_dir
-        self._gen += 1
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
+        self._merge(batch_df, batch_id)
 
     def apply_changelog(
         self, batch_df: DataFrame, batch_id: int, op_col: str = "__op"
@@ -149,82 +230,28 @@ class ParquetUpsertSink:
         reference sink's RequestIndexer branch
         (ElasticUpsertTableSink.scala:140-147): rows with ``op_col`` =
         'D' remove their key from the table, every other row upserts.
-        Deletes of absent keys are no-ops (left-anti join). Same
-        generation-flip write discipline as ``apply_batch``."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
+        Deletes of absent keys are no-ops (left-anti join)."""
         dels = batch_df.filter(F.col(op_col) == "D").select(*self.key_cols)
-        ups = batch_df.filter(F.col(op_col) != "D").drop(op_col).withColumn(
-            "__gen", F.lit(1)
-        )
+        ups = batch_df.filter(F.col(op_col) != "D").drop(op_col)
+        self._merge(ups, batch_id, dels)
+
+    def _merge(
+        self, ups: DataFrame, batch_id: int, dels: DataFrame | None = None
+    ) -> None:
+        merged = ups.withColumn("__gen", F.lit(1))
         if self.current_dir is not None:
-            cur = (
-                spark.read.parquet(self.current_dir)
-                .join(dels, on=list(self.key_cols), how="left_anti")
-                .withColumn("__gen", F.lit(0))
-            )
-            merged = cur.unionByName(ups)
-        else:
-            merged = ups
+            cur = self.store.read(ups.sparkSession)
+            if dels is not None:
+                cur = cur.join(dels, on=list(self.key_cols), how="left_anti")
+            # stored rows predate every incoming row
+            merged = cur.withColumn("__gen", F.lit(0)).unionByName(merged)
         w = Window.partitionBy(*self.key_cols).orderBy(F.col("__gen").desc())
         latest = (
             merged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__gen")
         )
-        nxt = self._gen_dir(self._gen + 1)
-        latest.write.mode("overwrite").parquet(nxt)
-        old = self.current_dir
-        self._gen += 1
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    def snapshot_df(self, spark) -> DataFrame:
-        assert self.current_dir is not None, "no batch written yet"
-        return spark.read.parquet(self.current_dir)
-
-    def snapshot(self) -> list[dict]:
-        """MemoryUpsertSink-compatible convenience for tests/demos:
-        the current table as row dicts via the active session.  The
-        distributed read path is ``snapshot_df`` — this collect is
-        bounded by the sink's key domain, never the stream volume."""
-        from pyspark.sql import SparkSession
-
-        if self.current_dir is None:
-            return []
-        spark = SparkSession.getActiveSession()
-        return [r.asDict() for r in self.snapshot_df(spark).collect()]
-
-    def count(self, spark=None) -> int:
-        """Row count of the current table (0 before the first batch) —
-        the drain-polling probe. Reads parquet footer metadata only
-        (no Spark job): polls happen every few hundred ms during a
-        drain, and a full distributed count per poll would dominate
-        the drain time."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        for _ in range(8):  # generation may flip mid-read; retry
-            d = self.current_dir
-            if d is None:
-                return 0
-            try:
-                files = glob.glob(os.path.join(d, "*.parquet"))
-                total = sum(
-                    pq.ParquetFile(f).metadata.num_rows for f in files
-                )
-            except FileNotFoundError:
-                continue
-            # rmtree between pointer read and glob empties the glob
-            # without raising — re-check and retry instead of reporting
-            # a transient 0 to the drain's stability probe.
-            if self.current_dir != d or (not files and not os.path.isdir(d)):
-                continue
-            return total
-        return 0
+        self.store.commit(latest, batch_id)
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return self.apply_batch
@@ -263,28 +290,14 @@ class ParquetAppendSink:
         commit log; polling only needs stability, and the final read
         goes through the log). Recursive so partitioned layouts
         (partition_by) are counted too."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in glob.glob(
-            os.path.join(self.path, "**", "part-*.parquet"), recursive=True
-        ):
-            try:
-                total += pq.ParquetFile(f).metadata.num_rows
-            except (FileNotFoundError, OSError):
-                continue  # racing an in-progress write
-        return total
+        return footer_rows(os.path.join(self.path, "**", "part-*.parquet"))
 
     def snapshot_df(self, spark) -> DataFrame:
         return spark.read.parquet(self.path)
 
     def snapshot(self) -> list[dict]:
         """MemoryUpsertSink-compatible convenience for tests/demos
-        (see ParquetUpsertSink.snapshot)."""
-        import glob
-
+        (see GenerationSink.snapshot)."""
         from pyspark.sql import SparkSession
 
         if not glob.glob(
@@ -354,7 +367,7 @@ def foreach_batch_upsert(
     return fn
 
 
-class VersionedCdcSink:
+class VersionedCdcSink(GenerationSink):
     """CDC materializer: highest VERSION wins, not latest arrival.
 
     ``ParquetUpsertSink`` implements "later batch wins" — correct when
@@ -369,8 +382,7 @@ class VersionedCdcSink:
 
     Idempotent by algebra: max-version-per-key is associative,
     commutative, idempotent, so at-least-once redelivery and batch
-    replay after restart are safe with no replay guard. Same
-    generation-flip write discipline as ``ParquetUpsertSink``.
+    replay after restart are safe with no replay guard.
 
     Scale shape: per batch one shuffle on the key (window over
     key ordered by version desc); at 100 TB the store becomes a Delta/
@@ -384,74 +396,32 @@ class VersionedCdcSink:
         key_cols: tuple[str, ...],
         version_cols: tuple[str, ...],
     ):
-        self.path = path
+        super().__init__(path)
         self.key_cols = key_cols
         self.version_cols = version_cols
-        self._gen = committed_generation(path)
-
-    def _gen_dir(self, gen: int) -> str:
-        return f"{self.path}/gen={gen}"
-
-    @property
-    def current_dir(self) -> str | None:
-        return self._gen_dir(self._gen) if self._gen > 0 else None
 
     def apply_changelog(
         self, batch_df: DataFrame, batch_id: int, op_col: str = "__op"
     ) -> None:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
         new = batch_df.withColumn(
             "__deleted", F.col(op_col) == "D"
         ).drop(op_col)
-        if self.current_dir is not None:
-            merged = spark.read.parquet(self.current_dir).unionByName(new)
-        else:
-            merged = new
         w = Window.partitionBy(*self.key_cols).orderBy(
             *[F.col(v).desc() for v in self.version_cols]
         )
         latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
+            self.store.union(new)
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        nxt = self._gen_dir(self._gen + 1)
-        latest.write.mode("overwrite").parquet(nxt)
-        old = self.current_dir
-        self._gen += 1
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    def count(self, spark=None) -> int:
-        """Footer-metadata row count (tombstones included) — the
-        drain-poll stability probe, no Spark job per poll."""
-        import glob
-
-        import pyarrow.parquet as pq
-
-        for _ in range(8):
-            d = self.current_dir
-            if d is None:
-                return 0
-            try:
-                return sum(
-                    pq.ParquetFile(f).metadata.num_rows
-                    for f in glob.glob(os.path.join(d, "*.parquet"))
-                )
-            except FileNotFoundError:
-                continue
-        return 0
+        self.store.commit(latest, batch_id)
 
     def snapshot_df(self, spark) -> DataFrame:
-        """The materialized table: live rows only (tombstones hidden)."""
-        from pyspark.sql import functions as F
-
-        assert self.current_dir is not None, "no batch written yet"
+        """The materialized table: live rows only (tombstones hidden;
+        ``count`` includes them)."""
         return (
-            spark.read.parquet(self.current_dir)
+            super().snapshot_df(spark)
             .filter(~F.col("__deleted"))
             .drop("__deleted")
         )

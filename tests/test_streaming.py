@@ -17,6 +17,24 @@ def _run_until_done(query, timeout=120):
     query.stop()
 
 
+def _forge_crash(ckpt, *batches):
+    """Forge a crash after the given batches ran (default: the last
+    committed one): delete their commit markers and the local-fs
+    ``.crc`` shadows, so a restart from ``ckpt`` re-executes them.
+    Returns the batch ids."""
+    import os
+
+    commits = os.path.join(ckpt, "commits")
+    if not batches:
+        batches = (max(int(n) for n in os.listdir(commits) if n.isdigit()),)
+    for n in batches:
+        os.remove(os.path.join(commits, str(n)))
+        crc = os.path.join(commits, f".{n}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    return batches
+
+
 @pytest.fixture(scope="module")
 def batch_frames(spark):
     from table_demo_spark.queries.reference import (
@@ -468,7 +486,9 @@ def test_q1_stream_checkpoint_recovery_is_exactly_once(spark, tmp_path, batch_fr
 
     def start(speed):
         out = q1_stream(
-            stream_departures(stream_rides(spark, SF_SMOKE, speed=speed))
+            stream_departures(
+                stream_rides(spark, SF_SMOKE, speed=speed, frontier_key=ckpt)
+            )
         )
         return (
             out.writeStream.outputMode("update")
@@ -476,6 +496,9 @@ def test_q1_stream_checkpoint_recovery_is_exactly_once(spark, tmp_path, batch_fr
             .foreachBatch(sink.foreach_batch())
             .start()
         )
+
+    def rows_read(q):
+        return sum(p["numInputRows"] for p in q.recentProgress)
 
     # slow enough that the replay is STILL in flight when we kill it
     # even from a cold start: full pacing at 1e5 takes ~26s (span
@@ -490,9 +513,12 @@ def test_q1_stream_checkpoint_recovery_is_exactly_once(spark, tmp_path, batch_fr
             break
         time.sleep(0.2)
     q.stop()
+    # the kill landed mid-stream: the restart has rows left to read
+    assert rows_read(q) < 1000
 
     q2 = start(SPEED)
     _run_until_done(q2)
+    assert rows_read(q2) > 0
 
     got = (
         sink.snapshot_df(spark)
@@ -562,8 +588,6 @@ def test_q1_restart_keeps_the_checkpoint_partition_count(
     offset log. Crash forgery as in the q33 restart test: drain, delete
     the last commit marker, restart with a rebuilt sink — the replayed
     batch must run at the recorded count and end at the batch answer."""
-    import os
-
     from table_demo_spark.queries.streaming import _no_data_batches_off
     from table_demo_spark.streaming import STATE_PARTITIONS, start_stream
     from table_demo_spark.streaming.queries import (
@@ -599,10 +623,7 @@ def test_q1_restart_keeps_the_checkpoint_partition_count(
             spark.conf.set(key, saved)
         _run_until_done(q)
         assert _state_partition_counts(q) == {written}
-        last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
-        for f in (str(last), f".{last}.crc"):
-            if os.path.exists(f"{ckpt}/commits/{f}"):
-                os.remove(f"{ckpt}/commits/{f}")
+        (last,) = _forge_crash(ckpt)
 
         q2 = start_stream(writer())
         _run_until_done(q2)
@@ -621,7 +642,9 @@ def test_q1_restart_keeps_the_checkpoint_partition_count(
     pd.testing.assert_frame_equal(got.astype("int64"), want.astype("int64"))
 
 
-def test_replay_reader_restart_resumes_frontier_without_regression(spark):
+def test_replay_reader_restart_resumes_frontier_without_regression(
+    spark, tmp_path
+):
     """Root cause of a flaky recovery failure: a reader restarted from a
     checkpoint starts a fresh pacing clock, so latestOffset() sat below
     the committed offset until the clock re-traversed [t0, K) — the
@@ -629,8 +652,6 @@ def test_replay_reader_restart_resumes_frontier_without_regression(spark):
     silently dropping the stream tail. A restarted reader (initialOffset
     NOT called — the engine only calls it when there is no checkpoint)
     must resume at or above its predecessor's frontier immediately."""
-    import uuid
-
     from pyspark.sql.types import StructType
 
     from table_demo_spark.sources.replay import (
@@ -642,8 +663,7 @@ def test_replay_reader_restart_resumes_frontier_without_regression(spark):
     opts = {
         "path": prepared,
         "speed": "600",  # slow: frontier barely moves during the test
-        # private frontier key — no cross-test registry sharing
-        "frontierkey": f"restart-test-{uuid.uuid4()}",
+        "frontierkey": str(tmp_path),  # the query's checkpoint directory
     }
     r1 = ReplayStreamReader(StructType([]), dict(opts))
     assert r1.initialOffset() == {"idx": 0}
@@ -662,6 +682,38 @@ def test_replay_reader_restart_resumes_frontier_without_regression(spark):
     r3 = ReplayStreamReader(StructType([]), dict(opts))
     assert r3.initialOffset() == {"idx": 0}
     assert r3.latestOffset()["idx"] < 400  # paced at 600x, not jumped
+
+
+def test_fresh_replay_reader_paces_from_zero_before_initial_offset(
+    spark, tmp_path
+):
+    """The engine calls latestOffset() BEFORE initialOffset() on a fresh
+    query. A reader that took its start from a frontier another query
+    left behind — an earlier keyless replay of the same fixture, or
+    another checkpoint's run — would serve that whole range in batch 0
+    and skip pacing. A fresh reader must start from row 0."""
+    from pyspark.sql.types import StructType
+
+    from table_demo_spark.sources.replay import (
+        ReplayStreamReader,
+        ensure_emit_ordered,
+    )
+
+    prepared = ensure_emit_ordered(spark, f"{SF_SMOKE}/events.parquet")
+    opts = {"path": prepared, "speed": "600"}
+    ckpts = []
+    for name in ("a", "b"):
+        (tmp_path / name).mkdir()
+        ckpts.append({"frontierkey": str(tmp_path / name)})
+    for earlier, fresh in (({}, {}), ckpts):  # keyless, then checkpoints
+        done = ReplayStreamReader(StructType([]), {**opts, **earlier})
+        n = done._n
+        done.initialOffset()
+        done.partitions({"idx": 0}, {"idx": n})  # the earlier full replay
+        done.commit({"idx": n})
+
+        r = ReplayStreamReader(StructType([]), {**opts, **fresh})
+        assert r.latestOffset()["idx"] < n  # paced at 600x, not jumped
 
 
 def test_upsert_key_inference_matches_reference_planner(spark):
@@ -706,53 +758,88 @@ def test_parquet_upsert_sink_resumes_after_process_restart(spark, tmp_path):
     assert got == {1: "a", 2: "b2", 3: "c"}
 
 
-@pytest.mark.parametrize("torn", ["empty", "no_success"])
+@pytest.mark.parametrize("torn", ["empty", "no_success", "torn"])
 def test_generation_sinks_resume_from_last_committed_generation(
     spark, tmp_path, torn
 ):
     """A stop mid-batch can leave gen=2 unfinished beside an intact
-    gen=1: an empty directory, or part files without the ``_SUCCESS``
-    of a committed write. A rebuilt sink must resume from gen=1 and
-    discard gen=2 — adopting it would merge the next batch with a
-    partial table and drop gen=1's keys."""
+    gen=1: an empty directory, part files without Spark's ``_SUCCESS``,
+    or a complete parquet write whose commit marker never landed. A
+    rebuilt sink — any of the five — must resume from gen=1 and discard
+    gen=2: adopting it would merge the next batch with a partial table
+    and drop gen=1's keys. The sum-merge sinks must also skip the
+    checkpoint's replay of the committed batch, or it counts twice."""
     import os
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from table_demo_spark.streaming.queries import (
+        ParquetCountSink,
+        ParquetHistogramSink,
+        ParquetSketchSink,
+    )
     from table_demo_spark.streaming.upsert import (
         ParquetUpsertSink,
         VersionedCdcSink,
     )
 
-    rows = "k long, v long, __op string"
+    # each sink: (build, apply a (k, v, __op) batch, its (k, v) columns)
     cases = [
         (
             lambda p: ParquetUpsertSink(p, ("k",)),
             lambda sink, df, b: sink.apply_batch(df.drop("__op"), b),
-            lambda sink: sink.snapshot_df(spark),
+            ("k", "v"),
         ),
         (
             lambda p: VersionedCdcSink(p, ("k",), ("v",)),
             lambda sink, df, b: sink.apply_changelog(df, b),
-            lambda sink: sink.snapshot_df(spark),
+            ("k", "v"),
+        ),
+        (
+            ParquetHistogramSink,
+            lambda sink, df, b: sink.apply_batch(
+                df.selectExpr("k AS dept_cnt", "v AS delta"), b
+            ),
+            ("dept_cnt", "cnt_freq"),
+        ),
+        (
+            lambda p: ParquetSketchSink(p, ("k",)),
+            lambda sink, df, b: sink.apply_batch(
+                df.selectExpr("k", "0 AS bucket", "CAST(v AS INT) AS m_j"), b
+            ),
+            ("k", "m_j"),
+        ),
+        (
+            lambda p: ParquetCountSink(p, ("k",)),
+            lambda sink, df, b: sink.apply_batch(df.selectExpr("k", "v AS n"), b),
+            ("k", "n"),
         ),
     ]
-    for i, (make, apply, read) in enumerate(cases):
+    rows = "k long, v long, __op string"
+    b0 = spark.createDataFrame([(1, 10, "U"), (2, 20, "U")], rows)
+    for i, (make, apply, (k, v)) in enumerate(cases):
         path = str(tmp_path / f"sink{i}")
         sink = make(path)
-        apply(sink, spark.createDataFrame([(1, 10, "U"), (2, 20, "U")], rows), 0)
+        apply(sink, b0, 0)
         assert sink.current_dir == f"{path}/gen=1"
         gen2 = f"{path}/gen=2"
-        if torn == "empty":
-            os.makedirs(gen2)
-        else:
-            spark.createDataFrame([(9, 90)], "k long, v long").write.parquet(gen2)
-            os.remove(f"{gen2}/_SUCCESS")
+        os.makedirs(gen2)
+        if torn != "empty":
+            pq.write_table(pa.table({"k": [9], "v": [90]}), f"{gen2}/part-0.parquet")
+        if torn == "torn":
+            open(f"{gen2}/_SUCCESS", "w").close()
 
         reborn = make(path)
-        assert reborn.current_dir == f"{path}/gen=1"
-        assert not os.path.exists(gen2)
+        name = type(reborn).__name__
+        assert reborn.current_dir == f"{path}/gen=1", name
+        assert not os.path.exists(gen2), name
+        if isinstance(reborn, (ParquetHistogramSink, ParquetCountSink)):
+            apply(reborn, b0, 0)  # the checkpoint's replay: a no-op
+            assert reborn.current_dir == f"{path}/gen=1", name
         apply(reborn, spark.createDataFrame([(3, 30, "U")], rows), 1)
-        got = {(r.k, r.v) for r in read(reborn).collect()}
-        assert got == {(1, 10), (2, 20), (3, 30)}, type(reborn).__name__
+        got = {(r[k], r[v]) for r in reborn.snapshot_df(spark).collect()}
+        assert got == {(1, 10), (2, 20), (3, 30)}, name
 
 
 def test_upsert_key_inference_ignores_window_lookalike_columns(spark):
@@ -891,38 +978,6 @@ def test_parquet_count_sink_is_replay_idempotent(spark):
     )
     got = {(r.k, r.n) for r in reborn.snapshot_df(spark).collect()}
     assert got == {("a", 7), ("b", 4)}
-
-
-def test_parquet_count_sink_discards_torn_generation(spark):
-    """Crash-window recovery: apply_batch writes gen=N+1's parquet
-    BEFORE its _applied.json marker, so a crash between the two leaves
-    a marker-less max generation alongside the still-intact gen=N. A
-    rebuilt sink must treat that as an uncommitted write — discard it
-    and resume from gen=N with its high-water batch id — NOT reset
-    _max_applied to -1 (which would re-sum the checkpoint's replay of
-    the already-applied batch and double-count)."""
-    import os
-    import tempfile
-
-    from table_demo_spark.streaming.queries import ParquetCountSink
-
-    sink = ParquetCountSink(tempfile.mkdtemp(prefix="tds-cnt-torn-"), ("k",))
-    b0 = spark.createDataFrame([("a", 2)], "k string, n long")
-    sink.apply_batch(b0, 0)
-    committed = sink.current_dir
-    # Simulate the torn write: gen=2 parquet exists, marker does not.
-    torn = spark.createDataFrame([("a", 99)], "k string, n long")
-    torn.write.mode("overwrite").parquet(f"{sink.path}/gen=2")
-    assert os.path.isdir(f"{sink.path}/gen=2")
-
-    reborn = ParquetCountSink(sink.path, ("k",))
-    assert reborn.current_dir == committed
-    assert not os.path.isdir(f"{sink.path}/gen=2")  # torn gen discarded
-    reborn.apply_batch(b0, 0)  # checkpoint replay: must be a no-op
-    b1 = spark.createDataFrame([("a", 1)], "k string, n long")
-    reborn.apply_batch(b1, 1)
-    got = {(r.k, r.n) for r in reborn.snapshot_df(spark).collect()}
-    assert got == {("a", 3)}
 
 
 def test_http_sink_retry_replay_and_delete_dispatch(spark):
@@ -1402,8 +1457,6 @@ def test_q33_restart_replay_matches_uninterrupted_run(spark, tmp_path):
     gen 0). Pre-fix this duplicated b=3 across gen values / flipped its
     gen; post-fix hydration + full-subtree overwrite make the final
     store equal the uninterrupted run, row for row."""
-    import os
-
     from pyspark.sql import functions as F
 
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
@@ -1436,10 +1489,7 @@ def test_q33_restart_replay_matches_uninterrupted_run(spark, tmp_path):
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
         _drain(q, sink.count, quiet_polls=1)
-    os.remove(os.path.join(ckpt, "commits", "3"))
-    crc = os.path.join(ckpt, "commits", ".3.crc")
-    if os.path.exists(crc):  # local-fs checksum shadow of the marker
-        os.remove(crc)
+    _forge_crash(ckpt, 3)
     with _no_data_batches_off(spark):
         _, q2 = run_q33_centroid_drift(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
@@ -1495,8 +1545,6 @@ def test_q35_restart_replay_matches_uninterrupted_run(spark, tmp_path):
     restart — the replayed batch must recompute its edges against
     exactly the pre-crash PREFIX (the b <= batch_id filter) and the
     final edge store must equal the uninterrupted run's."""
-    import os
-
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q35_graph_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
@@ -1520,10 +1568,7 @@ def test_q35_restart_replay_matches_uninterrupted_run(spark, tmp_path):
     with _no_data_batches_off(spark):
         _, q = run_q35_graph_ingest(spark, SF_SMOKE, sink=sink, checkpoint=ckpt)
         _drain(q, sink.count, quiet_polls=1)
-    os.remove(os.path.join(ckpt, "commits", "3"))
-    crc = os.path.join(ckpt, "commits", ".3.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _forge_crash(ckpt, 3)
     with _no_data_batches_off(spark):
         _, q2 = run_q35_graph_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
@@ -1578,8 +1623,6 @@ def test_q36_restart_replays_the_reshard_batch(spark, tmp_path):
     rehydration ignores the half-committed generation created by the
     replayed batch id — and the final store must equal the
     uninterrupted run's, generation labels included."""
-    import os
-
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q36_graph_reshard
     from table_demo_spark.streaming.upsert import ParquetAppendSink
@@ -1608,11 +1651,7 @@ def test_q36_restart_replays_the_reshard_batch(spark, tmp_path):
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
         _drain(q, sink.count, quiet_polls=1)
-    for n in ("2", "3"):
-        os.remove(os.path.join(ckpt, "commits", n))
-        crc = os.path.join(ckpt, "commits", f".{n}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+    _forge_crash(ckpt, 2, 3)
     with _no_data_batches_off(spark):
         _, q2 = run_q36_graph_reshard(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
@@ -1676,8 +1715,6 @@ def test_q38_restart_replays_the_reshard_batch(spark, tmp_path):
     generation, the upper layers' incremental steps — and the final
     store must equal the uninterrupted run's, layer and generation
     labels included."""
-    import os
-
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q38_hnsw_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
@@ -1706,11 +1743,7 @@ def test_q38_restart_replays_the_reshard_batch(spark, tmp_path):
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
         )
         _drain(q, sink.count, quiet_polls=1)
-    for n in ("2", "3"):
-        os.remove(os.path.join(ckpt, "commits", n))
-        crc = os.path.join(ckpt, "commits", f".{n}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+    _forge_crash(ckpt, 2, 3)
     with _no_data_batches_off(spark):
         _, q2 = run_q38_hnsw_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
@@ -1725,8 +1758,6 @@ def test_q39_restart_replays_byte_stably(spark, tmp_path):
     overwrites its b= subtree from the offline fingerprint store, so
     a forged crash (last commit deleted) must reproduce the same
     split rows — and the full drain equals llm_p16's batch split."""
-    import os
-
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q39_decontam_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
@@ -1746,14 +1777,7 @@ def test_q39_restart_replays_byte_stably(spark, tmp_path):
         _drain(q, sink.count, quiet_polls=1)
     want = rows(sink)
     assert {s for _, s in want} == {"train", "test", "quarantined"}
-    last = max(
-        int(n) for n in os.listdir(os.path.join(ckpt, "commits"))
-        if n.isdigit()
-    )
-    os.remove(os.path.join(ckpt, "commits", str(last)))
-    crc = os.path.join(ckpt, "commits", f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _forge_crash(ckpt)
     with _no_data_batches_off(spark):
         _, q2 = run_q39_decontam_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
@@ -1769,8 +1793,6 @@ def test_q40_restart_replays_byte_stably(spark, tmp_path):
     subtree, so a forged crash (last commit deleted) reproduces the
     identical per-source aggregates — and the drained union equals
     llm_p17's batch sample (the oracle pins that externally)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
@@ -1798,14 +1820,7 @@ def test_q40_restart_replays_byte_stably(spark, tmp_path):
         _drain(q, sink.count, quiet_polls=1)
     want = rows(sink)
     assert sum(n for _, n, _ in want) > 0
-    last = max(
-        int(n) for n in os.listdir(os.path.join(ckpt, "commits"))
-        if n.isdigit()
-    )
-    os.remove(os.path.join(ckpt, "commits", str(last)))
-    crc = os.path.join(ckpt, "commits", f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _forge_crash(ckpt)
     with _no_data_batches_off(spark):
         _, q2 = run_q40_mixture_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
@@ -1854,8 +1869,6 @@ def test_q41_pipeline_restart_replays_byte_stably(spark, tmp_path):
     shadow too) must reproduce the identical sampled/tokenized/
     compressed store — the cross-OP composability version of the q40
     replay pin."""
-    import os
-
     from table_demo_spark.queries.streaming import _drain, _no_data_batches_off
     from table_demo_spark.streaming.queries import run_q41_pipeline_ingest
     from table_demo_spark.streaming.upsert import ParquetAppendSink
@@ -1884,14 +1897,7 @@ def test_q41_pipeline_restart_replays_byte_stably(spark, tmp_path):
         _drain(q, sink.count, quiet_polls=1)
     want = rows(sink)
     assert len(want) > 0
-    last = max(
-        int(n) for n in os.listdir(os.path.join(ckpt, "commits"))
-        if n.isdigit()
-    )
-    os.remove(os.path.join(ckpt, "commits", str(last)))
-    crc = os.path.join(ckpt, "commits", f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _forge_crash(ckpt)
     with _no_data_batches_off(spark):
         _, q2, _ = run_q41_pipeline_ingest(
             spark, SF_SMOKE, sink=sink, checkpoint=ckpt
