@@ -32,17 +32,15 @@ Design rules:
 - **Fallback, never failure**: any problem building or loading the
   library (no gcc, read-only tmp, unexpected toolchain) degrades to the
   pure-Python path.  The build is one gcc invocation cached per machine
-  keyed on the md5 of the C source; concurrent Spark workers may race
-  to build, which is benign (atomic os.replace, last writer wins).
+  keyed on the md5 of the C source (``native_cache.cached_build``).
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
 import subprocess
-import tempfile
+
+from table_demo_spark.native_cache import cached_build
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -859,22 +857,15 @@ _LIB = None
 _TRIED = False
 
 
+def _gcc(out: str) -> None:
+    subprocess.run(
+        ["gcc", "-O2", "-fPIC", "-shared", "-x", "c", "-o", out, "-"],
+        input=_C_SOURCE.encode(), check=True, capture_output=True, timeout=120,
+    )
+
+
 def _build_and_load():
-    src_md5 = hashlib.md5(_C_SOURCE.encode()).hexdigest()
-    cache = os.path.join(tempfile.gettempdir(), "tds_native")
-    os.makedirs(cache, exist_ok=True)
-    so_path = os.path.join(cache, f"hevcres_{src_md5}.so")
-    if not os.path.exists(so_path):
-        c_path = os.path.join(cache, f"hevcres_{src_md5}.c")
-        with open(c_path, "w") as f:
-            f.write(_C_SOURCE)
-        tmp = f"{so_path}.tmp.{os.getpid()}"
-        subprocess.run(
-            ["gcc", "-O2", "-fPIC", "-shared", "-o", tmp, c_path],
-            check=True, capture_output=True, timeout=120,
-        )
-        os.replace(tmp, so_path)  # atomic; concurrent builders are benign
-    lib = ctypes.CDLL(so_path)
+    lib = ctypes.CDLL(cached_build("hevcres.so", _C_SOURCE, _gcc))
     c8 = ctypes.POINTER(ctypes.c_int8)
     i64 = ctypes.POINTER(ctypes.c_int64)
     lib.hevcres_set_tables.argtypes = [

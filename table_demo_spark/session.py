@@ -11,15 +11,28 @@ Our equivalent is a single tuned ``SparkSession``:
   (TaxiFunctions.scala:87-90); pinning UTC makes timestamp<->epoch
   conversions deterministic and oracle-comparable.
 - Arrow enabled for the (rare) Pandas-UDF paths.
+- Local masters: ``file:`` is ``localfs``'s process-free local file
+  system, so checkpoint and sink commits spawn no ``chmod``/``readlink``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from table_demo_spark import localfs
+
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def _launches_jvm() -> bool:
+    """Whether ``getOrCreate`` starts the driver JVM from here. Only then
+    can the JVM's class path still take ``localfs``'s classes: naming
+    them as ``file:`` in a running JVM (a stopped session's, or one
+    ``spark-submit`` started) would fail every file access."""
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
 
 
 def get_spark(
@@ -73,7 +86,10 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
         )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local") and _launches_jvm():
+        conf.update(localfs.session_conf(extra_conf))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -75,6 +75,7 @@ class GenerationStore:
         self.path = path
         self._gen = 0
         self.last_batch = -1  # batch id of the current generation
+        self._schema = None  # of the frame last committed
         os.makedirs(path, exist_ok=True)
         gens = sorted(
             (
@@ -102,6 +103,7 @@ class GenerationStore:
     def commit(self, df: DataFrame, batch_id: int) -> None:
         nxt = self._dir(self._gen + 1)
         df.write.mode("overwrite").parquet(nxt)
+        self._schema = df.schema
         tmp = os.path.join(nxt, f"{self._MARKER}.tmp")
         with open(tmp, "w") as f:
             json.dump({"batch_id": batch_id}, f)
@@ -113,11 +115,15 @@ class GenerationStore:
 
     def read(self, spark, empty_schema: str | None = None) -> DataFrame:
         """The current table; before the first commit an empty frame of
-        ``empty_schema``, which sinks without a fixed schema omit."""
+        ``empty_schema``, which sinks without a fixed schema omit. The
+        table is read with the schema ``commit`` wrote, so no footer
+        job infers it; a resumed store infers it once."""
         if self.current_dir is None:
             assert empty_schema is not None, "no batch written yet"
             return spark.createDataFrame([], empty_schema)
-        return spark.read.parquet(self.current_dir)
+        if self._schema is None:
+            self._schema = spark.read.parquet(self.current_dir).schema
+        return spark.read.schema(self._schema).parquet(self.current_dir)
 
     def union(self, df: DataFrame) -> DataFrame:
         """The current table (if any) unioned by name with ``df``."""

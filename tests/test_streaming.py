@@ -758,22 +758,9 @@ def test_parquet_upsert_sink_resumes_after_process_restart(spark, tmp_path):
     assert got == {1: "a", 2: "b2", 3: "c"}
 
 
-@pytest.mark.parametrize("torn", ["empty", "no_success", "torn"])
-def test_generation_sinks_resume_from_last_committed_generation(
-    spark, tmp_path, torn
-):
-    """A stop mid-batch can leave gen=2 unfinished beside an intact
-    gen=1: an empty directory, part files without Spark's ``_SUCCESS``,
-    or a complete parquet write whose commit marker never landed. A
-    rebuilt sink — any of the five — must resume from gen=1 and discard
-    gen=2: adopting it would merge the next batch with a partial table
-    and drop gen=1's keys. The sum-merge sinks must also skip the
-    checkpoint's replay of the committed batch, or it counts twice."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+def _generation_sink_cases():
+    """The five generation-store sinks, each as (build from a path,
+    apply a (k long, v long, __op string) batch, its (k, v) columns)."""
     from table_demo_spark.streaming.queries import (
         ParquetCountSink,
         ParquetHistogramSink,
@@ -784,8 +771,7 @@ def test_generation_sinks_resume_from_last_committed_generation(
         VersionedCdcSink,
     )
 
-    # each sink: (build, apply a (k, v, __op) batch, its (k, v) columns)
-    cases = [
+    return [
         (
             lambda p: ParquetUpsertSink(p, ("k",)),
             lambda sink, df, b: sink.apply_batch(df.drop("__op"), b),
@@ -816,9 +802,32 @@ def test_generation_sinks_resume_from_last_committed_generation(
             ("k", "n"),
         ),
     ]
+
+
+@pytest.mark.parametrize("torn", ["empty", "no_success", "torn"])
+def test_generation_sinks_resume_from_last_committed_generation(
+    spark, tmp_path, torn
+):
+    """A stop mid-batch can leave gen=2 unfinished beside an intact
+    gen=1: an empty directory, part files without Spark's ``_SUCCESS``,
+    or a complete parquet write whose commit marker never landed. A
+    rebuilt sink — any of the five — must resume from gen=1 and discard
+    gen=2: adopting it would merge the next batch with a partial table
+    and drop gen=1's keys. The sum-merge sinks must also skip the
+    checkpoint's replay of the committed batch, or it counts twice."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from table_demo_spark.streaming.queries import (
+        ParquetCountSink,
+        ParquetHistogramSink,
+    )
+
     rows = "k long, v long, __op string"
     b0 = spark.createDataFrame([(1, 10, "U"), (2, 20, "U")], rows)
-    for i, (make, apply, (k, v)) in enumerate(cases):
+    for i, (make, apply, (k, v)) in enumerate(_generation_sink_cases()):
         path = str(tmp_path / f"sink{i}")
         sink = make(path)
         apply(sink, b0, 0)
@@ -840,6 +849,33 @@ def test_generation_sinks_resume_from_last_committed_generation(
         apply(reborn, spark.createDataFrame([(3, 30, "U")], rows), 1)
         got = {(r[k], r[v]) for r in reborn.snapshot_df(spark).collect()}
         assert got == {(1, 10), (2, 20), (3, 30)}, name
+
+
+def test_generation_store_read_fires_no_schema_job(spark, tmp_path):
+    """After a commit the store reads its table with the schema it
+    wrote: no footer job runs before the next merge, and the schema is
+    the one Spark would infer from the files — for each of the five
+    sinks. A resumed store infers it once."""
+    rows = "k long, v long, __op string"
+    b0 = spark.createDataFrame([(1, 10, "U"), (2, 20, "U")], rows)
+    sc = spark.sparkContext
+    for i, (make, apply, _) in enumerate(_generation_sink_cases()):
+        sink = make(str(tmp_path / f"sink{i}"))
+        name = type(sink).__name__
+        apply(sink, b0, 0)
+        group = f"gen-read-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            got = sink.store.read(spark).schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        want = spark.read.parquet(sink.current_dir).schema
+        assert [(f.name, f.dataType, f.nullable) for f in got] == [
+            (f.name, f.dataType, f.nullable) for f in want
+        ], name
+        resumed = make(sink.path).store
+        assert resumed.read(spark).schema == got, name
 
 
 def test_upsert_key_inference_ignores_window_lookalike_columns(spark):
