@@ -27,7 +27,9 @@ Architecture (the 100-TB shape):
    emit-time, and maps offsets to (file, row-group, row-range) slices.
 3. ``read(partition)`` runs on executors: each task opens ONLY its
    row groups with pyarrow and yields Arrow batches. No driver-side
-   materialization anywhere.
+   materialization anywhere. Its first call in a worker makes the
+   worker's later tasks skip re-reading unchanged zips on the Python
+   path (``_lazy_zip_invalidation``).
 
 The per-row delay is counter-based (Box-Muller over xxhash64 streams
 of the row content) rather than the reference's sequential
@@ -300,6 +302,50 @@ def _frontier_write(path: str | None, idx: int) -> None:
             pass
 
 
+def _lazy_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when it changed on disk (Python < 3.13; 3.13 already defers it).
+
+    PySpark starts every Python task with ``importlib.invalidate_caches()``,
+    which on 3.11/3.12 re-reads the central directory of every zip
+    importer on the worker's path: 13 for ``pyspark.zip``, 2 for the
+    spark-core jar, 2 for py4j, ~300 ms per task. The replacement stats
+    the archive and calls the stock method only when its (inode, size,
+    mtime) differs from the last read, or the stat fails. Installed once
+    per process (a class flag: this module is pickled by value, so its
+    globals are new in every task). Importers already on the path are
+    taken as current: the worker's ``setup_spark_files`` re-read them all
+    at the start of the task that installs this."""
+    import os
+    import sys
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or getattr(cls, "_read_on_change", False):
+        return
+
+    def archive_key(imp):
+        try:
+            st = os.stat(imp.archive)
+        except OSError:
+            return None
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+    stock = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        key = archive_key(self)
+        if key is None or key != getattr(self, "_read_key", None):
+            stock(self)
+            self._read_key = key
+
+    for imp in sys.path_importer_cache.values():
+        if isinstance(imp, cls):
+            imp._read_key = archive_key(imp)
+    cls.invalidate_caches = invalidate_caches
+    cls._read_on_change = True
+
+
 class ReplayStreamReader(DataSourceStreamReader):
     """Offset protocol over a prepared emit-ordered dataset.
 
@@ -470,6 +516,7 @@ class ReplayStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _RangePartition):
         """Executor-side: open ONLY this partition's row groups."""
+        _lazy_zip_invalidation()
         import pyarrow.parquet as pq
 
         for sl in partition.slices:

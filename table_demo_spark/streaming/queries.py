@@ -81,8 +81,10 @@ def _replay_events(
     """readStream over the emit-ordered replay dataset for events
     (prepared once per fixture by a distributed sort, cached). At most
     one read task per core: each Python read task pays a fixed
-    worker-side start cost, so a second wave of them adds its full cost
-    to every micro-batch."""
+    worker-side start cost (~75-220 ms, median 114, in paced Q1 once
+    its worker has served one replay read; ~300-400 ms before
+    ``_lazy_zip_invalidation``), so a second wave of them adds its full
+    cost to every micro-batch."""
     register_replay_source(spark)
     prepared = ensure_emit_ordered(
         spark, f"{sf_dir}/events.parquet", timecol="ts",

@@ -6,6 +6,22 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+@pytest.fixture(scope="session", autouse=True)
+def session_scratch():
+    """Engine scratch (stream checkpoints, sink tables) goes to one
+    directory per session, on the tmpfs when it is writable, removed at
+    teardown: callers of ``scratch_dir`` never delete theirs."""
+    import shutil
+    import tempfile
+
+    from table_demo_spark import scratch
+
+    root = tempfile.mkdtemp(prefix="tds-tests-", dir=scratch.scratch_root())
+    scratch._SHM = root
+    yield root
+    shutil.rmtree(root, ignore_errors=True)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from table_demo_spark.session import get_spark

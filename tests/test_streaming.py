@@ -716,6 +716,103 @@ def test_fresh_replay_reader_paces_from_zero_before_initial_offset(
         assert r.latestOffset()["idx"] < n  # paced at 600x, not jumped
 
 
+# Runs in a fresh interpreter whose only path zip is argv[1]: counts the
+# zip directory reads of importlib.invalidate_caches() (what PySpark's
+# setup_spark_files calls at the start of every Python task) before and
+# after one replay read() in that process, and after the zip is
+# rewritten in place.
+_ZIP_PROBE = r"""
+import importlib, json, pickle, sys, zipfile, zipimport
+
+zpath, shipped = sys.argv[1], sys.argv[2]
+stock = zipimport.zipimporter.invalidate_caches
+import zpkg.sub.mod  # importers for the archive, zpkg and zpkg.sub
+
+reads = []
+real_read = zipimport._read_directory
+def counting_read(archive):
+    reads.append(archive)
+    return real_read(archive)
+zipimport._read_directory = counting_read
+
+def reads_of_next_invalidation():
+    reads.clear()
+    importlib.invalidate_caches()
+    return len(reads)
+
+out = {
+    "importers": sum(isinstance(i, zipimport.zipimporter)
+                     for i in sys.path_importer_cache.values()),
+    "before": reads_of_next_invalidation(),
+}
+with open(shipped, "rb") as f:
+    reader, partition = pickle.load(f)
+out["rows"] = sum(b.num_rows for b in reader.read(partition))
+out["stock"] = zipimport.zipimporter.invalidate_caches is stock
+out["after"] = reads_of_next_invalidation()
+with zipfile.ZipFile(zpath, "a") as z:  # same inode, new size
+    z.writestr("zpkg/sub/extra.py", "X = 2\n")
+out["rewritten"] = reads_of_next_invalidation()
+import zpkg.sub.extra
+out["extra"] = zpkg.sub.extra.X
+print(json.dumps(out))
+"""
+
+
+def test_replay_read_skips_zip_rereads_until_an_archive_changes(
+    spark, tmp_path
+):
+    """A replay read task installs a stat-guarded
+    ``zipimporter.invalidate_caches`` in its worker (Python < 3.13):
+    the next task's ``importlib.invalidate_caches()`` reads no zip
+    directory, and a zip rewritten in place is read again and imports
+    its new module. Python >= 3.13 keeps the stock method. The reader
+    ships the way Spark ships it: cloudpickled by value, into a process
+    without the package on its path."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    from pyspark import cloudpickle
+    from pyspark.sql.types import StructType
+
+    from table_demo_spark.sources import replay
+
+    prepared = replay.ensure_emit_ordered(spark, f"{SF_SMOKE}/events.parquet")
+    cloudpickle.register_pickle_by_value(replay)
+    reader = replay.ReplayStreamReader(StructType([]), {"path": prepared})
+    shipped = tmp_path / "reader.pkl"
+    shipped.write_bytes(
+        cloudpickle.dumps((reader, replay._RangePartition(())))
+    )
+    zpath = str(tmp_path / "pkgs.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/sub/__init__.py", "")
+        z.writestr("zpkg/sub/mod.py", "X = 1\n")
+
+    proc = subprocess.run(
+        [sys.executable, "-c", _ZIP_PROBE, zpath, str(shipped)],
+        env={**os.environ, "PYTHONPATH": zpath},
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    out = json.loads(proc.stdout.splitlines()[-1])
+    assert out["importers"] == 3 and out["rows"] == 0 and out["extra"] == 2
+    if sys.version_info >= (3, 13):
+        assert out["stock"]
+    else:
+        assert out["before"] == out["importers"]  # stock: one read each
+        assert out["after"] == 0
+        assert out["rewritten"] == out["importers"]
+        assert not out["stock"]
+
+
 def test_upsert_key_inference_matches_reference_planner(spark):
     """plans.modes must infer keys = grouping columns and update mode
     for unwindowed continuous aggs (SURVEY §1.4 key-inference rule)."""
