@@ -1,5 +1,6 @@
-"""Build-once cache for code the engine compiles at run time (the
-HEVC C kernel, the local file system's Java classes).
+"""Build-once cache for artifacts the engine builds at run time: the
+HEVC C kernel and the local file system's Java classes it compiles,
+and the staged shard fixtures the file-stream queries read.
 
 An artifact is built once per machine under
 ``tempfile.gettempdir()/tds_native``, named by the md5 of everything

@@ -284,11 +284,11 @@ def encode_heif(
 
 def decode_heif(data: bytes):
     """Decode a HEIF container's primary image to 8-bit YCbCr 4:2:0
-    numpy planes ``(y, cb, cr)``: AVIF-brand containers through
-    libavif + dav1d (single-threaded), everything else through
-    libheif's priority plugin (libde265 for HEIC).  Raises ValueError
-    on any container/codec error (truncation, bad payloads —
-    negative-tested).
+    numpy planes ``(y, cb, cr)``: containers with an ``avif`` major or
+    compatible brand through libavif + dav1d (single-threaded),
+    everything else through libheif's priority plugin (libde265 for
+    HEIC).  Raises ValueError on any container/codec error
+    (truncation, bad payloads — negative-tested).
 
     Why the AVIF split (r16, guide §4.5): libheif 1.15.1's dav1d
     plugin creates a fresh ncpu-sized dav1d thread pool PER DECODE
@@ -300,12 +300,26 @@ def decode_heif(data: bytes):
     codebase on both routes; decode output proven bit-identical
     (tests/test_operators.py pins it), so the adjudication is
     unchanged."""
-    if len(data) >= 12 and data[4:8] == b"ftyp" and data[8:12] == b"avif":
+    if _avif_brand(data):
         try:
             return decode_avif_libavif(data, AVIF_CODEC_DAV1D)
         except ImportError:  # pragma: no cover - libavif ships in-container
             pass  # fall back to the libheif plugin path below
     return _decode_heif_libheif(data)
+
+
+def _avif_brand(data: bytes) -> bool:
+    """True when the leading ftyp box (ISOBMFF 4.3: major brand, minor
+    version, compatible brands) names ``avif`` as its major brand or
+    among its compatible brands. A file with no ftyp box first, or one
+    whose box size runs past the data, is not AVIF here."""
+    if data[4:8] != b"ftyp":
+        return False
+    size = int.from_bytes(data[:4], "big")
+    if size < 16 or size > len(data):
+        return False
+    brands = [data[8:12]] + [data[i:i + 4] for i in range(16, size - 3, 4)]
+    return b"avif" in brands
 
 
 def _decode_heif_libheif(data: bytes):

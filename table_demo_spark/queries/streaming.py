@@ -49,9 +49,16 @@ from table_demo_spark.queries.reference import (
     Q3_ORACLE,
     Q3_THRESHOLD,
 )
+from table_demo_spark.streaming.queries import (
+    JOIN_WITHIN_MS,
+    Q4_GAP_MS,
+    Q10_TTL_MS,
+    Q13_SIZE_MS,
+    Q13_SLIDE_MS,
+    WATERMARK_MS,
+)
 
 DRIVER_SPEED = 5e8  # ~16 years of event time per wall-clock second
-WATERMARK_MS = 61_000  # streaming/queries.py WATERMARK
 
 @contextmanager
 def _no_data_batches_off(spark: SparkSession):
@@ -284,11 +291,10 @@ def q4_session_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-window append emission: a session is final when the watermark
 # passes its close (last event + gap). Verified empirically at sf0.001
 # and sf0.01: emitted == {sessions: last_ms + gap <= max_ms - delay}.
-_GAP_MS = 30 * 60_000
 Q4_SESSION_ORACLE = f"""
 WITH flagged AS (
   SELECT user_id, ts,
-         CASE WHEN epoch_ms(ts) - epoch_ms(lag(ts) OVER w) >= {_GAP_MS}
+         CASE WHEN epoch_ms(ts) - epoch_ms(lag(ts) OVER w) >= {Q4_GAP_MS}
               THEN 1 ELSE 0 END AS new_session
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts)
@@ -309,7 +315,7 @@ agg AS (
 )
 SELECT user_id, session_start, n_events
 FROM agg
-WHERE last_ms + {_GAP_MS} <=
+WHERE last_ms + {Q4_GAP_MS} <=
       (SELECT max(epoch_ms(ts)) FROM events) - {WATERMARK_MS}
 """
 
@@ -329,7 +335,6 @@ def q5_join_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stream-stream inner join: every matching pair is emitted exactly
 # once (the watermark only bounds state, not emission), so the final
 # sink state is the full batch interval join.
-_Q5_WITHIN_MS = 10 * 60_000
 Q5_JOIN_ORACLE = f"""
 SELECT
   c.user_id AS user_id,
@@ -343,7 +348,7 @@ JOIN events p
  AND c.event_type = 'click'
  AND p.event_type = 'purchase'
  AND epoch_ms(p.ts) >= epoch_ms(c.ts)
- AND epoch_ms(p.ts) <= epoch_ms(c.ts) + {_Q5_WITHIN_MS}
+ AND epoch_ms(p.ts) <= epoch_ms(c.ts) + {JOIN_WITHIN_MS}
 """
 
 
@@ -445,7 +450,7 @@ def q10_ttl_expiry_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sink = _parquet_sink(("cell",))
     _, query = run_q10_ttl_expiry(
-        spark, sf_dir, speed=DRIVER_SPEED, ttl_ms=_Q10_TTL_MS, sink=sink
+        spark, sf_dir, speed=DRIVER_SPEED, sink=sink
     )
     _drain(query, lambda: sink.count(spark))
     return sink.snapshot_df(spark).select("cell", "dept_cnt")
@@ -457,7 +462,6 @@ def q10_ttl_expiry_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 # final watermark has its result row deleted. Oracle: sessionize each
 # cell with gap = TTL, keep the LAST session's count, drop cells whose
 # last event is idle at the final watermark.
-_Q10_TTL_MS = 48 * 3600_000
 Q10_TTL_ORACLE = f"""{_DEPARTURES_CTE},
 fin AS (
   SELECT max(epoch_ms(rowtime)) - {WATERMARK_MS} AS wm FROM departures
@@ -470,7 +474,7 @@ proc AS (
 ),
 flagged AS (
   SELECT cell, ride_id, rowtime,
-         CASE WHEN epoch_ms(rowtime) - epoch_ms(lag(rowtime) OVER w) >= {_Q10_TTL_MS}
+         CASE WHEN epoch_ms(rowtime) - epoch_ms(lag(rowtime) OVER w) >= {Q10_TTL_MS}
               THEN 1 ELSE 0 END AS reset
   FROM proc
   WINDOW w AS (PARTITION BY cell ORDER BY rowtime, ride_id)
@@ -491,7 +495,7 @@ last AS (
   QUALIFY row_number() OVER (PARTITION BY cell ORDER BY sid DESC) = 1
 )
 SELECT cell, dept_cnt FROM last
-WHERE last_ms + {_Q10_TTL_MS} > (SELECT wm FROM fin)
+WHERE last_ms + {Q10_TTL_MS} > (SELECT wm FROM fin)
 """
 
 
@@ -586,7 +590,7 @@ matched AS (
   SELECT c.user_id, c.click_id, p.purchase_id, c.click_ms, p.purchase_ms
   FROM c JOIN p ON c.user_id = p.user_id
    AND p.purchase_ms >= c.click_ms
-   AND p.purchase_ms <= c.click_ms + {_Q5_WITHIN_MS}
+   AND p.purchase_ms <= c.click_ms + {JOIN_WITHIN_MS}
 )
 SELECT user_id, click_id, purchase_id, click_ms, purchase_ms FROM matched
 UNION ALL
@@ -594,7 +598,7 @@ SELECT c.user_id, c.click_id, CAST(-1 AS BIGINT) AS purchase_id,
        c.click_ms, CAST(-1 AS BIGINT) AS purchase_ms
 FROM c
 ANTI JOIN matched m ON c.click_id = m.click_id
-WHERE c.click_ms + {_Q5_WITHIN_MS} < (SELECT wm FROM fin)
+WHERE c.click_ms + {JOIN_WITHIN_MS} < (SELECT wm FROM fin)
 """
 
 
@@ -612,13 +616,14 @@ def q13_sliding_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (61s) means no window is ever resurrected after state eviction, so
 # the final upsert state equals the batch hopping-window aggregate
 # (same argument as q1; window family = an_a15's oracle shape grouped
-# by event_type).
-_Q13_DAY = 86_400_000
+# by event_type). Each event lands in size/slide windows, the ones
+# starting `off` slides before its own slide.
+_Q13_OFFSETS = ", ".join(str(i) for i in range(Q13_SIZE_MS // Q13_SLIDE_MS))
 Q13_SLIDING_ORACLE = f"""
 SELECT event_type, ws AS win_start, count(*) AS n
 FROM (
-  SELECT event_type, (epoch_ms(ts) // {_Q13_DAY} - off) * {_Q13_DAY} AS ws
-  FROM events, (SELECT unnest([0, 1]) AS off)
+  SELECT event_type, (epoch_ms(ts) // {Q13_SLIDE_MS} - off) * {Q13_SLIDE_MS} AS ws
+  FROM events, (SELECT unnest([{_Q13_OFFSETS}]) AS off)
 )
 GROUP BY event_type, ws
 """
@@ -851,12 +856,12 @@ matched AS (
   SELECT DISTINCT v.view_id
   FROM v JOIN p ON v.user_id = p.user_id
    AND p.purchase_ms >= v.view_ms
-   AND p.purchase_ms <= v.view_ms + {_Q5_WITHIN_MS}
+   AND p.purchase_ms <= v.view_ms + {JOIN_WITHIN_MS}
 )
 SELECT v.view_id, v.user_id, v.view_ms
 FROM v
 ANTI JOIN matched m ON v.view_id = m.view_id
-WHERE v.view_ms + {_Q5_WITHIN_MS} < (SELECT wm FROM fin)
+WHERE v.view_ms + {JOIN_WITHIN_MS} < (SELECT wm FROM fin)
 """
 
 
@@ -884,7 +889,7 @@ p AS (SELECT user_id, epoch_ms(ts) AS purchase_ms
 SELECT DISTINCT v.view_id, v.user_id, v.view_ms
 FROM v JOIN p ON v.user_id = p.user_id
  AND p.purchase_ms >= v.view_ms
- AND p.purchase_ms <= v.view_ms + {_Q5_WITHIN_MS}
+ AND p.purchase_ms <= v.view_ms + {JOIN_WITHIN_MS}
 """
 
 
@@ -968,14 +973,14 @@ matched AS (
   SELECT c.user_id, c.click_id, p.purchase_id, c.click_ms, p.purchase_ms
   FROM c JOIN p ON c.user_id = p.user_id
    AND p.purchase_ms >= c.click_ms
-   AND p.purchase_ms <= c.click_ms + {_Q5_WITHIN_MS}
+   AND p.purchase_ms <= c.click_ms + {JOIN_WITHIN_MS}
 )
 SELECT user_id, click_id, purchase_id, click_ms, purchase_ms FROM matched
 UNION ALL
 SELECT c.user_id, c.click_id, CAST(-1 AS BIGINT), c.click_ms,
        CAST(-1 AS BIGINT)
 FROM c ANTI JOIN matched m ON c.click_id = m.click_id
-WHERE c.click_ms + {_Q5_WITHIN_MS} < (SELECT wm FROM fin)
+WHERE c.click_ms + {JOIN_WITHIN_MS} < (SELECT wm FROM fin)
 UNION ALL
 SELECT p.user_id, CAST(-1 AS BIGINT), p.purchase_id, CAST(-1 AS BIGINT),
        p.purchase_ms

@@ -28,6 +28,9 @@ watermark lags maxDelay + 1 ms (TaxiRideSource.java:150).
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -52,13 +55,30 @@ from table_demo_spark.sources.replay import (
 from table_demo_spark.scratch import scratch_dir
 from table_demo_spark.streaming import start_stream
 from table_demo_spark.streaming.upsert import (
+    ConsoleDebugSink,
     GenerationSink,
     MemoryUpsertSink,
+    ParquetAppendSink,
+    ParquetUpsertSink,
+    VersionedCdcSink,
     footer_rows,
-    foreach_batch_upsert,
 )
 
-WATERMARK = "61 seconds"
+# Each stream constant below is written once: the oracles in
+# queries/streaming.py import them, so a stream and its oracle cannot
+# drift apart (the rule Q44_* follow).
+WATERMARK_MS = 61_000
+WATERMARK = f"{WATERMARK_MS} milliseconds"
+# Interval-join bound of q5/q12/q19/q20/q22: a purchase matches a
+# click or view of the same user at most this long before it.
+JOIN_WITHIN_MS = 10 * 60_000
+Q4_GAP_MS = 30 * 60_000  # session gap
+Q10_TTL_MS = 48 * 3600_000  # event-time idle-state retention
+Q13_SLIDE_MS = 86_400_000  # hopping window: 2-day windows every day
+Q13_SIZE_MS = 2 * Q13_SLIDE_MS
+# Replay read tasks per micro-batch (at most one per core, see
+# _replay_events).
+_READ_TASKS = 8
 
 
 def _checkpoint_dir() -> str:
@@ -75,7 +95,6 @@ def _replay_events(
     sf_dir: str,
     speed: float,
     max_delay_ms: int = 60_000,
-    n_parts: int = 8,
     frontier_key: str | None = None,
 ) -> DataFrame:
     """readStream over the emit-ordered replay dataset for events
@@ -96,7 +115,7 @@ def _replay_events(
         .option("speed", speed)
         .option(
             "numpartitions",
-            min(n_parts, spark.sparkContext.defaultParallelism),
+            min(_READ_TASKS, spark.sparkContext.defaultParallelism),
         )
     )
     if frontier_key is not None:
@@ -110,10 +129,16 @@ def _start_append(out: DataFrame, sink, ckpt: str):
     foreachBatch keyed store."""
     if hasattr(sink, "bind_stream"):
         return sink.bind_stream(out, ckpt)
+    return _start_foreach(out, ckpt, sink.foreach_batch())
+
+
+def _start_foreach(out: DataFrame, ckpt: str, on_batch, mode: str = "append"):
+    """Start ``out`` in output ``mode``, handing every micro-batch to
+    ``on_batch(batch_df, batch_id)``."""
     return start_stream(
-        out.writeStream.outputMode("append")
+        out.writeStream.outputMode(mode)
         .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.foreach_batch())
+        .foreachBatch(on_batch)
     )
 
 
@@ -122,14 +147,11 @@ def stream_rides(
     sf_dir: str,
     speed: float = 600.0,
     max_delay_ms: int = 60_000,
-    n_parts: int = 8,
     frontier_key: str | None = None,
 ) -> DataFrame:
     """readStream from the replay source, shaped like sources.batch.
     rides_view (same derivation, from epoch-ms columns)."""
-    raw = _replay_events(
-        spark, sf_dir, speed, max_delay_ms, n_parts, frontier_key
-    )
+    raw = _replay_events(spark, sf_dir, speed, max_delay_ms, frontier_key)
     return raw.select(
         F.col("event_id").alias("ride_id"),
         F.col("event_type").isin("click", "view", "signup").alias("is_start"),
@@ -158,9 +180,9 @@ def stream_departures(rides: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q1 streaming — windowed count into the upsert sink.
 # ---------------------------------------------------------------------------
-def q1_stream(departures: DataFrame, tumble: str = TUMBLE) -> DataFrame:
+def q1_stream(departures: DataFrame) -> DataFrame:
     return (
-        departures.groupBy("cell", F.window("rowtime", tumble).alias("w"))
+        departures.groupBy("cell", F.window("rowtime", TUMBLE).alias("w"))
         .agg(F.count("ride_id").alias("dept_cnt"))
         .select(
             "cell",
@@ -182,8 +204,6 @@ def run_q1_stream(
     The DEFAULT sink is the durable ParquetUpsertSink (r14 verdict
     #4: no driver-side row accumulation on any default path); pass a
     MemoryUpsertSink explicitly for in-process demo assertions."""
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
     ckpt = _checkpoint_dir()
     out = q1_stream(
         stream_departures(stream_rides(spark, sf_dir, speed, frontier_key=ckpt))
@@ -191,12 +211,7 @@ def run_q1_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q1sink-"), ("cell", "dept_time")
     )
-    query = start_stream(
-        out.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.foreach_batch())
-    )
-    return sink, query
+    return sink, _start_foreach(out, ckpt, sink.foreach_batch(), "update")
 
 
 # ---------------------------------------------------------------------------
@@ -309,8 +324,6 @@ def run_q2_stream(
         range_ms,
     )
     # durable default (r14 verdict #4); Memory sink is demo opt-in
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
-
     sink = sink if sink is not None else ParquetAppendSink(
         scratch_dir("tds-q2sink-")
     )
@@ -339,7 +352,6 @@ def q4_session_stream(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    gap: str = "30 minutes",
     sink=None,
 ):
     ckpt = _checkpoint_dir()
@@ -347,7 +359,10 @@ def q4_session_stream(
         "rowtime", WATERMARK
     )
     out = (
-        ev.groupBy("user_id", F.session_window("rowtime", gap).alias("s"))
+        ev.groupBy(
+            "user_id",
+            F.session_window("rowtime", f"{Q4_GAP_MS} milliseconds").alias("s"),
+        )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -356,8 +371,6 @@ def q4_session_stream(
         )
     )
     # durable default (r14 verdict #4); Memory sink is demo opt-in
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
-
     sink = sink if sink is not None else ParquetAppendSink(
         scratch_dir("tds-q4sink-")
     )
@@ -376,27 +389,26 @@ def q4_session_stream(
 # (evict below watermark - interval), so state is O(events in the
 # interval), not O(stream).
 # ---------------------------------------------------------------------------
-def q5_join_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    speed: float = 2_000_000.0,
-    within_ms: int = 10 * 60_000,
-    sink=None,
+def _interval_join(
+    spark: SparkSession, sf_dir: str, speed: float, left_type: str, how: str
 ):
-    """click→purchase conversion pairs: purchases by the same user
-    within ``within_ms`` after a click. Inner join => every match is
-    emitted exactly once regardless of arrival order; the final sink
-    state equals the batch join. Returns (sink, query)."""
+    """The two watermarked sides of a stream-stream interval join over
+    the replay source, joined ``how``: ``left_type`` events as
+    (<left_type>_id, user_id, <left_type>_time) against purchases as
+    (purchase_id, p_user_id, purchase_time), matched on user within
+    ``[t, t + JOIN_WITHIN_MS]`` of the left event time t. Returns
+    (joined, ckpt); the caller projects and binds the sink."""
     ckpt = _checkpoint_dir()
     ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
+    left_time = f"{left_type}_time"
+    left = (
+        ev.filter(F.col("event_type") == left_type)
         .select(
-            F.col("event_id").alias("click_id"),
+            F.col("event_id").alias(f"{left_type}_id"),
             F.col("user_id"),
-            F.col("rowtime").alias("click_time"),
+            F.col("rowtime").alias(left_time),
         )
-        .withWatermark("click_time", WATERMARK)
+        .withWatermark(left_time, WATERMARK)
     )
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
@@ -407,29 +419,46 @@ def q5_join_stream(
         )
         .withWatermark("purchase_time", WATERMARK)
     )
-    joined = clicks.join(
+    joined = left.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_time") >= F.col("click_time"))
+        & (F.col("purchase_time") >= F.col(left_time))
         & (
             F.col("purchase_time")
-            <= F.col("click_time") + F.expr(f"INTERVAL {within_ms} MILLISECONDS")
+            <= F.col(left_time)
+            + F.expr(f"INTERVAL {JOIN_WITHIN_MS} MILLISECONDS")
         ),
-        "inner",
-    ).select(
+        how,
+    )
+    return joined, ckpt
+
+
+def _click_purchase_pairs(joined: DataFrame) -> DataFrame:
+    return joined.select(
         "user_id",
         "click_id",
         "purchase_id",
         F.unix_millis("click_time").alias("click_ms"),
         F.unix_millis("purchase_time").alias("purchase_ms"),
     )
-    # durable default (r14 verdict #4); Memory sink is demo opt-in
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
+
+def q5_join_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    speed: float = 2_000_000.0,
+    sink=None,
+):
+    """click→purchase conversion pairs: purchases by the same user
+    within ``JOIN_WITHIN_MS`` after a click. Inner join => every match
+    is emitted exactly once regardless of arrival order; the final sink
+    state equals the batch join. Returns (sink, query)."""
+    joined, ckpt = _interval_join(spark, sf_dir, speed, "click", "inner")
+    # durable default (r14 verdict #4); Memory sink is demo opt-in
     sink = sink if sink is not None else ParquetAppendSink(
         scratch_dir("tds-q5sink-")
     )
-    return sink, _start_append(joined, sink, ckpt)
+    return sink, _start_append(_click_purchase_pairs(joined), sink, ckpt)
 
 
 # ---------------------------------------------------------------------------
@@ -457,7 +486,6 @@ def run_q31_temporal_enrich(
     Returns (sink, query)."""
     from table_demo_spark.operators.asof import asof_join
     from table_demo_spark.sources.batch import load_table
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
 
     ckpt = _checkpoint_dir()
     ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
@@ -504,12 +532,7 @@ def run_q31_temporal_enrich(
         )
         sink.apply_batch(out, batch_id)
 
-    query = start_stream(
-        purchases.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-    )
-    return sink, query
+    return sink, _start_foreach(purchases, ckpt, apply)
 
 
 # ---------------------------------------------------------------------------
@@ -528,55 +551,18 @@ def q12_left_join_stream(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    within_ms: int = 10 * 60_000,
     sink=None,
 ):
     """Left-outer click→purchase attribution: every click paired with
-    purchases by the same user within ``within_ms``, or emitted with
-    null purchase columns once its window expires. Returns (sink, query)."""
-    ckpt = _checkpoint_dir()
-    ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("rowtime").alias("click_time"),
-        )
-        .withWatermark("click_time", WATERMARK)
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("rowtime").alias("purchase_time"),
-        )
-        .withWatermark("purchase_time", WATERMARK)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_time") >= F.col("click_time"))
-        & (
-            F.col("purchase_time")
-            <= F.col("click_time") + F.expr(f"INTERVAL {within_ms} MILLISECONDS")
-        ),
-        "leftOuter",
-    ).select(
-        "user_id",
-        "click_id",
-        "purchase_id",
-        F.unix_millis("click_time").alias("click_ms"),
-        F.unix_millis("purchase_time").alias("purchase_ms"),
-    )
+    purchases by the same user within ``JOIN_WITHIN_MS``, or emitted
+    with null purchase columns once its window expires. Returns
+    (sink, query)."""
+    joined, ckpt = _interval_join(spark, sf_dir, speed, "click", "leftOuter")
     # durable default (r14 verdict #4); Memory sink is demo opt-in
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
-
     sink = sink if sink is not None else ParquetAppendSink(
         scratch_dir("tds-q12sink-")
     )
-    return sink, _start_append(joined, sink, ckpt)
+    return sink, _start_append(_click_purchase_pairs(joined), sink, ckpt)
 
 
 # ---------------------------------------------------------------------------
@@ -612,8 +598,6 @@ def q6_dedup_stream(
         else keyed.dropDuplicates(["user_id", "event_type"])
     ).select("user_id", "event_type")
     # durable default (r14 verdict #4); Memory sink is demo opt-in
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
-
     sink = sink if sink is not None else ParquetAppendSink(
         scratch_dir("tds-q6sink-")
     )
@@ -660,17 +644,10 @@ def q7_enrich_stream(
         )
     )
     # durable default (r14 verdict #4); Memory sink is demo opt-in
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q7sink-"), ("c_mktsegment",)
     )
-    query = start_stream(
-        out.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.foreach_batch())
-    )
-    return sink, query
+    return sink, _start_foreach(out, ckpt, sink.foreach_batch(), "update")
 
 
 def stream_events_typed(
@@ -787,7 +764,7 @@ def run_q3_stream(
     threshold: int = 0,
     ttl_ms: int | None = None,
     sink: "ParquetHistogramSink | None" = None,
-    ckpt: str | None = None,
+    checkpoint: str | None = None,
 ):
     """Single-pass distributed chained agg: stateful per-cell count
     emitting a retract/accumulate changelog, folded into a durable
@@ -795,7 +772,7 @@ def run_q3_stream(
     retention (TaxiRideQueries.scala:99). Returns
     (ParquetHistogramSink, query)."""
 
-    ckpt = ckpt or _checkpoint_dir()
+    ckpt = checkpoint or _checkpoint_dir()
     departures = stream_departures(
         stream_rides(spark, sf_dir, speed, frontier_key=ckpt)
     )
@@ -813,12 +790,7 @@ def run_q3_stream(
     sink = sink if sink is not None else ParquetHistogramSink(
         scratch_dir("tds-hist-")
     )
-    query = start_stream(
-        deltas.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.apply_batch)
-    )
-    return sink, query
+    return sink, _start_foreach(deltas, ckpt, sink.apply_batch, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -879,8 +851,6 @@ def run_q8_retract_delete(
     """Start the gated aggregate into a durable ParquetUpsertSink via
     the changelog dispatch path. Returns (sink, query)."""
 
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
     ckpt = _checkpoint_dir()
     departures = stream_departures(
         stream_rides(spark, sf_dir, speed, frontier_key=ckpt)
@@ -895,12 +865,7 @@ def run_q8_retract_delete(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q8-"), ("cell",)
     )
-    query = start_stream(
-        changelog.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.apply_changelog)
-    )
-    return sink, query
+    return sink, _start_foreach(changelog, ckpt, sink.apply_changelog, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -912,14 +877,11 @@ def run_q9_debug_sink(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    echo: bool = False,
 ):
     """Per-event-type count + revenue into a ConsoleDebugSink — the
     reference's print/console sink (K4). The event-type domain is tiny
     and bounded, the one place a debug sink belongs. Returns
     (ConsoleDebugSink, query)."""
-    from table_demo_spark.streaming.upsert import ConsoleDebugSink
-
     ckpt = _checkpoint_dir()
     ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
     out = ev.groupBy("event_type").agg(
@@ -928,13 +890,8 @@ def run_q9_debug_sink(
         .cast("double")
         .alias("revenue"),
     )
-    sink = ConsoleDebugSink(("event_type",), echo=echo)
-    query = start_stream(
-        out.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.foreach_batch())
-    )
-    return sink, query
+    sink = ConsoleDebugSink(("event_type",))
+    return sink, _start_foreach(out, ckpt, sink.foreach_batch(), "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1023,20 +980,17 @@ def run_q10_ttl_expiry(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    ttl_ms: int = 48 * 3600_000,
     sink=None,
 ):
     """Per-cell departure count with event-time idle-state retention
     into the durable changelog sink. Returns (sink, query)."""
-
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
 
     ckpt = _checkpoint_dir()
     departures = stream_departures(
         stream_rides(spark, sf_dir, speed, frontier_key=ckpt)
     )
     changelog = departures.groupBy("cell").applyInPandasWithState(
-        _q10_ttl_fn(ttl_ms),
+        _q10_ttl_fn(Q10_TTL_MS),
         outputStructType=_Q8_OUT,
         stateStructType=_Q10_STATE,
         outputMode="update",
@@ -1045,12 +999,7 @@ def run_q10_ttl_expiry(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q10-"), ("cell",)
     )
-    query = start_stream(
-        changelog.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.apply_changelog)
-    )
-    return sink, query
+    return sink, _start_foreach(changelog, ckpt, sink.apply_changelog, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1062,11 +1011,20 @@ def run_q10_ttl_expiry(
 # types the lines, and the standard Q1 windowed count runs on top —
 # source format and query compose orthogonally.
 # ---------------------------------------------------------------------------
+def _csv_lines(spark: SparkSession, path: str) -> DataFrame:
+    """The gzip-CSV file stream of q11 and q21 as one ``line`` column,
+    two files per micro-batch."""
+    return (
+        spark.readStream.option("maxFilesPerTrigger", 2)
+        .text(path)
+        .withColumnRenamed("value", "line")
+    )
+
+
 def run_q11_csv_stream(
     spark: SparkSession,
     sf_dir: str,
     sink=None,
-    files_per_trigger: int = 2,
 ):
     """Q1 over the gzip-CSV file stream. Timestamps carry the CSV
     format's second granularity; day-window counts are unaffected
@@ -1076,17 +1034,10 @@ def run_q11_csv_stream(
         ensure_rides_csv_gz,
         parse_taxi_csv,
     )
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
 
     path = ensure_rides_csv_gz(spark, sf_dir)
     ckpt = _checkpoint_dir()
-    lines = (
-        spark.readStream.option("maxFilesPerTrigger", files_per_trigger)
-        .text(path)
-        .withColumnRenamed("value", "line")
-    )
-    rides = parse_taxi_csv(lines)
+    rides = parse_taxi_csv(_csv_lines(spark, path))
     departures = (
         rides.filter(F.col("is_start") & in_nyc("start_lon", "start_lat"))
         .select(
@@ -1100,12 +1051,7 @@ def run_q11_csv_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q11-"), ("cell", "dept_time")
     )
-    query = start_stream(
-        out.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.foreach_batch())
-    )
-    return sink, query
+    return sink, _start_foreach(out, ckpt, sink.foreach_batch(), "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1123,21 +1069,24 @@ def q13_sliding_stream(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    size: str = "2 days",
-    slide: str = "1 day",
     sink=None,
 ):
     """Per-event-type count over hopping windows into a durable
     ParquetUpsertSink. Returns (sink, query)."""
-
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
 
     ckpt = _checkpoint_dir()
     ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt).withWatermark(
         "rowtime", WATERMARK
     )
     out = (
-        ev.groupBy("event_type", F.window("rowtime", size, slide).alias("w"))
+        ev.groupBy(
+            "event_type",
+            F.window(
+                "rowtime",
+                f"{Q13_SIZE_MS} milliseconds",
+                f"{Q13_SLIDE_MS} milliseconds",
+            ).alias("w"),
+        )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             "event_type", F.unix_millis(F.col("w.start")).alias("win_start"), "n"
@@ -1146,12 +1095,7 @@ def q13_sliding_stream(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q13-"), ("event_type", "win_start")
     )
-    query = start_stream(
-        out.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.apply_batch)
-    )
-    return sink, query
+    return sink, _start_foreach(out, ckpt, sink.apply_batch, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1175,8 +1119,6 @@ def run_q14_topk(
     """Continuous per-cell departure count into a durable upsert sink.
     Returns (sink, query); callers take top-k from ``snapshot_df``."""
 
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
     ckpt = _checkpoint_dir()
     departures = stream_departures(
         stream_rides(spark, sf_dir, speed, frontier_key=ckpt)
@@ -1187,12 +1129,7 @@ def run_q14_topk(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q14-"), ("cell",)
     )
-    query = start_stream(
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.apply_batch)
-    )
-    return sink, query
+    return sink, _start_foreach(counts, ckpt, sink.apply_batch, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1240,8 +1177,6 @@ def run_q15_running_totals(
     """Per-user exact running totals into a durable upsert sink.
     Returns (sink, query)."""
 
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
     ckpt = _checkpoint_dir()
     ev = _replay_events(spark, sf_dir, speed, frontier_key=ckpt).select(
         "user_id",
@@ -1250,11 +1185,8 @@ def run_q15_running_totals(
     sink = sink if sink is not None else ParquetUpsertSink(
         scratch_dir("tds-q15-"), ("user_id",)
     )
-    query = start_stream(
-        _running_totals(ev)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink.apply_batch)
+    query = _start_foreach(
+        _running_totals(ev), ckpt, sink.apply_batch, "update"
     )
     return sink, query
 
@@ -1321,12 +1253,7 @@ def run_q16_hll_sketch(
             hll_registers(batch_df, ["event_type"], "user_id"), batch_id
         )
 
-    query = start_stream(
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(handle)
-    )
-    return sink, query
+    return sink, _start_foreach(ev, ckpt, handle)
 
 
 # ---------------------------------------------------------------------------
@@ -1349,8 +1276,6 @@ class ParquetBatchArchive:
     prune or audit by batch."""
 
     def __init__(self, path: str):
-        import os
-
         self.path = path
         os.makedirs(path, exist_ok=True)
 
@@ -1401,11 +1326,7 @@ def run_q17_fanout(
         finally:
             batch_df.unpersist()
 
-    query = start_stream(
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(handle)
-    )
+    query = _start_foreach(ev, ckpt, handle)
     return archive, sketch, query
 
 
@@ -1433,8 +1354,6 @@ def run_q18_cdc_apply(
     DISTRIBUTED to its newest change per key (max_by over the version
     struct — partial-aggregating, map-side combined), then version-
     merged into the durable store."""
-
-    from table_demo_spark.streaming.upsert import VersionedCdcSink
 
     ckpt = _checkpoint_dir()
     ev = _replay_events(spark, sf_dir, speed, frontier_key=ckpt).select(
@@ -1468,12 +1387,7 @@ def run_q18_cdc_apply(
         )
         sink.apply_changelog(last, batch_id)
 
-    query = start_stream(
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(handle)
-    )
-    return sink, query
+    return sink, _start_foreach(ev, ckpt, handle)
 
 
 # ---------------------------------------------------------------------------
@@ -1494,49 +1408,17 @@ def q19_anti_join_stream(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    within_ms: int = 10 * 60_000,
     sink=None,
 ):
     """Unconverted views: (view_id, user_id, view_time) with no
     same-user purchase in [view, view+within]. Returns (sink, query)."""
-    ckpt = _checkpoint_dir()
-    ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("rowtime").alias("view_time"),
-        )
-        .withWatermark("view_time", WATERMARK)
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("rowtime").alias("purchase_time"),
-        )
-        .withWatermark("purchase_time", WATERMARK)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_time") >= F.col("view_time"))
-        & (
-            F.col("purchase_time")
-            <= F.col("view_time") + F.expr(f"INTERVAL {within_ms} MILLISECONDS")
-        ),
-        "leftOuter",
-    )
+    joined, ckpt = _interval_join(spark, sf_dir, speed, "view", "leftOuter")
     orphans = joined.filter(F.col("purchase_id").isNull()).select(
         "view_id",
         "user_id",
         F.unix_millis("view_time").alias("view_ms"),
     )
     if sink is None:
-        from table_demo_spark.streaming.upsert import MemoryUpsertSink
-
         sink = MemoryUpsertSink(("view_id",))
     return sink, _start_append(orphans, sink, ckpt)
 
@@ -1545,7 +1427,6 @@ def q20_semi_join_stream(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    within_ms: int = 10 * 60_000,
     sink=None,
 ):
     """Converted views — the left-semi complement of q19's anti join:
@@ -1555,42 +1436,13 @@ def q20_semi_join_stream(
     duplicate emission for multi-purchase users), and the time bound +
     watermark let the join evict both buffers — bounded state at any
     scale. Returns (sink, query)."""
-    ckpt = _checkpoint_dir()
-    ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("rowtime").alias("view_time"),
-        )
-        .withWatermark("view_time", WATERMARK)
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("rowtime").alias("purchase_time"),
-        )
-        .withWatermark("purchase_time", WATERMARK)
-    )
-    converted = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_time") >= F.col("view_time"))
-        & (
-            F.col("purchase_time")
-            <= F.col("view_time") + F.expr(f"INTERVAL {within_ms} MILLISECONDS")
-        ),
-        "leftSemi",
-    ).select(
+    joined, ckpt = _interval_join(spark, sf_dir, speed, "view", "leftSemi")
+    converted = joined.select(
         "view_id",
         "user_id",
         F.unix_millis("view_time").alias("view_ms"),
     )
     if sink is None:
-        from table_demo_spark.streaming.upsert import MemoryUpsertSink
-
         sink = MemoryUpsertSink(("view_id",))
     return sink, _start_append(converted, sink, ckpt)
 
@@ -1625,7 +1477,6 @@ def run_q21_dead_letter(
     sf_dir: str,
     counts: "ParquetCountSink | None" = None,
     dlq: "ParquetBatchArchive | None" = None,
-    files_per_trigger: int = 2,
 ):
     """Dirty gzip-CSV stream with a dead-letter queue: lines failing
     ``TaxiRide.fromString``'s validation (taxi_csv.is_valid_ride_line)
@@ -1636,7 +1487,6 @@ def run_q21_dead_letter(
     streaming analog of src_s5's corrupt-record quarantine.
     Returns (counts, dlq, query)."""
 
-    from table_demo_spark.functions.taxi import in_nyc, to_cell_id
     from table_demo_spark.sources.taxi_csv import (
         ensure_rides_csv_gz,
         is_valid_ride_line,
@@ -1645,11 +1495,7 @@ def run_q21_dead_letter(
 
     path = ensure_rides_csv_gz(spark, sf_dir, dirty=True)
     ckpt = _checkpoint_dir()
-    lines = (
-        spark.readStream.option("maxFilesPerTrigger", files_per_trigger)
-        .text(path)
-        .withColumnRenamed("value", "line")
-    )
+    lines = _csv_lines(spark, path)
     counts = counts if counts is not None else ParquetCountSink(
         scratch_dir("tds-q21-counts-"), ("cell",)
     )
@@ -1674,11 +1520,7 @@ def run_q21_dead_letter(
         finally:
             batch_df.unpersist()
 
-    query = start_stream(
-        lines.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(handle)
-    )
+    query = _start_foreach(lines, ckpt, handle)
     return counts, dlq, query
 
 
@@ -1686,7 +1528,6 @@ def q22_full_outer_join_stream(
     spark: SparkSession,
     sf_dir: str,
     speed: float = 2_000_000.0,
-    within_ms: int = 10 * 60_000,
     sink=None,
 ):
     """Full-outer click<->purchase attribution — completes the
@@ -1699,36 +1540,8 @@ def q22_full_outer_join_stream(
     window closes at its own timestamp). Both emissions ARE the state
     evictions — neither buffer outlives the interval + watermark
     horizon. Returns (sink, query)."""
-    ckpt = _checkpoint_dir()
-    ev = stream_events_typed(spark, sf_dir, speed, frontier_key=ckpt)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("rowtime").alias("click_time"),
-        )
-        .withWatermark("click_time", WATERMARK)
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("rowtime").alias("purchase_time"),
-        )
-        .withWatermark("purchase_time", WATERMARK)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_time") >= F.col("click_time"))
-        & (
-            F.col("purchase_time")
-            <= F.col("click_time") + F.expr(f"INTERVAL {within_ms} MILLISECONDS")
-        ),
-        "fullOuter",
-    ).select(
+    joined, ckpt = _interval_join(spark, sf_dir, speed, "click", "fullOuter")
+    joined = joined.select(
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
         F.coalesce(F.col("click_id"), F.lit(-1)).alias("click_id"),
         F.coalesce(F.col("purchase_id"), F.lit(-1)).alias("purchase_id"),
@@ -1861,8 +1674,6 @@ class BucketedStateStore:
         return f"{self.base}_g{self.gen}"
 
     def _path(self, gen: int) -> str:
-        import os
-
         return os.path.join(self.root, f"g{gen}")
 
     def exists(self) -> bool:
@@ -1932,7 +1743,6 @@ class BucketedStateStore:
         TTLs ride LSM compactions. The new generation is written to a
         different location before the old table is dropped, so a
         failure mid-compaction leaves the old generation intact."""
-        import shutil
 
         if not self.exists():
             return
@@ -1977,8 +1787,6 @@ class BucketedStateStore:
         self.appends_since_compact = 0
 
     def drop(self) -> None:
-        import shutil
-
         self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
         shutil.rmtree(self.root, ignore_errors=True)
 
@@ -2044,52 +1852,92 @@ def q25_verify(
     )
 
 
-def _ensure_table_shards(
-    spark: SparkSession, sf_dir: str, table: str, key_col: str, n_shards: int
-) -> str:
-    """Stage a fixture table as n_shards parquet files (one
-    micro-batch each under maxFilesPerTrigger=1), once, cached by
-    fixture identity."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+_N_SHARDS = 4  # doc and embedding shards: one micro-batch each
+_DOC_SHARD_SCHEMA = "doc_id long, text string, source string"
+_VEC_SHARD_SCHEMA = "vec_id long, embedding array<float>, label int"
 
+
+def _fixture_key(sf_dir: str, table: str, *shape) -> tuple[str, str]:
+    """(path of the fixture table, build-cache key naming it and
+    ``shape``): the key changes when the fixture file does."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    st = os.stat(src)
+    return src, repr((os.path.abspath(src), st.st_mtime_ns, st.st_size, *shape))
+
+
+def _write_file_shards(path: str, shards: list, mtime: float) -> None:
+    """Write each frame of ``shards`` as the single file
+    ``path/shard-<i>.parquet``, with mtimes increasing in shard order:
+    FileStreamSource processes oldest-mtime first, so a
+    maxFilesPerTrigger=1 stream reads the shards in order."""
+    os.makedirs(path)
+    for i, df in enumerate(shards):
+        part_dir = os.path.join(path, f"_s{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(part_dir)
+        shard = os.path.join(path, f"shard-{i}.parquet")
+        os.rename(glob.glob(os.path.join(part_dir, "part-*.parquet"))[0], shard)
+        shutil.rmtree(part_dir)
+        os.utime(shard, (mtime + 10 * i, mtime + 10 * i))
+
+
+def _ensure_table_shards(
+    spark: SparkSession, sf_dir: str, table: str, key_col: str
+) -> str:
+    """Stage a fixture table as _N_SHARDS parquet files (one
+    micro-batch each under maxFilesPerTrigger=1), once per fixture
+    (native_cache.cached_build)."""
+    from table_demo_spark.native_cache import cached_build
     from table_demo_spark.sources.batch import _ensure_session_confs
 
     _ensure_session_confs(spark)  # incl. shipping the package to workers
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        repr((os.path.abspath(src), st.st_mtime_ns, st.st_size, n_shards)).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), f"{table}-shards-{os.getuid()}-{digest}"
+    src, key = _fixture_key(sf_dir, table, _N_SHARDS)
+
+    def build(path: str) -> None:
+        (
+            spark.read.parquet(src)
+            .repartitionByRange(_N_SHARDS, key_col)
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+
+    return cached_build(f"{table}-shards", key, build)
+
+
+def ensure_docs_shards(spark: SparkSession, sf_dir: str) -> str:
+    return _ensure_table_shards(spark, sf_dir, "documents", "doc_id")
+
+
+def ensure_embeddings_shards(spark: SparkSession, sf_dir: str) -> str:
+    return _ensure_table_shards(spark, sf_dir, "embeddings", "vec_id")
+
+
+def _shard_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """readStream over staged shard files, one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
-    if os.path.isdir(final):
-        return final
-    staging = tempfile.mkdtemp(prefix=f"{table}-shards-stage-")
-    (
-        spark.read.parquet(src)
-        .repartitionByRange(n_shards, key_col)
-        .write.mode("overwrite")
-        .parquet(staging)
+
+
+def _doc_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _shard_stream(
+        spark, ensure_docs_shards(spark, sf_dir), _DOC_SHARD_SCHEMA
     )
-    try:
-        os.rename(staging, final)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # concurrent stager won
-    return final
 
 
-def ensure_docs_shards(spark: SparkSession, sf_dir: str, n_shards: int = 4) -> str:
-    return _ensure_table_shards(spark, sf_dir, "documents", "doc_id", n_shards)
-
-
-def ensure_embeddings_shards(
-    spark: SparkSession, sf_dir: str, n_shards: int = 4
-) -> str:
-    return _ensure_table_shards(spark, sf_dir, "embeddings", "vec_id", n_shards)
+def _doc_shard_ingest(
+    spark: SparkSession, sf_dir: str, transform, sink, prefix: str
+):
+    """A stateless append ingest over the staged doc shards:
+    ``transform`` maps the doc stream, and each micro-batch appends to
+    ``sink`` (default: a native parquet append sink in a fresh
+    ``prefix`` scratch directory). No state store, no watermark,
+    O(batch) per trigger. Returns (sink, query)."""
+    out = transform(_doc_shard_stream(spark, sf_dir))
+    if sink is None:
+        sink = ParquetAppendSink(scratch_dir(prefix))
+    return sink, sink.bind_stream(out, _checkpoint_dir())
 
 
 def ensure_q33_shards(spark: SparkSession, sf_dir: str) -> str:
@@ -2102,79 +1950,49 @@ def ensure_q33_shards(spark: SparkSession, sf_dir: str) -> str:
     deterministic 3/3 under scrambled write order), and the range
     split makes "generation" a pure function of vec_id — exactly what
     the DuckDB oracle states."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    from pyspark.sql import Window
 
+    from table_demo_spark.native_cache import cached_build
     from table_demo_spark.sources.batch import _ensure_session_confs, load_table
 
     _ensure_session_confs(spark)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        repr(
-            (os.path.abspath(src), st.st_mtime_ns, st.st_size, "q33-rank")
-        ).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), f"q33-shards-{os.getuid()}-{digest}"
-    )
-    if os.path.isdir(final):
-        return final
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    s = (n + 3) // 4
-    # RANK-based boundaries, not value ranges: vec_ids need not be
-    # dense (the 10x fixture key-shifts them), and the oracle states
-    # the same split via row_number. The global-window sort is fixture
-    # STAGING cost only (at production scale this is one
-    # repartitionByRange write).
-    from pyspark.sql import Window
+    src, key = _fixture_key(sf_dir, "embeddings", "q33-rank")
 
-    ranked = emb.select(
-        "vec_id",
-        F.row_number().over(Window.orderBy("vec_id")).alias("rn"),
-    )
-    cuts = {
-        int(r["rn"]): int(r["vec_id"])
-        for r in ranked.filter(
-            F.col("rn").isin([s, 2 * s, 3 * s])
-        ).collect()
-    }
-    hi = [cuts.get(s), cuts.get(2 * s), cuts.get(3 * s)]  # None => +inf
-    staging = tempfile.mkdtemp(prefix="q33-shards-stage-")
-    for i in range(4):
-        part_dir = os.path.join(staging, f"_s{i}")
-        if i > 0 and hi[i - 1] is None:
-            cond = F.lit(False)  # fewer than i*s rows: shard is empty
-        else:
-            cond = F.lit(True)
-            if i > 0:
-                cond = cond & (F.col("vec_id") > hi[i - 1])
-            if i < 3 and hi[i] is not None:
-                cond = cond & (F.col("vec_id") <= hi[i])
-        (
-            emb.filter(cond)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        n = emb.count()
+        s = (n + 3) // 4
+        # RANK-based boundaries, not value ranges: vec_ids need not be
+        # dense (the 10x fixture key-shifts them), and the oracle
+        # states the same split via row_number. The global-window sort
+        # is fixture STAGING cost only (at production scale this is
+        # one repartitionByRange write).
+        ranked = emb.select(
+            "vec_id",
+            F.row_number().over(Window.orderBy("vec_id")).alias("rn"),
         )
-        pf = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        os.rename(pf, os.path.join(staging, f"shard-{i}.parquet"))
-        shutil.rmtree(part_dir)
-    base = st.st_mtime  # stable across rebuilds of the same fixture
-    for i in range(4):
-        os.utime(
-            os.path.join(staging, f"shard-{i}.parquet"),
-            (base + 10 * i, base + 10 * i),
-        )
-    try:
-        os.rename(staging, final)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # concurrent stager won
-    return final
+        cuts = {
+            int(r["rn"]): int(r["vec_id"])
+            for r in ranked.filter(
+                F.col("rn").isin([s, 2 * s, 3 * s])
+            ).collect()
+        }
+        hi = [cuts.get(s), cuts.get(2 * s), cuts.get(3 * s)]  # None => +inf
+        shards = []
+        for i in range(4):
+            if i > 0 and hi[i - 1] is None:
+                cond = F.lit(False)  # fewer than i*s rows: shard is empty
+            else:
+                cond = F.lit(True)
+                if i > 0:
+                    cond = cond & (F.col("vec_id") > hi[i - 1])
+                if i < 3 and hi[i] is not None:
+                    cond = cond & (F.col("vec_id") <= hi[i])
+            shards.append(emb.filter(cond))
+        # mtimes stable across rebuilds of the same fixture
+        _write_file_shards(path, shards, os.stat(src).st_mtime)
+
+    return cached_build("q33-shards", key, build)
 
 
 Q33_RETRAIN_AFTER_BATCH = 1  # retrain once batches 0..1 (vec_id < 2S) landed
@@ -2207,7 +2025,6 @@ def _q33_make_apply(sink, cent0):
 
     Returns (state, apply)."""
     import glob as _glob
-    import os
 
     from table_demo_spark.operators import similarity
 
@@ -2318,7 +2135,6 @@ def run_q33_centroid_drift(
     Returns (sink, query)."""
     from table_demo_spark.operators import similarity
     from table_demo_spark.sources.batch import load_table
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
     emb = load_table(spark, sf_dir, "embeddings")
     cent0 = [
@@ -2327,11 +2143,8 @@ def run_q33_centroid_drift(
         .select("vec_id", "embedding")
         .collect()
     ]
-    shards = ensure_q33_shards(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
+    stream = _shard_stream(
+        spark, ensure_q33_shards(spark, sf_dir), _VEC_SHARD_SCHEMA
     )
     if sink is None:
         sink = ParquetAppendSink(
@@ -2339,12 +2152,7 @@ def run_q33_centroid_drift(
         )
     _, apply = _q33_make_apply(sink, cent0)
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
-    )
-    return sink, query
+    return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
 
 
 # ---------------------------------------------------------------------------
@@ -2362,33 +2170,43 @@ def run_q33_centroid_drift(
 # ---------------------------------------------------------------------------
 
 
+def _corpus_rollup(
+    spark: SparkSession, sf_dir: str, files_per_trigger: int | None = None
+) -> DataFrame:
+    """Per-(lang, source) doc count and char sum over the staged doc
+    shards (q27, q42); all available shards in one micro-batch unless
+    ``files_per_trigger`` is set."""
+    reader = spark.readStream.schema(
+        "doc_id long, lang string, source string, n_chars long"
+    )
+    if files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return (
+        reader.parquet(ensure_docs_shards(spark, sf_dir))
+        .groupBy("lang", "source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
+        )
+    )
+
+
 def run_q27_available_now(
     spark: SparkSession,
     sf_dir: str,
     sink=None,
-    n_shards: int = 4,
     checkpoint: str | None = None,
 ):
     """One AvailableNow invocation of the per-(lang, source) corpus
     rollup. Returns (sink, query, checkpoint); the query terminates on
     its own once all currently-available shards are processed."""
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
     if sink is None:
         sink = ParquetUpsertSink(
             scratch_dir("tds-q27-"), ("lang", "source")
         )
     ckpt = checkpoint or _checkpoint_dir()
-    docs = spark.readStream.schema(
-        "doc_id long, lang string, source string, n_chars long"
-    ).parquet(shards)
-    agg = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
     query = start_stream(
-        agg.writeStream.outputMode("update")
+        _corpus_rollup(spark, sf_dir).writeStream.outputMode("update")
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .foreachBatch(sink.foreach_batch())
@@ -2412,14 +2230,7 @@ def run_q27_available_now(
 _Q26_ITERS = 8
 
 
-def run_q26_stream_tokenize(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-    iters: int = _Q26_ITERS,
-):
+def run_q26_stream_tokenize(spark: SparkSession, sf_dir: str, sink=None):
     """Learn merges on the hash sample (batch), then tokenize the
     staged crawl shards continuously. Returns (sink, query)."""
     from table_demo_spark.operators.bpe import bpe_apply_vocab, bpe_learn
@@ -2429,21 +2240,12 @@ def run_q26_stream_tokenize(
     docs_batch = load_table(spark, sf_dir, "documents")
     merges = bpe_learn(
         hash_sample(docs_batch, 0.25, key_col="doc_id", salt="bpetrain"),
-        iters=iters,
+        iters=_Q26_ITERS,
     )
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
+    return _doc_shard_ingest(
+        spark, sf_dir, lambda docs: bpe_apply_vocab(docs, merges), sink,
+        "tds-q26-",
     )
-    out = bpe_apply_vocab(stream, merges)
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q26-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
 # ---------------------------------------------------------------------------
@@ -2463,39 +2265,24 @@ def run_q26_stream_tokenize(
 # ---------------------------------------------------------------------------
 
 
-def run_q28_media_decode(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q28_media_decode(spark: SparkSession, sf_dir: str, sink=None):
     """Continuously decode the staged crawl shards' media payloads.
     Returns (sink, query)."""
     from table_demo_spark.operators import multimodal
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: multimodal.jpeg_dc_stats(
+            multimodal.with_jpeg_payload(docs.select("doc_id"))
+        ),
+        sink, "tds-q28-",
     )
-    out = multimodal.jpeg_dc_stats(multimodal.with_jpeg_payload(docs))
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q28-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
 def run_q37_dict_ingest(
     spark: SparkSession,
     sf_dir: str,
     sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
 ):
     """Dictionary-compressed SHARD WRITING at ingest (t35's streaming
     leg — how a 100 TB corpus store is actually produced): per-source
@@ -2508,18 +2295,10 @@ def run_q37_dict_ingest(
     from table_demo_spark.sources.batch import load_table
 
     dicts = compress.train_source_dicts(load_table(spark, sf_dir, "documents"))
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
+    sink, query = _doc_shard_ingest(
+        spark, sf_dir, lambda docs: compress.compress_frames(docs, dicts),
+        sink, "tds-q37-",
     )
-    out = compress.compress_frames(docs, dicts)
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q37-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
     return sink, query, dicts
 
 
@@ -2527,8 +2306,6 @@ def run_q30_color_media_decode(
     spark: SparkSession,
     sf_dir: str,
     sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
 ):
     """q28's continuous-decode shape over the COLOR (4:2:0) codec:
     each arriving shard's documents get a real 3-component JFIF
@@ -2537,22 +2314,13 @@ def run_q30_color_media_decode(
     no watermark, O(batch) per trigger. Returns (sink, query)."""
     from table_demo_spark.operators import multimodal
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: multimodal.color_jpeg_dc_stats(
+            multimodal.with_color_jpeg_payload(docs.select("doc_id"))
+        ),
+        sink, "tds-q30-",
     )
-    out = multimodal.color_jpeg_dc_stats(
-        multimodal.with_color_jpeg_payload(docs)
-    )
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q30-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
 def q35_candidate_read(
@@ -2634,22 +2402,17 @@ def run_q35_graph_ingest(
     the pre-crash prefix regardless of what later batches left behind.
 
     Returns (sink, query); sink holds (b, src, dst, w, rank)."""
-    import os
 
     from pyspark.sql import Window
 
     from table_demo_spark.operators import similarity
     from table_demo_spark.queries.llmops import _S18_M, _rp_bucket_col
     from table_demo_spark.sources.batch import load_table
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
     n_total = load_table(spark, sf_dir, "embeddings").count()
     bits = similarity.graph_bits(n_total)
-    shards = ensure_q33_shards(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
+    stream = _shard_stream(
+        spark, ensure_q33_shards(spark, sf_dir), _VEC_SHARD_SCHEMA
     )
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q35-"), ("b",))
@@ -2752,12 +2515,7 @@ def run_q35_graph_ingest(
         )
         seen.unpersist()
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
-    )
-    return sink, query
+    return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
 
 
 Q36_TARGET_BUCKET = 16  # demo-scaled mean occupancy: the sf fixtures
@@ -2773,8 +2531,6 @@ def q36_active_gen(session: SparkSession, meta_dir: str, batch_id: int):
     replayed reshard batch must redo its own reshard from the prior
     generation, not resume on top of its half-written one. Returns
     (gen, bits) or None before the first generation exists."""
-    import glob
-    import os
 
     if not glob.glob(os.path.join(meta_dir, "g=*", "*.parquet")):
         return None
@@ -2808,7 +2564,6 @@ def graph_gen_apply(
     to the active generation.  All writes are static whole-subtree
     overwrites keyed by (g, batch), so a replayed batch redoes itself
     byte-stably (the q33/q36 restart discipline)."""
-    import os
 
     from pyspark.sql import Window
 
@@ -2973,8 +2728,6 @@ def graph_gen_apply(
     seen.unpersist()
 
 
-
-
 def run_q36_graph_reshard(
     spark: SparkSession, sf_dir: str, sink=None, checkpoint: str | None = None
 ):
@@ -3008,13 +2761,8 @@ def run_q36_graph_reshard(
     old generations are dead directories for a janitor, never read.
 
     Returns (sink, query); sink holds (g, b, src, dst, w, rank)."""
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-    shards = ensure_q33_shards(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
+    stream = _shard_stream(
+        spark, ensure_q33_shards(spark, sf_dir), _VEC_SHARD_SCHEMA
     )
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q36-"), ("g", "b"))
@@ -3031,12 +2779,7 @@ def run_q36_graph_reshard(
             vec_dir, meta_dir, sink.path, Q36_TARGET_BUCKET,
         )
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
-    )
-    return sink, query
+    return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
 
 
 def q36_final_edges(spark: SparkSession, sink) -> DataFrame:
@@ -3074,16 +2817,11 @@ def run_q38_hnsw_ingest(
     (llm_s25 closes the serve leg).
 
     Returns (sink, query); sink holds (lv, g, b, src, dst, w, rank)."""
-    import os
 
     from table_demo_spark.queries.llmops import _S23_MAXL, _s23_layer_col
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
-    shards = ensure_q33_shards(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
+    stream = _shard_stream(
+        spark, ensure_q33_shards(spark, sf_dir), _VEC_SHARD_SCHEMA
     )
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q38-"), ("lv", "g", "b"))
@@ -3110,12 +2848,7 @@ def run_q38_hnsw_ingest(
                 Q36_TARGET_BUCKET,
             )
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
-    )
-    return sink, query
+    return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
 
 
 def q38_final_edges(spark: SparkSession, sink) -> DataFrame:
@@ -3147,9 +2880,68 @@ def q38_final_edges(spark: SparkSession, sink) -> DataFrame:
     return out.select("lv", "src", "dst", "rank")
 
 
+def _is_eval_doc():
+    """llm_p16's eval split, used by the decontamination ingests (q39,
+    q41): the docs whose md5(doc_id || '#split16') starts with 0 or 1."""
+    return F.substring(
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#split16"))),
+        1, 1,
+    ).isin("0", "1")
+
+
+def _write_eval_fingerprints(
+    spark: SparkSession, docs: DataFrame, fp_dir: str
+) -> None:
+    """Offline: the eval set's fingerprint store (bounded by the eval
+    set, not the stream): shingle sets under ``fp_dir/sh``, banded
+    minhash keys under ``fp_dir/bands``.  Bands derive from the WRITTEN
+    shingle store, not the lazy frame — one corpus scan + shingle pass
+    instead of two (r16, guide §2.3/§5; same artifacts byte-wise: the
+    store IS the shingle frame's rows)."""
+    from table_demo_spark.operators import dedup
+
+    dedup.shingle_sets(docs.filter(_is_eval_doc()), 2).write.mode(
+        "overwrite"
+    ).parquet(fp_dir + "/sh")
+    dedup.band_keys_frame(
+        dedup.minhash_signatures(spark.read.parquet(fp_dir + "/sh"))
+    ).write.mode("overwrite").parquet(fp_dir + "/bands")
+
+
+def _contaminated(session: SparkSession, fp_dir: str, sh: DataFrame):
+    """(doc_id, __q = true) for each doc of the shingle frame ``sh``
+    that near-duplicates an eval doc: band equi-join against the
+    fingerprint store, then exact Jaccard >= JACCARD_THRESHOLD over the
+    stored shingle sets."""
+    from table_demo_spark.operators import dedup
+    from table_demo_spark.queries.llmops import JACCARD_THRESHOLD
+
+    bands = dedup.band_keys_frame(dedup.minhash_signatures(sh))
+    tb = session.read.parquet(fp_dir + "/bands").select(
+        "band", "key", F.col("doc_id").alias("test_id")
+    )
+    cand = bands.join(tb, ["band", "key"]).select("doc_id", "test_id").distinct()
+    tshr = session.read.parquet(fp_dir + "/sh").select(
+        F.col("doc_id").alias("test_id"), F.col("shingles").alias("sh_b")
+    )
+    j = cand.join(
+        sh.select("doc_id", F.col("shingles").alias("sh_a")), "doc_id"
+    ).join(tshr, "test_id")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        j.filter(
+            inter.cast("double") / union.cast("double") >= JACCARD_THRESHOLD
+        )
+        .select("doc_id")
+        .distinct()
+        .withColumn("__q", F.lit(True))
+    )
+
+
 def run_q39_decontam_ingest(
     spark: SparkSession, sf_dir: str, sink=None,
-    checkpoint: str | None = None, n_shards: int = 4,
+    checkpoint: str | None = None,
 ):
     """DECONTAMINATION AT INGEST — llm_p16's streaming leg, the shape
     a production crawl actually runs: the EVAL set's near-dup
@@ -3167,89 +2959,32 @@ def run_q39_decontam_ingest(
     verify code — so the oracle is p16's SQL verbatim: streaming ==
     batch on one hash chain.  Returns (sink, query)."""
     from table_demo_spark.operators import dedup
-    from table_demo_spark.queries.llmops import JACCARD_THRESHOLD
     from table_demo_spark.sources.batch import load_table
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q39-"), ("b",))
     fp_dir = sink.path.rstrip("/") + "-evalfp"
 
-    def is_test_col():
-        return F.substring(
-            F.md5(
-                F.concat(F.col("doc_id").cast("string"), F.lit("#split16"))
-            ),
-            1, 1,
-        ).isin("0", "1")
-
-    # offline: the eval set's fingerprint store (bounded by the eval
-    # set, not the stream).  Bands derive from the WRITTEN shingle
-    # store, not the lazy frame — one corpus scan + shingle pass
-    # instead of two (r16, guide §2.3/§5; same artifacts byte-wise:
-    # the store IS tsh's rows).
-    docs = load_table(spark, sf_dir, "documents")
-    tsh = dedup.shingle_sets(docs.filter(is_test_col()), 2)
-    tsh.write.mode("overwrite").parquet(fp_dir + "/sh")
-    dedup.band_keys_frame(
-        dedup.minhash_signatures(spark.read.parquet(fp_dir + "/sh"))
-    ).write.mode("overwrite").parquet(fp_dir + "/bands")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
+    _write_eval_fingerprints(
+        spark, load_table(spark, sf_dir, "documents"), fp_dir
     )
+
+    stream = _doc_shard_stream(spark, sf_dir)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        import os
-
         session = batch_df.sparkSession
         arr = (
             batch_df.select("doc_id", "text")
-            .withColumn("is_test", is_test_col())
+            .withColumn("is_test", _is_eval_doc())
             .persist()
         )
         try:
             train = arr.filter(~F.col("is_test")).select("doc_id", "text")
             sh = dedup.shingle_sets(train, 2).persist()
             try:
-                bands = dedup.band_keys_frame(dedup.minhash_signatures(sh))
-                tb = session.read.parquet(fp_dir + "/bands").select(
-                    "band", "key", F.col("doc_id").alias("test_id")
-                )
-                cand = (
-                    bands.join(tb, ["band", "key"])
-                    .select("doc_id", "test_id")
-                    .distinct()
-                )
-                tshr = session.read.parquet(fp_dir + "/sh").select(
-                    F.col("doc_id").alias("test_id"),
-                    F.col("shingles").alias("sh_b"),
-                )
-                j = (
-                    cand.join(
-                        sh.select(
-                            "doc_id", F.col("shingles").alias("sh_a")
-                        ),
-                        "doc_id",
-                    )
-                    .join(tshr, "test_id")
-                )
-                inter = F.size(F.array_intersect("sh_a", "sh_b"))
-                union = F.size("sh_a") + F.size("sh_b") - inter
-                quar = (
-                    j.filter(
-                        inter.cast("double") / union.cast("double")
-                        >= JACCARD_THRESHOLD
-                    )
-                    .select("doc_id")
-                    .distinct()
-                    .withColumn("__q", F.lit(True))
-                )
+                quar = _contaminated(session, fp_dir, sh)
                 (
                     arr.join(quar, "doc_id", "left")
                     .select(
@@ -3267,17 +3002,28 @@ def run_q39_decontam_ingest(
         finally:
             arr.unpersist()
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
+    return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
+
+
+def _mix_draw():
+    """llm_p17's deterministic per-doc draw in 2^-20 units (q40, q41):
+    the first 15 hex digits of md5('mix' || doc_id), mod 2^20. A doc
+    is sampled when its draw is below its source's threshold."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("mix"), F.col("doc_id").cast("string"))),
+                1, 15,
+            ),
+            16, 10,
+        ).cast("long")
+        % (1 << 20)
     )
-    return sink, query
 
 
 def run_q40_mixture_ingest(
     spark: SparkSession, sf_dir: str, sink=None,
-    checkpoint: str | None = None, n_shards: int = 4,
+    checkpoint: str | None = None,
 ):
     """MIXTURE SAMPLING AT INGEST — llm_p17's streaming leg, the
     fourth pipeline op with an ingest form (q26 tokenizes, q37
@@ -3291,12 +3037,9 @@ def run_q40_mixture_ingest(
     samples equals the batch sample REGARDLESS of how arrivals were
     sharded — the oracle is p17's SQL verbatim.  Static b= subtree
     writes keep replays idempotent.  Returns (sink, query)."""
-    import os
 
     from table_demo_spark.sources.batch import load_table
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q40-"), ("b",))
     manifest_dir = sink.path.rstrip("/") + "-manifest"
@@ -3333,35 +3076,17 @@ def run_q40_mixture_ingest(
         .parquet(manifest_dir)
     )
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
-    )
+    stream = _doc_shard_stream(spark, sf_dir)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         session = batch_df.sparkSession
         man = session.read.parquet(manifest_dir).select("source", "thresh")
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("mix"), F.col("doc_id").cast("string")
-                        )
-                    ),
-                    1, 15,
-                ),
-                16, 10,
-            ).cast("long")
-            % (1 << 20)
-        )
         (
             batch_df.select("doc_id", "source")
             .join(F.broadcast(man), "source")
-            .filter(u < F.col("thresh"))
+            .filter(_mix_draw() < F.col("thresh"))
             .groupBy("source")
             .agg(
                 F.count(F.lit(1)).alias("n_sampled"),
@@ -3371,21 +3096,10 @@ def run_q40_mixture_ingest(
             .parquet(os.path.join(sink.path, f"b={batch_id}"))
         )
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
-    )
-    return sink, query
+    return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
 
 
-def run_q34_media_triage(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q34_media_triage(spark: SparkSession, sf_dir: str, sink=None):
     """q28's continuous shape over the STRUCTURE-layer codecs: each
     arriving shard's documents get real MP3 frame sequences and H.264
     Annex B streams built and header-walked (multimodal.media_triage —
@@ -3393,20 +3107,11 @@ def run_q34_media_triage(
     one triage row per doc. Returns (sink, query)."""
     from table_demo_spark.operators import multimodal
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: multimodal.media_triage(docs.select("doc_id")),
+        sink, "tds-q34-",
     )
-    out = multimodal.media_triage(docs)
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q34-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
 # ---------------------------------------------------------------------------
@@ -3428,13 +3133,7 @@ def run_q34_media_triage(
 # ---------------------------------------------------------------------------
 
 
-def run_q29_ann_index_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q29_ann_index_ingest(spark: SparkSession, sf_dir: str, sink=None):
     """Continuously route arriving embeddings into centroid-partitioned
     inverted lists. Returns (sink, query, cent_rows)."""
     from table_demo_spark.operators import similarity
@@ -3449,28 +3148,17 @@ def run_q29_ann_index_ingest(
         .select("vec_id", "embedding")
         .collect()
     ]
-    shards = ensure_embeddings_shards(spark, sf_dir, n_shards)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
+    stream = _shard_stream(
+        spark, ensure_embeddings_shards(spark, sf_dir), _VEC_SHARD_SCHEMA
     )
     lists = similarity.ivf_assign_inline(stream, cent_rows)
     if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
         sink = ParquetAppendSink(scratch_dir("tds-q29-"), ("centroid_id",))
     query = sink.bind_stream(lists, _checkpoint_dir())
     return sink, query, cent_rows
 
 
-def run_q32_phash_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q32_phash_ingest(spark: SparkSession, sf_dir: str, sink=None):
     """Perceptual-hash index maintained AT INGEST (streaming m23):
     each arriving shard's documents get their two real PNG variants
     built, DECODED through the zlib+filter codec path, and aHashed on
@@ -3485,20 +3173,11 @@ def run_q32_phash_ingest(
     (sink, query)."""
     from table_demo_spark.queries.llmops import image_hash_frame
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: image_hash_frame(docs.select("doc_id")),
+        sink, "tds-q32-",
     )
-    out = image_hash_frame(docs)
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q32-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
 def run_q25_streaming_neardup(
@@ -3506,8 +3185,6 @@ def run_q25_streaming_neardup(
     sf_dir: str,
     threshold: float,
     sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
     retention_batches: int | None = None,
     compact_min_rows: int = Q25_COMPACT_MIN_ROWS,
 ):
@@ -3533,16 +3210,8 @@ def run_q25_streaming_neardup(
         minhash_signatures,
         shingle_sets,
     )
-    from table_demo_spark.streaming.upsert import ParquetUpsertSink
-
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
     ckpt = _checkpoint_dir()
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id", "text")
-    )
+    docs = _doc_shard_stream(spark, sf_dir).select("doc_id", "text")
     if sink is None:
         sink = ParquetUpsertSink(scratch_dir("tds-q25-"), ("doc_a", "doc_b"))
     run_id = uuid.uuid4().hex[:10]
@@ -3592,11 +3261,7 @@ def run_q25_streaming_neardup(
         if shingles.should_compact(min_rows=compact_min_rows):
             shingles.compact(["doc_id"], keep=keep)
 
-    query = start_stream(
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(apply)
-    )
+    query = _start_foreach(docs, ckpt, apply)
 
     def cleanup() -> None:
         bands.drop()
@@ -3609,7 +3274,6 @@ def run_q42_state_rollup(
     spark: SparkSession,
     sf_dir: str,
     checkpoint: str | None = None,
-    n_shards: int = 4,
     files_per_trigger: int | None = None,
 ):
     """One AvailableNow invocation of a NATIVE stateful aggregation
@@ -3619,18 +3283,9 @@ def run_q42_state_rollup(
     (``spark.read.format("statestore")``).  Unlike every other drain
     in this module the sink is irrelevant here: the deliverable is the
     checkpoint's state directory itself.  Returns (query, ckpt)."""
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
     ckpt = checkpoint or _checkpoint_dir()
-    reader = spark.readStream.schema(
-        "doc_id long, lang string, source string, n_chars long"
-    )
-    if files_per_trigger:  # multi-batch drains for the version audit
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    docs = reader.parquet(shards)
-    agg = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
+    # files_per_trigger: multi-batch drains for the version audit
+    agg = _corpus_rollup(spark, sf_dir, files_per_trigger)
     query = start_stream(
         agg.writeStream.outputMode("update")
         .format("noop")
@@ -3640,10 +3295,8 @@ def run_q42_state_rollup(
     return query, ckpt
 
 
-def ensure_events_time_shards(
-    spark: SparkSession, sf_dir: str, n_shards: int = 6
-) -> str:
-    """Stage events as n_shards SINGLE-FILE parquet shards in
+def ensure_events_time_shards(spark: SparkSession, sf_dir: str) -> str:
+    """Stage events as Q44_SHARDS SINGLE-FILE parquet shards in
     EVENT-TIME rank order ((ts, event_id) — deterministic under ties)
     with strictly increasing mtimes, so a maxFilesPerTrigger=1 file
     stream consumes them chronologically (FileStreamSource processes
@@ -3652,68 +3305,37 @@ def ensure_events_time_shards(
     watermark/eviction oracle depends on the batch -> time-range
     mapping being a pure function of the fixture, which rank-splitting
     in time order provides: shard i = ranks (i*s, (i+1)*s], s =
-    ceil(N/n_shards) — the exact split the DuckDB oracle restates via
+    ceil(N/Q44_SHARDS) — the exact split the DuckDB oracle restates via
     row_number.  The global sort is fixture STAGING cost only (at
     production scale this is one repartitionByRange write)."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
+    from table_demo_spark.native_cache import cached_build
     from table_demo_spark.sources.batch import (
         _ensure_session_confs,
         load_table,
     )
 
     _ensure_session_confs(spark)
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        repr(
-            (os.path.abspath(src), st.st_mtime_ns, st.st_size,
-             n_shards, "q44-time-rank")
-        ).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), f"q44-shards-{os.getuid()}-{digest}"
-    )
-    if os.path.isdir(final):
-        return final
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    n = ev.count()
-    s = (n + n_shards - 1) // n_shards
-    ranked = ev.withColumn(
-        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-    )
-    staging = tempfile.mkdtemp(prefix="q44-shards-stage-")
-    for i in range(n_shards):
-        part_dir = os.path.join(staging, f"_s{i}")
-        (
+    src, key = _fixture_key(sf_dir, "events", Q44_SHARDS, "q44-time-rank")
+
+    def build(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
+        n = ev.count()
+        s = (n + Q44_SHARDS - 1) // Q44_SHARDS
+        ranked = ev.withColumn(
+            "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
+        )
+        shards = [
             ranked.filter(
                 (F.col("rn") > i * s) & (F.col("rn") <= (i + 1) * s)
-            )
-            .select("event_id", "ts")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
-        )
-        pf = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        os.rename(pf, os.path.join(staging, f"shard-{i}.parquet"))
-        shutil.rmtree(part_dir)
-    base = st.st_mtime  # stable across rebuilds of the same fixture
-    for i in range(n_shards):
-        os.utime(
-            os.path.join(staging, f"shard-{i}.parquet"),
-            (base + 10 * i, base + 10 * i),
-        )
-    try:
-        os.rename(staging, final)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # concurrent stager won
-    return final
+            ).select("event_id", "ts")
+            for i in range(Q44_SHARDS)
+        ]
+        # mtimes stable across rebuilds of the same fixture
+        _write_file_shards(path, shards, os.stat(src).st_mtime)
+
+    return cached_build("q44-shards", key, build)
 
 
 # Single source of truth for q44: the oracle SQL in
@@ -3739,7 +3361,7 @@ def run_q44_watermark_rollup(
     version through the State Data Source reader and audits watermark
     EVICTION (which windows the store still holds at each version),
     not just final contents.  Returns (query, ckpt)."""
-    shards = ensure_events_time_shards(spark, sf_dir, Q44_SHARDS)
+    shards = ensure_events_time_shards(spark, sf_dir)
     ckpt = checkpoint or _checkpoint_dir()
     events = (
         spark.readStream.schema("event_id long, ts timestamp")
@@ -3760,13 +3382,7 @@ def run_q44_watermark_rollup(
     return query, ckpt
 
 
-def run_q45_hevc_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q45_hevc_ingest(spark: SparkSession, sf_dir: str, sink=None):
     """Continuously decode REAL x265 bitstreams at ingest — q43's
     continuous-real-codec shape on the HEVC family, using the m55
     chain: per arriving doc, a deblock-signalled x265 encode, the
@@ -3776,29 +3392,16 @@ def run_q45_hevc_ingest(
     store.  Returns (sink, query)."""
     from table_demo_spark.operators import multimodal
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: multimodal.hevc_slice_decode_stats(
+            docs.select("doc_id"), deblock=True
+        ),
+        sink, "tds-q45-",
     )
-    out = multimodal.hevc_slice_decode_stats(docs, deblock=True)
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q45-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
-def run_q46_bvideo_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q46_bvideo_ingest(spark: SparkSession, sf_dir: str, sink=None):
     """Continuously decode REAL x265 B-frame video at ingest — q45's
     shape on the m60 chain: per arriving doc a fixed-IBBP
     temporal-MVP x265 encode, the from-spec inter decode
@@ -3808,20 +3411,13 @@ def run_q46_bvideo_ingest(
     (sink, query)."""
     from table_demo_spark.operators import multimodal
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: multimodal.hevc_bslice_decode_stats(
+            docs.select("doc_id"), tmvp=True
+        ),
+        sink, "tds-q46-",
     )
-    out = multimodal.hevc_bslice_decode_stats(docs, tmvp=True)
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q46-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query
 
 
 def run_q41_pipeline_ingest(
@@ -3829,7 +3425,6 @@ def run_q41_pipeline_ingest(
     sf_dir: str,
     sink=None,
     checkpoint: str | None = None,
-    n_shards: int = 4,
 ):
     """THE COMPOSED INGEST PIPELINE (r12 VERDICT #5) — the four
     pipeline ops that existed as separate streams run as ONE, the way
@@ -3849,37 +3444,19 @@ def run_q41_pipeline_ingest(
     by |sources|, merges by the iteration count, dictionaries by the
     training cap), so the per-batch cost stays O(batch x collisions).
     Returns (sink, query, dicts)."""
-    import os
 
     from table_demo_spark.operators import compress, dedup
     from table_demo_spark.operators.bpe import bpe_apply_vocab, bpe_learn
     from table_demo_spark.operators.sampling import hash_sample
-    from table_demo_spark.queries.llmops import JACCARD_THRESHOLD
     from table_demo_spark.sources.batch import load_table
-    from table_demo_spark.streaming.upsert import ParquetAppendSink
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q41-"), ("b",))
     fp_dir = sink.path.rstrip("/") + "-evalfp"
 
-    def is_test_col():
-        return F.substring(
-            F.md5(
-                F.concat(F.col("doc_id").cast("string"), F.lit("#split16"))
-            ),
-            1, 1,
-        ).isin("0", "1")
-
     docs = load_table(spark, sf_dir, "documents")
-    # offline artifact 1: eval-set fingerprints (q39's shape — and
-    # q39's r16 rework: bands derive from the WRITTEN shingle store,
-    # one corpus scan + shingle pass instead of two)
-    tsh = dedup.shingle_sets(docs.filter(is_test_col()), 2)
-    tsh.write.mode("overwrite").parquet(fp_dir + "/sh")
-    dedup.band_keys_frame(
-        dedup.minhash_signatures(spark.read.parquet(fp_dir + "/sh"))
-    ).write.mode("overwrite").parquet(fp_dir + "/bands")
+    # offline artifact 1: eval-set fingerprints (q39's)
+    _write_eval_fingerprints(spark, docs, fp_dir)
     # offline artifact 2: the temperature manifest (q40's p17 math,
     # BIGINT-exact), collected — |sources| rows by construction. ONE
     # distributed job (the per-source counts); total/isqrt/quota/thresh
@@ -3921,79 +3498,28 @@ def run_q41_pipeline_ingest(
     )
     dicts = compress.train_source_dicts(docs)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
-    )
+    stream = _doc_shard_stream(spark, sf_dir)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         session = batch_df.sparkSession
-        arr = batch_df.withColumn("is_test", is_test_col()).persist()
+        arr = batch_df.withColumn("is_test", _is_eval_doc()).persist()
         try:
             # stage 1: decontaminate (q39's probe)
             train = arr.filter(~F.col("is_test")).select("doc_id", "text")
             sh = dedup.shingle_sets(train, 2).persist()
             try:
-                bands = dedup.band_keys_frame(dedup.minhash_signatures(sh))
-                tb = session.read.parquet(fp_dir + "/bands").select(
-                    "band", "key", F.col("doc_id").alias("test_id")
-                )
-                cand = (
-                    bands.join(tb, ["band", "key"])
-                    .select("doc_id", "test_id")
-                    .distinct()
-                )
-                tshr = session.read.parquet(fp_dir + "/sh").select(
-                    F.col("doc_id").alias("test_id"),
-                    F.col("shingles").alias("sh_b"),
-                )
-                j = (
-                    cand.join(
-                        sh.select(
-                            "doc_id", F.col("shingles").alias("sh_a")
-                        ),
-                        "doc_id",
-                    )
-                    .join(tshr, "test_id")
-                )
-                inter = F.size(F.array_intersect("sh_a", "sh_b"))
-                union = F.size("sh_a") + F.size("sh_b") - inter
-                quar = (
-                    j.filter(
-                        inter.cast("double") / union.cast("double")
-                        >= JACCARD_THRESHOLD
-                    )
-                    .select("doc_id")
-                    .distinct()
-                    .withColumn("__q", F.lit(True))
-                )
+                quar = _contaminated(session, fp_dir, sh)
                 # stage 2: mixture-sample the CLEAN train docs
                 man = session.createDataFrame(
                     manifest, "source string, thresh long"
-                )
-                u = (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit("mix"),
-                                    F.col("doc_id").cast("string"),
-                                )
-                            ),
-                            1, 15,
-                        ),
-                        16, 10,
-                    ).cast("long")
-                    % (1 << 20)
                 )
                 kept = (
                     arr.filter(~F.col("is_test"))
                     .join(quar, "doc_id", "left_anti")
                     .join(F.broadcast(man), "source")
-                    .filter(u < F.col("thresh"))
+                    .filter(_mix_draw() < F.col("thresh"))
                     .select("doc_id", "text", "source")
                     .persist()
                 )
@@ -4013,21 +3539,11 @@ def run_q41_pipeline_ingest(
         finally:
             arr.unpersist()
 
-    query = start_stream(
-        stream.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint or _checkpoint_dir())
-    )
+    query = _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
     return sink, query, dicts
 
 
-def run_q43_avif_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    sink=None,
-    files_per_trigger: int = 1,
-    n_shards: int = 4,
-):
+def run_q43_avif_ingest(spark: SparkSession, sf_dir: str, sink=None):
     """Continuously decode REAL AVIF media at ingest — q28's
     continuous-decode shape upgraded from the from-spec JPEG chain to
     the third-party codec stack (m47's operators: libaom encode in
@@ -4036,19 +3552,12 @@ def run_q43_avif_ingest(
     store, O(batch) per trigger.  Returns (sink, query)."""
     from table_demo_spark.operators import heif, multimodal
 
-    shards = ensure_docs_shards(spark, sf_dir, n_shards)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(shards)
-        .select("doc_id")
+    return _doc_shard_ingest(
+        spark, sf_dir,
+        lambda docs: multimodal.heif_pixel_stats(
+            multimodal.with_heif_payload(
+                docs.select("doc_id"), heif.COMPRESSION_AV1
+            )
+        ),
+        sink, "tds-q43-",
     )
-    out = multimodal.heif_pixel_stats(
-        multimodal.with_heif_payload(docs, heif.COMPRESSION_AV1)
-    )
-    if sink is None:
-        from table_demo_spark.streaming.upsert import ParquetAppendSink
-
-        sink = ParquetAppendSink(scratch_dir("tds-q43-"))
-    query = sink.bind_stream(out, _checkpoint_dir())
-    return sink, query

@@ -3336,6 +3336,37 @@ def test_avif_three_independent_decoders_agree_bit_exactly():
         assert np.array_equal(a, b), "libavif fast path diverged from libheif"
 
 
+def test_decode_heif_routes_compatible_avif_brand_to_libavif(monkeypatch):
+    """An AVIF whose major brand is ``mif1`` but whose compatible
+    brands list ``avif`` still takes the libavif route: with the
+    libheif route disabled, decode_heif returns libavif+dav1d's
+    planes."""
+    import numpy as np
+
+    heif = _heif_mod()
+    if not heif.avif_decoder_available(heif.AVIF_CODEC_DAV1D):
+        pytest.skip("libavif dav1d decoder not available")
+    rng = np.random.default_rng(80)
+    y = (70 + rng.integers(0, 111, (48, 64))).astype(np.uint8)
+    cb = (108 + rng.integers(0, 41, (24, 32))).astype(np.uint8)
+    cr = (108 + rng.integers(0, 41, (24, 32))).astype(np.uint8)
+    data = heif.encode_heif(
+        y, cb, cr, heif.COMPRESSION_AV1, (("speed", "9"), ("threads", "1"))
+    )
+    assert data[4:12] == b"ftypavif"
+    data = data[:8] + b"mif1" + data[12:]
+
+    def no_libheif(_data):
+        raise AssertionError("routed to libheif")
+
+    monkeypatch.setattr(heif, "_decode_heif_libheif", no_libheif)
+    want = heif.decode_avif_libavif(data, heif.AVIF_CODEC_DAV1D)
+    got = heif.decode_heif(data)
+    for a, b in zip(want, got):
+        assert np.array_equal(a, b)
+    assert np.array_equal(got[0], y)  # lossless
+
+
 def test_heif_negative_paths_fail_loudly():
     """Truncated containers and mid-payload corruption must raise,
     never return planes silently."""

@@ -258,7 +258,7 @@ def test_q3_stream_recovery_does_not_double_apply_deltas(
 
     _, q = run_q3_stream(
         spark, SF_SMOKE, speed=100_000.0, threshold=2,
-        sink=ParquetHistogramSink(sink_path), ckpt=ckpt,
+        sink=ParquetHistogramSink(sink_path), checkpoint=ckpt,
     )
     deadline = time.time() + 60
     while time.time() < deadline:
@@ -270,7 +270,8 @@ def test_q3_stream_recovery_does_not_double_apply_deltas(
 
     sink2 = ParquetHistogramSink(sink_path)  # recovered from disk
     _, q2 = run_q3_stream(
-        spark, SF_SMOKE, speed=SPEED, threshold=2, sink=sink2, ckpt=ckpt
+        spark, SF_SMOKE, speed=SPEED, threshold=2, sink=sink2,
+        checkpoint=ckpt,
     )
     _run_until_done(q2)
 
@@ -1378,7 +1379,7 @@ def test_q25_retention_ttl_limits_pairs_to_window(spark, tmp_path):
 
     def run(**kw):
         sink, query, cleanup = run_q25_streaming_neardup(
-            spark, sf, threshold=JACCARD_THRESHOLD, n_shards=4, **kw
+            spark, sf, threshold=JACCARD_THRESHOLD, **kw
         )
         query.processAllAvailable()
         query.stop()
@@ -1405,7 +1406,7 @@ def test_q25_retention_ttl_limits_pairs_to_window(spark, tmp_path):
     sizes = [
         spark.read.parquet(f).count()
         for f in sorted(
-            glob.glob(os.path.join(ensure_docs_shards(spark, sf, 4), "part-*"))
+            glob.glob(os.path.join(ensure_docs_shards(spark, sf), "part-*"))
         )
     ]
     assert sum(sizes) == 12 and len(sizes) == 4
@@ -2166,7 +2167,7 @@ def test_q44_watermark_eviction_audit_semantics(spark, tmp_path):
     # per-shard maxima via the staged files themselves
     from table_demo_spark.streaming.queries import ensure_events_time_shards
 
-    sd = ensure_events_time_shards(spark, SF_SMOKE, Q44_SHARDS)
+    sd = ensure_events_time_shards(spark, SF_SMOKE)
     for i in range(Q44_SHARDS):
         m = (
             spark.read.parquet(os.path.join(sd, f"shard-{i}.parquet"))

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Time named queries() entries across fixture dirs — the
-docs/SCALE.md measurement harness (solo runs, warm session, noop-sink
-forcing like bench.py; run NOTHING else Spark-shaped concurrently).
+docs/SCALE.md measurement harness and the solo per-query probe (warm
+session with bench.py's warm-up, noop-sink forcing like bench.py; run
+NOTHING else Spark-shaped concurrently).
 
 Usage:
     python tools/scale_probe.py q1,q2,... dir1 [dir2 ...]
@@ -30,12 +31,21 @@ def main() -> None:
     spark = get_spark(app_name="scale_probe")
     registry = {q.name: q.spark_fn for q in all_queries()}
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # Arrow/pandas worker warm-up, as in bench.py: the first MapInPandas
+    # stage pays Python-worker spawn + Arrow init (~1 s), which would
+    # otherwise land on the first codec query timed. It runs on the
+    # smallest sibling fixture when there is one.
+    warm = os.path.join(os.path.dirname(os.path.abspath(dirs[0])), "sf0.001")
+    registry["llm_m11_decoded_luma"](
+        spark, warm if os.path.isdir(warm) else dirs[0]
+    ).write.format("noop").mode("overwrite").save()
 
     out: dict[str, dict[str, float]] = {}
     for d in dirs:
         for t in TABLES:
             load_table(spark, d, t).count()
         for name in names:
+            spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.perf_counter()
             registry[name](spark, d).write.format("noop").mode(
                 "overwrite"
