@@ -1,6 +1,8 @@
 """Build-once cache for artifacts the engine builds at run time: the
 HEVC C kernel and the local file system's Java classes it compiles,
-and the staged shard fixtures the file-stream queries read.
+and the fixtures staged from the parquet tables (stream shards, the
+format and gzip-CSV copies the source readers read), keyed by
+``fixture_key``.
 
 An artifact is built once per machine under
 ``tempfile.gettempdir()/tds_native``, named by the md5 of everything
@@ -42,3 +44,11 @@ def cached_build(name: str, key: str, build: Callable[[str], None]) -> str:
             elif os.path.exists(tmp):
                 os.remove(tmp)
     return out
+
+
+def fixture_key(sf_dir: str, table: str, *shape) -> tuple[str, str]:
+    """(path of the fixture table, build-cache key naming it and
+    ``shape``): the key changes when the fixture file does."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    st = os.stat(src)
+    return src, repr((os.path.abspath(src), st.st_mtime_ns, st.st_size, *shape))

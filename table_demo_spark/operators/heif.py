@@ -322,11 +322,11 @@ def _avif_brand(data: bytes) -> bool:
     return b"avif" in brands
 
 
-def _decode_heif_libheif(data: bytes):
-    """The libheif-plugin decode path (dav1d for AVIF, libde265 for
-    HEIC) — the pre-r16 :func:`decode_heif` body, kept as the HEIC
-    route, the no-libavif fallback, and the A/B reference for the
-    libavif fast path's bit-equality pin."""
+def _libheif_decode(data: bytes, colorspace: int, chroma: int, read):
+    """libheif's decode of the container's primary image at
+    ``colorspace``/``chroma``: returns ``read(h, img, height, width)``,
+    the plane read, before the image, handle and context are
+    released. Raises ValueError on any container/codec error."""
     h = _heif()
     ctx = h.heif_context_alloc()
     handle = ctypes.c_void_p()
@@ -349,23 +349,34 @@ def _decode_heif_libheif(data: bytes):
         ph = h.heif_image_handle_get_height(handle)
         _ck(
             h.heif_decode_image(
-                handle, ctypes.byref(img), COLORSPACE_YCBCR,
-                CHROMA_420, None,
+                handle, ctypes.byref(img), colorspace, chroma, None
             ),
             "decode_image",
         )
-        ch, cw = (ph + 1) // 2, (pw + 1) // 2
-        return (
-            _read_plane(h, img, CHANNEL_Y, ph, pw),
-            _read_plane(h, img, CHANNEL_CB, ch, cw),
-            _read_plane(h, img, CHANNEL_CR, ch, cw),
-        )
+        return read(h, img, ph, pw)
     finally:
         if img:
             h.heif_image_release(img)
         if handle:
             h.heif_image_handle_release(handle)
         h.heif_context_free(ctx)
+
+
+def _decode_heif_libheif(data: bytes):
+    """The libheif-plugin decode path (dav1d for AVIF, libde265 for
+    HEIC) — the pre-r16 :func:`decode_heif` body, kept as the HEIC
+    route, the no-libavif fallback, and the A/B reference for the
+    libavif fast path's bit-equality pin."""
+
+    def planes(h, img, ph, pw):
+        ch, cw = (ph + 1) // 2, (pw + 1) // 2
+        return (
+            _read_plane(h, img, CHANNEL_Y, ph, pw),
+            _read_plane(h, img, CHANNEL_CB, ch, cw),
+            _read_plane(h, img, CHANNEL_CR, ch, cw),
+        )
+
+    return _libheif_decode(data, COLORSPACE_YCBCR, CHROMA_420, planes)
 
 
 def decode_heif_rgb(data: bytes):
@@ -373,55 +384,13 @@ def decode_heif_rgb(data: bytes):
     (h, w, 3) RGB array using libheif's OWN colour conversion
     (colorspace RGB / chroma interleaved 24-bit) — the third-party
     CSC, not a hand-rolled matrix."""
-    import numpy as np
-
     COLORSPACE_RGB, CHROMA_INTERLEAVED_RGB, CHANNEL_INTERLEAVED = 1, 10, 10
-    h = _heif()
-    ctx = h.heif_context_alloc()
-    handle = ctypes.c_void_p()
-    img = ctypes.c_void_p()
-    buf = ctypes.create_string_buffer(bytes(data), len(data))
-    try:
-        _ck(
-            h.heif_context_read_from_memory_without_copy(
-                ctx, buf, len(data), None
-            ),
-            "read_from_memory",
-        )
-        _ck(
-            h.heif_context_get_primary_image_handle(
-                ctx, ctypes.byref(handle)
-            ),
-            "get_primary_image_handle",
-        )
-        pw = h.heif_image_handle_get_width(handle)
-        ph = h.heif_image_handle_get_height(handle)
-        _ck(
-            h.heif_decode_image(
-                handle, ctypes.byref(img), COLORSPACE_RGB,
-                CHROMA_INTERLEAVED_RGB, None,
-            ),
-            "decode_image",
-        )
-        stride = ctypes.c_int()
-        p = h.heif_image_get_plane_readonly(
-            img, CHANNEL_INTERLEAVED, ctypes.byref(stride)
-        )
-        if not p:
-            raise ValueError("libheif interleaved plane is NULL")
-        raw = ctypes.string_at(p, stride.value * ph)
-        return (
-            np.frombuffer(raw, np.uint8)
-            .reshape(ph, stride.value)[:, : 3 * pw]
-            .reshape(ph, pw, 3)
-            .copy()
-        )
-    finally:
-        if img:
-            h.heif_image_release(img)
-        if handle:
-            h.heif_image_handle_release(handle)
-        h.heif_context_free(ctx)
+    return _libheif_decode(
+        data, COLORSPACE_RGB, CHROMA_INTERLEAVED_RGB,
+        lambda h, img, ph, pw: _read_plane(
+            h, img, CHANNEL_INTERLEAVED, ph, 3 * pw
+        ).reshape(ph, pw, 3),
+    )
 
 
 # -- libavif cross-decoder path ----------------------------------------------

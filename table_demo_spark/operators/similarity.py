@@ -869,9 +869,13 @@ def mips_topk(
 
 
 # ---------------------------------------------------------------------------
-# Navigable-graph candidate machinery (llm_s18 / llm_s19 /
-# stream_q35 / llm_s20) — corpus-scaled bucket count + hot-bucket
-# salting. The r9 verdict's one `weak`: a FIXED 16-bucket space makes
+# Navigable-graph candidate machinery — corpus-scaled bucket count,
+# hot-bucket salting and the one edge build (graph_edges). Callers:
+# llmops.s18_graph_edges (the batch build behind llm_s18/s19/s21/s23/
+# s24, per HNSW layer for s23/s24) and, in streaming/queries.py, the
+# incremental step and the reshard rebuild behind stream_q35/q36/q38
+# (whose compacted stores llm_s20/s22/s25 serve; q35_final_edges
+# reuses top_m_edges). The r9 verdict's one `weak`: a FIXED 16-bucket space makes
 # per-bucket GEMM work sum(|bucket|^2) ~ n^2/16, i.e. 10x rows ->
 # ~100x in-bucket work. With bits = graph_bits(n) the expected bucket
 # occupancy is pinned at GRAPH_TARGET_BUCKET, so the total candidate
@@ -911,7 +915,7 @@ def bucket_knn_edges(
     Inputs carry ``(nid long, nvec array<float>, pb int, new int)``:
     ``src_rows`` hold one row per (vector, probed bucket); ``dst_rows``
     sit in their own bucket. Returns candidate edges
-    ``(src, dst, w)``; the caller applies the global per-src top-m
+    ``(src, dst, w)``; graph_edges applies the global per-src top-m
     window (per-group top-m here is a superset-safe prune).
 
     Exactness under salting: every (src, dst) pair lands in exactly
@@ -986,3 +990,54 @@ def bucket_knn_edges(
     return srcs.unionByName(dsts).groupBy("pb", "salt").applyInPandas(
         knn, schema="src long, dst long, w double"
     )
+
+
+def top_m_edges(cand_edges: DataFrame, top_m: int) -> DataFrame:
+    """The graph's per-src top-M window over candidate edges
+    ``(src, dst, w)``: w desc, dst asc — the one ordering every build,
+    emission and compaction uses. Returns ``(src, dst, w, rank)``."""
+    win = Window.partitionBy("src").orderBy(
+        F.col("w").desc(), F.col("dst").asc()
+    )
+    return (
+        cand_edges.withColumn("rn", F.row_number().over(win))
+        .filter(F.col("rn") <= top_m)
+        .select("src", "dst", "w", F.col("rn").cast("long").alias("rank"))
+    )
+
+
+def graph_edges(
+    rows: DataFrame, bits: int, top_m: int, own: list[int] | None = None
+) -> DataFrame:
+    """The navigable graph's edge build: ``rows`` carry ``(vec_id,
+    embedding, bk, new)`` — ``bk`` the vector's bucket at ``bits``,
+    ``new`` 1 for a vector whose pairs are scored now, 0 for one
+    already in the graph. Each vector probes its own bucket and its
+    ``bits`` Hamming-1 buckets and sits as a dst in its own bucket;
+    bucket_knn_edges scores the candidates and top_m_edges keeps each
+    src's top ``top_m``. Returns ``(src, dst, w, rank)``.
+
+    ``own`` (the buckets the new vectors sit in) restricts the probes
+    of old srcs: old vectors only need NEW dsts, which sit in the
+    batch's own buckets — so their probe explosion is filtered to
+    ``own``."""
+    src_rows = rows.select(
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").alias("nvec"),
+        F.explode(
+            F.array(
+                F.col("bk"),
+                *[F.col("bk").bitwiseXOR(F.lit(1 << j)) for j in range(bits)],
+            )
+        ).alias("pb"),
+        "new",
+    )
+    if own is not None:
+        src_rows = src_rows.filter((F.col("new") == 1) | F.col("pb").isin(own))
+    dst_rows = rows.select(
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").alias("nvec"),
+        F.col("bk").alias("pb"),
+        "new",
+    )
+    return top_m_edges(bucket_knn_edges(src_rows, dst_rows, top_m), top_m)

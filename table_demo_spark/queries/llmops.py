@@ -1251,64 +1251,35 @@ def s18_graph_edges(emb: DataFrame, bits: int) -> DataFrame:
     similarity.graph_bits(n): the r9 fixed 16-bucket space made
     per-bucket GEMM work grow ~n^2; corpus-scaled bits pin the mean
     bucket at GRAPH_TARGET_BUCKET so candidate work stays ~linear
-    (measured: the sf0.1->10x build went 20.0 s -> see docs/SCALE.md)."""
-    from pyspark.sql import Window
+    (measured: the sf0.1->10x build went 20.0 s -> see docs/SCALE.md).
+    Every vector is new here, so every pair is scored
+    (similarity.graph_edges)."""
+    rows = emb.select(
+        "vec_id",
+        "embedding",
+        _rp_bucket_col(bits=bits).alias("bk"),
+        F.lit(1).alias("new"),
+    )
+    return similarity.graph_edges(rows, bits, _S18_M).select("src", "dst")
 
-    nodes = emb.select(
-        "vec_id", "embedding", _rp_bucket_col(bits=bits).alias("b")
-    )
-    src_rows = nodes.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("nvec"),
-        F.explode(
-            F.array(
-                F.col("b"),
-                *[F.col("b").bitwiseXOR(F.lit(1 << j)) for j in range(bits)],
-            )
-        ).alias("pb"),
-        F.lit(1).alias("new"),
-    )
-    dst_rows = nodes.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("nvec"),
-        F.col("b").alias("pb"),
-        F.lit(1).alias("new"),
-    )
-    cand_edges = similarity.bucket_knn_edges(src_rows, dst_rows, _S18_M)
-    win = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst").asc()
-    )
-    return (
-        cand_edges.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= _S18_M)
-        .select("src", "dst")
-    )
+
+def _corpus_graph(members: DataFrame) -> DataFrame:
+    """s18_graph_edges over ``members`` at their own corpus-scaled bit
+    count (one count job)."""
+    return s18_graph_edges(members, similarity.graph_bits(members.count()))
 
 
 def s18_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    bits = similarity.graph_bits(emb.count())
-    edges = s18_graph_edges(emb, bits)
-    return beam_walk(spark, emb, edges)
+    return beam_walk(spark, emb, _corpus_graph(emb))
 
 
-def beam_walk(
-    spark: SparkSession, emb: DataFrame, edges: DataFrame,
-    entry: int = _S18_ENTRY,
-) -> DataFrame:
+def _probe_scorer(emb: DataFrame):
+    """The probe's one-row query frame ``qv`` and ``score(ids)``: the
+    exact round(cosine, 9) of each listed vector against the probe, in
+    one job (the bounded-id-list probe every single-query walk uses)."""
     from table_demo_spark.functions.vector import cosine
 
-    # The walk is DRIVER-COORDINATED over bounded-by-construction
-    # frames (beam <= B rows, expansion <= B*M rows — the centroid-
-    # means / BPE-merge-table exception to the no-collect rule): a
-    # fully-lazy unroll re-evaluates the graph lineage once per round
-    # and doubles the beam lineage each round (measured 27.6 s at
-    # sf0.1); persist-the-graph + collect-the-beam is 4x faster and is
-    # the shape a real ANN service runs — distributed index build,
-    # O(B*M)-row probes. The per-round merge (dedupe by vec_id, top-B
-    # by cos DESC, id ASC) is bit-identical to the oracle's CTE: all
-    # scores come from the SAME Spark round(cosine, 9) expression.
-    edges_p = edges.persist()
     qv = emb.filter(F.col("vec_id") == _S18_PROBE).select(
         F.col("embedding").alias("qv")
     )
@@ -1325,6 +1296,25 @@ def beam_walk(
         )
         return {int(r["vec_id"]): float(r["cos_sim"]) for r in rows}
 
+    return qv, score
+
+
+def beam_walk(
+    spark: SparkSession, emb: DataFrame, edges: DataFrame,
+    entry: int = _S18_ENTRY,
+) -> DataFrame:
+    # The walk is DRIVER-COORDINATED over bounded-by-construction
+    # frames (beam <= B rows, expansion <= B*M rows — the centroid-
+    # means / BPE-merge-table exception to the no-collect rule): a
+    # fully-lazy unroll re-evaluates the graph lineage once per round
+    # and doubles the beam lineage each round (measured 27.6 s at
+    # sf0.1); persist-the-graph + collect-the-beam is 4x faster and is
+    # the shape a real ANN service runs — distributed index build,
+    # O(B*M)-row probes. The per-round merge (dedupe by vec_id, top-B
+    # by cos DESC, id ASC) is bit-identical to the oracle's CTE: all
+    # scores come from the SAME Spark round(cosine, 9) expression.
+    edges_p = edges.persist()
+    _, score = _probe_scorer(emb)
     try:
         pool = score([entry])
         beam = sorted(pool.items(), key=lambda kv: (-kv[1], kv[0]))[:_S18_B]
@@ -1351,6 +1341,103 @@ def beam_walk(
     return spark.createDataFrame(
         rows, "vec_id long, cos_sim double, rank long"
     )
+
+
+_S23_MAXL = 2  # layers 0..2; P(L>=1)=1/4, P(L>=2)=1/16
+_S23_HOPS = 3  # bounded greedy hops per upper layer
+
+
+def _s23_layer_col():
+    """Cross-engine HNSW layer assignment: trailing-zero-pair count of
+    an md5-derived integer, capped at _S23_MAXL — P(L >= l) = 4^-l,
+    the geometric layer distribution HNSW uses, stated as pure mod
+    arithmetic both engines evaluate identically."""
+    h = F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit("L"), F.col("vec_id").cast("string"))),
+            1, 8,
+        ),
+        16, 10,
+    ).cast("long")
+    return (
+        F.when(h % 16 == 0, F.lit(2))
+        .when(h % 4 == 0, F.lit(1))
+        .otherwise(F.lit(0))
+    )
+
+
+def _hnsw_entry(emb: DataFrame) -> int:
+    """The hierarchy's entry: min id on the topmost occupied layer
+    (1 tiny job)."""
+    lay = emb.select("vec_id", _s23_layer_col().alias("lv"))
+    top = lay.orderBy(F.col("lv").desc(), F.col("vec_id").asc()).limit(1)
+    return int(top.collect()[0]["vec_id"])
+
+
+def _layer_graph(emb: DataFrame, lvl: int) -> DataFrame:
+    """Layer ``lvl``'s navigable graph: s18's build over the vectors
+    drawn at ``lvl`` or above, at the members' own bit count."""
+    return _corpus_graph(
+        emb.filter(_s23_layer_col() >= lvl).select("vec_id", "embedding")
+    )
+
+
+def _descend_layers(layer_edges, hop) -> None:
+    """The HNSW descent over the upper layers, top down: each layer's
+    edges ``layer_edges(lvl)`` get up to _S23_HOPS ``hop(edges_l)``
+    calls and are unpersisted after them (a layer graph built for the
+    descent comes persisted; a filter over an already cached store
+    does not, and unpersisting it is a no-op); a hop returning False
+    has reached its greedy fixpoint, so further hops on that layer
+    would be no-ops."""
+    for lvl in range(_S23_MAXL, 0, -1):
+        edges_l = layer_edges(lvl)
+        try:
+            for _ in range(_S23_HOPS):
+                if not hop(edges_l):
+                    break
+        finally:
+            edges_l.unpersist()
+
+
+def greedy_descent(emb: DataFrame, layer_edges) -> int:
+    """The single-probe HNSW descent (s23, s25): from the entry, each
+    hop moves to the argmax-cosine neighbour of the current node on
+    the layer's graph (``layer_edges(lvl)`` gives its ``(src, dst)``
+    edges) while that beats the current node. Returns the layer-0
+    entry for the beam walk."""
+    from table_demo_spark.functions.vector import cosine
+
+    qv, score = _probe_scorer(emb)
+    nb = emb.select(
+        F.col("vec_id").alias("nb_id"), F.col("embedding").alias("nb_vec")
+    )
+    cur = _hnsw_entry(emb)
+    cur_cos = score([cur])[cur]
+
+    def hop(edges_l: DataFrame) -> bool:
+        nonlocal cur, cur_cos
+        # one bounded job per hop: the <= M neighbors of cur, scored
+        # in the same pass
+        rows = (
+            edges_l.filter(F.col("src") == cur)
+            .join(nb, nb["nb_id"] == F.col("dst"))
+            .crossJoin(F.broadcast(qv))
+            .select(
+                "nb_id", F.round(cosine("nb_vec", "qv"), 9).alias("cos_sim")
+            )
+            .collect()
+        )
+        pool = {int(r["nb_id"]): float(r["cos_sim"]) for r in rows}
+        pool[cur] = cur_cos
+        nxt, nxt_cos = min(pool.items(), key=lambda kv: (-kv[1], kv[0]))
+        if nxt == cur:
+            return False
+        cur, cur_cos = nxt, nxt_cos
+        return True
+
+    _descend_layers(layer_edges, hop)
+    return cur
 
 
 def s19_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1408,29 +1495,6 @@ FROM beam b JOIN exact x ON x.vec_id = b.vec_id
 """
 
 
-_S23_MAXL = 2  # layers 0..2; P(L>=1)=1/4, P(L>=2)=1/16
-_S23_HOPS = 3  # bounded greedy hops per upper layer
-
-
-def _s23_layer_col():
-    """Cross-engine HNSW layer assignment: trailing-zero-pair count of
-    an md5-derived integer, capped at _S23_MAXL — P(L >= l) = 4^-l,
-    the geometric layer distribution HNSW uses, stated as pure mod
-    arithmetic both engines evaluate identically."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("L"), F.col("vec_id").cast("string"))),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
-    return (
-        F.when(h % 16 == 0, F.lit(2))
-        .when(h % 4 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-
-
 def s23_hnsw_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s18 made genuinely HIERARCHICAL — the full HNSW search shape
     (Malkov & Yashunin 2016): vectors draw geometric layers
@@ -1445,85 +1509,48 @@ def s23_hnsw_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy-hop CTEs, and the beam rounds — so a wrong layer
     assignment, a descent that jumps layers, or a beam started at the
     static entry all break the value hash."""
-    from table_demo_spark.functions.vector import cosine
-    from table_demo_spark.sources.batch import load_table
-
     emb = load_table(spark, sf_dir, "embeddings")
-    lay = emb.select("vec_id", "embedding", _s23_layer_col().alias("lv"))
-
-    qv = emb.filter(F.col("vec_id") == _S18_PROBE).select(
-        F.col("embedding").alias("qv")
-    )
-
-    def score(ids: list[int]) -> dict[int, float]:
-        rows = (
-            emb.filter(F.col("vec_id").isin(ids))
-            .crossJoin(F.broadcast(qv))
-            .select(
-                "vec_id",
-                F.round(cosine("embedding", "qv"), 9).alias("cos_sim"),
-            )
-            .collect()
-        )
-        return {int(r["vec_id"]): float(r["cos_sim"]) for r in rows}
-
-    # entry: min id on the topmost occupied layer (1 tiny job)
-    top = lay.orderBy(F.col("lv").desc(), F.col("vec_id").asc()).limit(1)
-    cur = int(top.collect()[0]["vec_id"])
-
-    cur_cos = score([cur])[cur]
-    for lvl in range(_S23_MAXL, 0, -1):
-        members = lay.filter(F.col("lv") >= lvl).select("vec_id", "embedding")
-        bits = similarity.graph_bits(members.count())
-        edges_l = s18_graph_edges(members, bits).persist()
-        try:
-            for _ in range(_S23_HOPS):
-                # one bounded job per hop: the <= M neighbors of cur,
-                # scored in the same pass
-                nb = emb.select(
-                    F.col("vec_id").alias("nb_id"),
-                    F.col("embedding").alias("nb_vec"),
-                )
-                rows = (
-                    edges_l.filter(F.col("src") == cur)
-                    .join(nb, nb["nb_id"] == F.col("dst"))
-                    .crossJoin(F.broadcast(qv))
-                    .select(
-                        "nb_id",
-                        F.round(cosine("nb_vec", "qv"), 9).alias("cos_sim"),
-                    )
-                    .collect()
-                )
-                pool = {int(r["nb_id"]): float(r["cos_sim"]) for r in rows}
-                pool[cur] = cur_cos
-                nxt, nxt_cos = sorted(
-                    pool.items(), key=lambda kv: (-kv[1], kv[0])
-                )[0]
-                if nxt == cur:
-                    break  # greedy fixpoint: further hops are no-ops
-                cur, cur_cos = nxt, nxt_cos
-        finally:
-            edges_l.unpersist()
-
-    edges0 = s18_graph_edges(emb, similarity.graph_bits(emb.count()))
-    return beam_walk(spark, emb, edges0, entry=cur)
+    cur = greedy_descent(emb, lambda lvl: _layer_graph(emb, lvl).persist())
+    return beam_walk(spark, emb, _corpus_graph(emb), entry=cur)
 
 
-def _s23_oracle(target: int = similarity.GRAPH_TARGET_BUCKET) -> str:
+def _s23_lay_sql() -> str:
+    """The oracle's ``lay`` CTE: _s23_layer_col's md5 layer draw per
+    vector, restated."""
     lay_h = (
         "CAST('0x' || substring(md5('L' || CAST(vec_id AS VARCHAR)), 1, 8)"
         " AS BIGINT)"
     )
-    member = {
-        1: "vec_id IN (SELECT vec_id FROM lay WHERE lv >= 1)",
-        2: "vec_id IN (SELECT vec_id FROM lay WHERE lv >= 2)",
-    }
+    return f"""lay AS MATERIALIZED (
+  SELECT vec_id,
+         CASE WHEN {lay_h} % 16 = 0 THEN 2
+              WHEN {lay_h} % 4 = 0 THEN 1 ELSE 0 END AS lv
+  FROM embeddings
+)"""
+
+
+def _s23_member_sql(lvl: int) -> str:
+    """Oracle predicate: the vector is a member of layer ``lvl``."""
+    return f"vec_id IN (SELECT vec_id FROM lay WHERE lv >= {lvl})"
+
+
+def _hnsw_hops_sql(hop) -> tuple[str, str]:
+    """The oracle's greedy descent: _S23_HOPS hop CTEs per upper layer,
+    top down, chained from ``hop_e``; ``hop(name, prev, lvl)`` writes
+    one. Returns (the joined CTEs, the last hop's name)."""
     hops = []
     prev = "hop_e"
-    for lvl in (2, 1):
+    for lvl in range(_S23_MAXL, 0, -1):
         for i in range(_S23_HOPS):
             name = f"hop{lvl}_{i}"
-            hops.append(f"""
+            hops.append(hop(name, prev, lvl))
+            prev = name
+    return ",".join(hops), prev
+
+
+def _s23_oracle(target: int = similarity.GRAPH_TARGET_BUCKET) -> str:
+    hops, prev = _hnsw_hops_sql(
+        lambda name, prev, lvl: f"""
 {name} AS MATERIALIZED (
   SELECT vec_id, cos_sim FROM (
     SELECT vec_id, cos_sim,
@@ -1537,18 +1564,13 @@ def _s23_oracle(target: int = similarity.GRAPH_TARGET_BUCKET) -> str:
       JOIN embeddings em ON em.vec_id = g.dst CROSS JOIN q
     )
   ) WHERE rn = 1
-)""")
-            prev = name
+)"""
+    )
     return f"""
-WITH lay AS MATERIALIZED (
-  SELECT vec_id,
-         CASE WHEN {lay_h} % 16 = 0 THEN 2
-              WHEN {lay_h} % 4 = 0 THEN 1 ELSE 0 END AS lv
-  FROM embeddings
-),
+WITH {_s23_lay_sql()},
 {_graph_edges_sql(target=target)},
-{_graph_edges_sql(target=target, suffix="_l1", member_sql=member[1])},
-{_graph_edges_sql(target=target, suffix="_l2", member_sql=member[2])},
+{_graph_edges_sql(target=target, suffix="_l1", member_sql=_s23_member_sql(1))},
+{_graph_edges_sql(target=target, suffix="_l2", member_sql=_s23_member_sql(2))},
 q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {_S18_PROBE}),
 hop_e AS MATERIALIZED (
   SELECT em.vec_id,
@@ -1556,7 +1578,7 @@ hop_e AS MATERIALIZED (
   FROM embeddings em CROSS JOIN q
   WHERE em.vec_id = (
     SELECT vec_id FROM lay ORDER BY lv DESC, vec_id ASC LIMIT 1)
-),{",".join(hops)},
+),{hops},
 beam0 AS MATERIALIZED (SELECT vec_id, cos_sim FROM {prev}),
 {_s18_walk_rounds_sql()}
 SELECT CAST(vec_id AS BIGINT) AS vec_id, cos_sim,
@@ -1586,136 +1608,38 @@ def s24_batched_hnsw_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-qid beam rounds — so a probe descending through another
     probe's node or a beam started at the static entry breaks the
     hash."""
-    import os
-
-    from table_demo_spark.functions.vector import cosine
-    from table_demo_spark.scratch import scratch_dir
-
     emb = load_table(spark, sf_dir, "embeddings")
-    lay = emb.select("vec_id", "embedding", _s23_layer_col().alias("lv"))
-    queries = emb.filter(F.col("vec_id") < _S24_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-
-    def score_pairs(pairs: list[tuple[int, int]]) -> dict:
-        pdf = spark.createDataFrame(pairs, "qid long, vec_id long")
-        rows = (
-            pdf.join(emb, "vec_id")
-            .join(F.broadcast(queries), "qid")
-            .select(
-                "qid", "vec_id",
-                F.round(cosine("embedding", "qv"), 9).alias("c"),
-            )
-            .collect()
-        )
-        return {(int(r["qid"]), int(r["vec_id"])): float(r["c"]) for r in rows}
-
-    qids = [int(r["qid"]) for r in queries.select("qid").collect()]
-    entry = int(
-        lay.orderBy(F.col("lv").desc(), F.col("vec_id").asc())
-        .limit(1).collect()[0]["vec_id"]
-    )
+    qids, score_pairs = _batch_probes(spark, emb, _S24_NQ)
+    entry = _hnsw_entry(emb)
     pool = score_pairs([(q, entry) for q in qids])
-    cur = {q: entry for q in qids}
-    cur_cos = {q: pool[(q, entry)] for q in qids}
-    for lvl in range(_S23_MAXL, 0, -1):
-        members = lay.filter(F.col("lv") >= lvl).select("vec_id", "embedding")
-        bits = similarity.graph_bits(members.count())
-        edges_l = s18_graph_edges(members, bits).persist()
-        try:
-            for _ in range(_S23_HOPS):
-                srcs = sorted(set(cur.values()))
-                nbr = (
-                    edges_l.filter(F.col("src").isin(srcs))
-                    .select("src", "dst")
-                    .collect()
-                )
-                out: dict[int, list[int]] = {}
-                for r in nbr:
-                    out.setdefault(int(r["src"]), []).append(int(r["dst"]))
-                pairs = sorted(
-                    {(q, d) for q in qids for d in out.get(cur[q], ())}
-                )
-                scored = score_pairs(pairs) if pairs else {}
-                moved = False
-                for q in qids:
-                    p = {
-                        d: c for (qq, d), c in scored.items() if qq == q
-                    }
-                    p[cur[q]] = cur_cos[q]
-                    nxt, nxt_cos = sorted(
-                        p.items(), key=lambda kv: (-kv[1], kv[0])
-                    )[0]
-                    if nxt != cur[q]:
-                        cur[q], cur_cos[q] = nxt, nxt_cos
-                        moved = True
-                if not moved:
-                    break  # all probes at their greedy fixpoints
-        finally:
-            edges_l.unpersist()
-    # layer 0: s21's batched beam from the per-probe descended entries,
-    # over a MATERIALIZED edge store (serving reads an index)
-    store = os.path.join(scratch_dir("tds-s24-"), "edges.parquet")
-    s18_graph_edges(emb, similarity.graph_bits(emb.count())).write.mode(
-        "overwrite"
-    ).parquet(store)
-    edges0 = spark.read.parquet(store)
-    beams = {q: [(cur[q], cur_cos[q])] for q in qids}
-    for _ in range(_S18_ROUNDS):
-        frontier_srcs = sorted({v for b in beams.values() for v, _ in b})
-        nbr = (
-            edges0.filter(F.col("src").isin(frontier_srcs))
-            .select("src", "dst")
-            .collect()
+    cur = {q: (entry, pool[(q, entry)]) for q in qids}
+
+    def hop(edges_l: DataFrame) -> bool:
+        out = _out_edges(edges_l, sorted({v for v, _ in cur.values()}))
+        scored = score_pairs(
+            sorted({(q, d) for q, (v, _) in cur.items() for d in out.get(v, ())})
         )
-        out_edges: dict[int, list[int]] = {}
-        for r in nbr:
-            out_edges.setdefault(int(r["src"]), []).append(int(r["dst"]))
-        pairs = sorted(
-            {
-                (q, d)
-                for q, beam in beams.items()
-                for v, _ in beam
-                for d in out_edges.get(v, ())
-            }
-        )
-        scored = score_pairs(pairs) if pairs else {}
-        for q in qids:
-            merged = dict(beams[q])
-            for (qq, d), c in scored.items():
-                if qq == q:
-                    merged[d] = c
-            beams[q] = sorted(
-                merged.items(), key=lambda vc: (-vc[1], vc[0])
-            )[:_S18_B]
-    rows = [
-        (q, v, c, i + 1)
-        for q in qids
-        for i, (v, c) in enumerate(beams[q])
-    ]
-    return spark.createDataFrame(
-        rows, "qid long, vec_id long, cos_sim double, rank long"
-    )
+        moved = False
+        for q, (v, c) in cur.items():
+            pool_q = {d: cd for (qq, d), cd in scored.items() if qq == q}
+            pool_q[v] = c
+            best = min(pool_q.items(), key=lambda kv: (-kv[1], kv[0]))
+            if best[0] != v:
+                cur[q] = best
+                moved = True
+        return moved  # False: all probes at their greedy fixpoints
+
+    _descend_layers(lambda lvl: _layer_graph(emb, lvl).persist(), hop)
+    # layer 0: s21's batched beam from the per-probe descended entries
+    return batched_beam(spark, emb, score_pairs, cur, "tds-s24-")
 
 
 def _s24_oracle() -> str:
-    lay_h = (
-        "CAST('0x' || substring(md5('L' || CAST(vec_id AS VARCHAR)), 1, 8)"
-        " AS BIGINT)"
-    )
-    member = {
-        1: "vec_id IN (SELECT vec_id FROM lay WHERE lv >= 1)",
-        2: "vec_id IN (SELECT vec_id FROM lay WHERE lv >= 2)",
-    }
     # per-probe greedy descent as qid-PARTITIONed argmax windows over
     # the SHARED layer CTEs (one chain serves all probes — the s21
     # amortization, restated)
-    hops = []
-    prev = "hop_e"
-    for lvl in (2, 1):
-        for i in range(_S23_HOPS):
-            name = f"hop{lvl}_{i}"
-            hops.append(f"""
+    hops, prev = _hnsw_hops_sql(
+        lambda name, prev, lvl: f"""
 {name} AS MATERIALIZED (
   SELECT qid, vec_id, cos_sim FROM (
     SELECT qid, vec_id, cos_sim,
@@ -1731,42 +1655,13 @@ def _s24_oracle() -> str:
       JOIN q ON q.qid = p.qid
     )
   ) WHERE rn = 1
-)""")
-            prev = name
-    rounds = []
-    for i in range(1, _S18_ROUNDS + 1):
-        rounds.append(f"""
-cand{i} AS (
-  SELECT DISTINCT b.qid, g.dst AS vec_id
-  FROM beam{i - 1} b JOIN edges g ON g.src = b.vec_id
-),
-sc{i} AS (
-  SELECT c.qid, c.vec_id,
-         round({_sql_cosine('em.embedding', 'q.qv')}, 9) AS cos_sim
-  FROM cand{i} c
-  JOIN embeddings em ON em.vec_id = c.vec_id
-  JOIN q ON q.qid = c.qid
-),
-beam{i} AS MATERIALIZED (
-  SELECT qid, vec_id, cos_sim FROM (
-    SELECT qid, vec_id, cos_sim,
-           row_number() OVER (
-             PARTITION BY qid ORDER BY cos_sim DESC, vec_id ASC) AS rn
-    FROM (SELECT DISTINCT qid, vec_id, cos_sim FROM
-          (SELECT qid, vec_id, cos_sim FROM beam{i - 1}
-           UNION ALL SELECT qid, vec_id, cos_sim FROM sc{i}))
-  ) WHERE rn <= {_S18_B}
-)""")
+)"""
+    )
     return f"""
-WITH lay AS MATERIALIZED (
-  SELECT vec_id,
-         CASE WHEN {lay_h} % 16 = 0 THEN 2
-              WHEN {lay_h} % 4 = 0 THEN 1 ELSE 0 END AS lv
-  FROM embeddings
-),
+WITH {_s23_lay_sql()},
 {_graph_edges_sql()},
-{_graph_edges_sql(suffix="_l1", member_sql=member[1])},
-{_graph_edges_sql(suffix="_l2", member_sql=member[2])},
+{_graph_edges_sql(suffix="_l1", member_sql=_s23_member_sql(1))},
+{_graph_edges_sql(suffix="_l2", member_sql=_s23_member_sql(2))},
 q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
       WHERE vec_id < {_S24_NQ}),
 hop_e AS MATERIALIZED (
@@ -1775,9 +1670,9 @@ hop_e AS MATERIALIZED (
   FROM embeddings em CROSS JOIN q
   WHERE em.vec_id = (
     SELECT vec_id FROM lay ORDER BY lv DESC, vec_id ASC LIMIT 1)
-),{",".join(hops)},
+),{hops},
 beam0 AS MATERIALIZED (SELECT qid, vec_id, cos_sim FROM {prev}),
-{",".join(rounds)}
+{_batched_rounds_sql()}
 SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
        cos_sim,
        CAST(row_number() OVER (
@@ -1854,40 +1749,20 @@ edges{s} AS MATERIALIZED (
 _S21_NQ = 8  # batched serve: query vectors vec_id < 8
 
 
-def s21_batched_beam_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched multi-query beam SERVE — the production amortization
-    s18 demonstrates for one probe: N query vectors walk the navigable
-    graph TOGETHER, sharing each round's two bounded jobs (one pruned
-    edge-store read for the union of all frontiers, one GEMM-free
-    relational scoring pass of the distinct (query, candidate) pairs
-    against the broadcast query matrix) instead of paying 2 jobs per
-    query per round. The graph is MATERIALIZED to a scratch store
-    first and every round reads it back — serving reads an index, not
-    lineage (and the store read is pruned to the frontier's src keys).
-    Per-round driver state stays bounded by construction
-    (<= NQ * B beam rows, <= NQ * B * M candidate pairs). The oracle
-    restates the per-query walk with PARTITION BY qid windows over the
-    same shared edges CTE."""
-    import os
-
-    from pyspark.sql import Window
-
+def _batch_probes(spark: SparkSession, emb: DataFrame, nq: int):
+    """The batched serve's probes, vec_id < ``nq``: their ids (one
+    job) and ``score_pairs(pairs)`` — exact cosine for a bounded
+    (qid, vec_id) candidate set in one relational pass: candidates
+    join the embeddings table, the NQ-row query matrix is broadcast."""
     from table_demo_spark.functions.vector import cosine
-    from table_demo_spark.scratch import scratch_dir
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    bits = similarity.graph_bits(emb.count())
-    store = os.path.join(scratch_dir("tds-s21-"), "edges.parquet")
-    s18_graph_edges(emb, bits).write.mode("overwrite").parquet(store)
-    edges = spark.read.parquet(store)
-    queries = emb.filter(F.col("vec_id") < _S21_NQ).select(
+    queries = emb.filter(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
 
     def score_pairs(pairs: list[tuple[int, int]]) -> dict:
-        """Exact cosine for the bounded (qid, vec_id) candidate set:
-        one relational pass — candidates join the embeddings table,
-        the NQ-row query matrix is broadcast."""
+        if not pairs:
+            return {}
         pdf = spark.createDataFrame(pairs, "qid long, vec_id long")
         rows = (
             pdf.join(emb, "vec_id")
@@ -1901,53 +1776,105 @@ def s21_batched_beam_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return {(int(r["qid"]), int(r["vec_id"])): float(r["c"]) for r in rows}
 
-    qids = [int(r["qid"]) for r in queries.select("qid").collect()]
-    pool = score_pairs([(q, _S18_ENTRY) for q in qids])
-    beams = {
-        q: sorted(
-            ((v, c) for (qq, v), c in pool.items() if qq == q),
-            key=lambda vc: (-vc[1], vc[0]),
-        )[:_S18_B]
-        for q in qids
-    }
+    return [int(r["qid"]) for r in queries.select("qid").collect()], score_pairs
+
+
+def _out_edges(edges: DataFrame, srcs: list[int]) -> dict[int, list[int]]:
+    """The out-edges of ``srcs``: one edge read pruned to those keys."""
+    out: dict[int, list[int]] = {}
+    for r in edges.filter(F.col("src").isin(srcs)).select("src", "dst").collect():
+        out.setdefault(int(r["src"]), []).append(int(r["dst"]))
+    return out
+
+
+def batched_beam(
+    spark: SparkSession, emb: DataFrame, score_pairs, entries: dict, prefix: str
+) -> DataFrame:
+    """The batched layer-0 beam (s21, s24): every probe ``q`` walks
+    the corpus graph from its entry ``entries[q] = (vec_id, cos)``,
+    all probes TOGETHER, sharing each round's two bounded jobs (one
+    pruned edge-store read for the union of all frontiers, one
+    ``score_pairs`` pass over the distinct (qid, candidate) pairs).
+    The graph is MATERIALIZED to a ``prefix`` scratch store first and
+    every round reads it back — serving reads an index, not lineage
+    (and the store read is pruned to the frontier's src keys).
+    Returns (qid, vec_id, cos_sim, rank)."""
+    import os
+
+    from table_demo_spark.scratch import scratch_dir
+
+    store = os.path.join(scratch_dir(prefix), "edges.parquet")
+    _corpus_graph(emb).write.mode("overwrite").parquet(store)
+    edges = spark.read.parquet(store)
+    beams = {q: [e] for q, e in entries.items()}
     for _ in range(_S18_ROUNDS):
-        frontier_srcs = sorted({v for b in beams.values() for v, _ in b})
-        nbr = (
-            edges.filter(F.col("src").isin(frontier_srcs))
-            .select("src", "dst")
-            .collect()
+        out = _out_edges(edges, sorted({v for b in beams.values() for v, _ in b}))
+        scored = score_pairs(
+            sorted(
+                {
+                    (q, d)
+                    for q, beam in beams.items()
+                    for v, _ in beam
+                    for d in out.get(v, ())
+                }
+            )
         )
-        out_edges: dict[int, list[int]] = {}
-        for r in nbr:
-            out_edges.setdefault(int(r["src"]), []).append(int(r["dst"]))
-        pairs = sorted(
-            {
-                (q, d)
-                for q, beam in beams.items()
-                for v, _ in beam
-                for d in out_edges.get(v, ())
-            }
-        )
-        scored = score_pairs(pairs) if pairs else {}
-        for q in qids:
+        for q in beams:
             merged = dict(beams[q])
-            for (qq, d), c in scored.items():
-                if qq == q:
-                    merged[d] = c
+            merged.update({d: c for (qq, d), c in scored.items() if qq == q})
             beams[q] = sorted(
                 merged.items(), key=lambda vc: (-vc[1], vc[0])
             )[:_S18_B]
     rows = [
         (q, v, c, i + 1)
-        for q in qids
-        for i, (v, c) in enumerate(beams[q])
+        for q, beam in beams.items()
+        for i, (v, c) in enumerate(beam)
     ]
     return spark.createDataFrame(
         rows, "qid long, vec_id long, cos_sim double, rank long"
     )
 
 
+def s21_batched_beam_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batched multi-query beam SERVE — the production amortization
+    s18 demonstrates for one probe: N query vectors walk the navigable
+    graph TOGETHER (batched_beam), sharing each round's two bounded
+    jobs instead of paying 2 jobs per query per round; the scoring
+    pass is GEMM-free and relational. Per-round driver state stays
+    bounded by construction (<= NQ * B beam rows, <= NQ * B * M
+    candidate pairs). The oracle restates the per-query walk with
+    PARTITION BY qid windows over the same shared edges CTE."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids, score_pairs = _batch_probes(spark, emb, _S21_NQ)
+    pool = score_pairs([(q, _S18_ENTRY) for q in qids])
+    entries = {q: (_S18_ENTRY, pool[(q, _S18_ENTRY)]) for q in qids}
+    return batched_beam(spark, emb, score_pairs, entries, "tds-s21-")
+
+
 def _s21_oracle() -> str:
+    chain = _batched_rounds_sql()
+    return f"""
+WITH {_graph_edges_sql()},
+q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
+      WHERE vec_id < {_S21_NQ}),
+beam0 AS MATERIALIZED (
+  SELECT q.qid, e.vec_id,
+         round({_sql_cosine('e.embedding', 'q.qv')}, 9) AS cos_sim
+  FROM embeddings e CROSS JOIN q WHERE e.vec_id = {_S18_ENTRY}
+),{chain}
+SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
+       cos_sim,
+       CAST(row_number() OVER (
+           PARTITION BY qid ORDER BY cos_sim DESC, vec_id ASC)
+         AS BIGINT) AS rank
+FROM beam{_S18_ROUNDS}
+"""
+
+
+def _batched_rounds_sql() -> str:
+    """The batched beam's unrolled-round CTE chain (s21, s24): s18's
+    cand/sc/beam rounds with every step keyed and windowed per qid,
+    starting from a ``beam0``."""
     rounds = []
     for i in range(1, _S18_ROUNDS + 1):
         rounds.append(f"""
@@ -1972,23 +1899,7 @@ beam{i} AS MATERIALIZED (
            UNION ALL SELECT qid, vec_id, cos_sim FROM sc{i}))
   ) WHERE rn <= {_S18_B}
 )""")
-    chain = ",".join(rounds)
-    return f"""
-WITH {_graph_edges_sql()},
-q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-      WHERE vec_id < {_S21_NQ}),
-beam0 AS MATERIALIZED (
-  SELECT q.qid, e.vec_id,
-         round({_sql_cosine('e.embedding', 'q.qv')}, 9) AS cos_sim
-  FROM embeddings e CROSS JOIN q WHERE e.vec_id = {_S18_ENTRY}
-),{chain}
-SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-       cos_sim,
-       CAST(row_number() OVER (
-           PARTITION BY qid ORDER BY cos_sim DESC, vec_id ASC)
-         AS BIGINT) AS rank
-FROM beam{_S18_ROUNDS}
-"""
+    return ",".join(rounds)
 
 
 def _s18_walk_rounds_sql(edges: str = "edges") -> str:

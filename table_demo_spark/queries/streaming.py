@@ -1423,22 +1423,17 @@ def q38_hnsw_ingest_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q38_oracle() -> str:
-    from table_demo_spark.queries.llmops import _graph_edges_sql
+    from table_demo_spark.queries.llmops import (
+        _graph_edges_sql,
+        _s23_lay_sql,
+        _s23_member_sql,
+    )
     from table_demo_spark.streaming.queries import Q36_TARGET_BUCKET
 
-    lay_h = (
-        "CAST('0x' || substring(md5('L' || CAST(vec_id AS VARCHAR)), 1, 8)"
-        " AS BIGINT)"
-    )
-    member = {
-        0: "TRUE",
-        1: "vec_id IN (SELECT vec_id FROM lay WHERE lv >= 1)",
-        2: "vec_id IN (SELECT vec_id FROM lay WHERE lv >= 2)",
-    }
     chains = ",".join(
         _graph_edges_sql(
             target=Q36_TARGET_BUCKET, suffix=f"_l{lv}",
-            member_sql=member[lv],
+            member_sql=_s23_member_sql(lv) if lv else "TRUE",
         )
         for lv in (0, 1, 2)
     )
@@ -1449,12 +1444,7 @@ def _q38_oracle() -> str:
         for lv in (0, 1, 2)
     )
     return f"""
-WITH lay AS MATERIALIZED (
-  SELECT vec_id,
-         CASE WHEN {lay_h} % 16 = 0 THEN 2
-              WHEN {lay_h} % 4 = 0 THEN 1 ELSE 0 END AS lv
-  FROM embeddings
-),
+WITH {_s23_lay_sql()},
 {chains}
 {union}
 """
@@ -1469,14 +1459,7 @@ def s25_serve_hnsw_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
     is s23's full static hierarchy SQL at the re-derived bits, so the
     query is green only if build == maintain == per-layer reshard ==
     descend == serve on one hash chain."""
-    from table_demo_spark.functions.vector import cosine
-    from table_demo_spark.queries.llmops import (
-        _S18_PROBE,
-        _S23_HOPS,
-        _S23_MAXL,
-        _s23_layer_col,
-        beam_walk,
-    )
+    from table_demo_spark.queries.llmops import beam_walk, greedy_descent
     from table_demo_spark.sources.batch import load_table
     from table_demo_spark.streaming.queries import (
         q38_final_edges,
@@ -1488,54 +1471,8 @@ def s25_serve_hnsw_ingested(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain(query, sink.count, quiet_polls=1)
     store = q38_final_edges(spark, sink).persist()
     emb = load_table(spark, sf_dir, "embeddings")
-    lay = emb.select("vec_id", "embedding", _s23_layer_col().alias("lv"))
-    qv = emb.filter(F.col("vec_id") == _S18_PROBE).select(
-        F.col("embedding").alias("qv")
-    )
-
-    def score(ids: list[int]) -> dict[int, float]:
-        rows = (
-            emb.filter(F.col("vec_id").isin(ids))
-            .crossJoin(F.broadcast(qv))
-            .select(
-                "vec_id",
-                F.round(cosine("embedding", "qv"), 9).alias("cos_sim"),
-            )
-            .collect()
-        )
-        return {int(r["vec_id"]): float(r["cos_sim"]) for r in rows}
-
     try:
-        cur = int(
-            lay.orderBy(F.col("lv").desc(), F.col("vec_id").asc())
-            .limit(1).collect()[0]["vec_id"]
-        )
-        cur_cos = score([cur])[cur]
-        for lvl in range(_S23_MAXL, 0, -1):
-            edges_l = store.filter(F.col("lv") == lvl)
-            nb = emb.select(
-                F.col("vec_id").alias("nb_id"),
-                F.col("embedding").alias("nb_vec"),
-            )
-            for _ in range(_S23_HOPS):
-                rows = (
-                    edges_l.filter(F.col("src") == cur)
-                    .join(nb, nb["nb_id"] == F.col("dst"))
-                    .crossJoin(F.broadcast(qv))
-                    .select(
-                        "nb_id",
-                        F.round(cosine("nb_vec", "qv"), 9).alias("cos_sim"),
-                    )
-                    .collect()
-                )
-                pool = {int(r["nb_id"]): float(r["cos_sim"]) for r in rows}
-                pool[cur] = cur_cos
-                nxt, nxt_cos = sorted(
-                    pool.items(), key=lambda kv: (-kv[1], kv[0])
-                )[0]
-                if nxt == cur:
-                    break
-                cur, cur_cos = nxt, nxt_cos
+        cur = greedy_descent(emb, lambda lvl: store.filter(F.col("lv") == lvl))
         return beam_walk(
             spark, emb,
             store.filter(F.col("lv") == 0).select("src", "dst"),

@@ -22,17 +22,13 @@ Scale notes:
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_MARKER = "_SPARK_FMT_FIXTURE"
+from table_demo_spark.native_cache import cached_build, fixture_key
 
 EVENTS_JSONL_SCHEMA = T.StructType(
     [
@@ -44,31 +40,6 @@ EVENTS_JSONL_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def _cached_dir(sf_dir: str, tag: str) -> tuple[str, bool]:
-    """(final_path, already_built) — cache key = fixture file identity."""
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        repr((os.path.abspath(src), st.st_mtime_ns, st.st_size)).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), f"events-{tag}-{os.getuid()}-{digest}"
-    )
-    return final, os.path.exists(os.path.join(final, _MARKER))
-
-
-def _finalize(staging: str, final: str, src: str) -> str:
-    with open(os.path.join(staging, _MARKER), "w") as f:
-        json.dump({"source": os.path.abspath(src)}, f)
-    try:
-        os.rename(staging, final)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # lost a benign race
-    if not os.path.exists(os.path.join(final, _MARKER)):
-        raise RuntimeError(f"{final}: fixture write failed")
-    return final
 
 
 def _typed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,16 +56,24 @@ def _typed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cached_events(spark: SparkSession, sf_dir: str, tag: str, write) -> str:
+    """The events fixture as ``write(typed_events, path)`` lays it
+    out, built once per fixture (native_cache.cached_build)."""
+    _, key = fixture_key(sf_dir, "events", tag)
+    return cached_build(
+        f"events-{tag}", key,
+        lambda path: write(_typed_events(spark, sf_dir), path),
+    )
+
+
 def ensure_events_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events as a directory of JSON-lines files (one JSON
     object per line), once per fixture. Distributed write — one file
     per partition, the shape that parallelizes the later read."""
-    final, done = _cached_dir(sf_dir, "jsonl")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-jsonl-stage-")
-    _typed_events(spark, sf_dir).write.mode("overwrite").json(staging)
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+    return _cached_events(
+        spark, sf_dir, "jsonl",
+        lambda ev, path: ev.write.mode("overwrite").json(path),
+    )
 
 
 def read_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
@@ -104,12 +83,10 @@ def read_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
 
 def ensure_events_orc(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events as ORC, once per fixture."""
-    final, done = _cached_dir(sf_dir, "orc")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-orc-stage-")
-    _typed_events(spark, sf_dir).write.mode("overwrite").orc(staging)
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+    return _cached_events(
+        spark, sf_dir, "orc",
+        lambda ev, path: ev.write.mode("overwrite").orc(path),
+    )
 
 
 def read_events_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -126,24 +103,18 @@ def ensure_events_text(spark: SparkSession, sf_dir: str) -> str:
     (``spark.read.text``) and the record parser is an in-query
     expression — the reference's strict toString/fromString contract
     (`TaxiRide.java:71-129`) re-expressed as ``to_csv``/``from_csv``."""
-    final, done = _cached_dir(sf_dir, "textln")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-text-stage-")
-    (
-        _typed_events(spark, sf_dir)
-        .select(
+
+    def write(ev: DataFrame, path: str) -> None:
+        ev.select(
             F.to_csv(
                 F.struct(
                     "event_id", "ts_ms", "user_id", "event_type", "value", "props"
                 ),
                 {"sep": TEXT_LINE_SEP},
             ).alias("value")
-        )
-        .write.mode("overwrite")
-        .text(staging)
-    )
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+        ).write.mode("overwrite").text(path)
+
+    return _cached_events(spark, sf_dir, "textln", write)
 
 
 def read_events_text(spark: SparkSession, path: str) -> DataFrame:
@@ -170,20 +141,20 @@ def ensure_events_xml(spark: SparkSession, sf_dir: str) -> str:
     per fixture. XML is the enterprise-feed ingestion shape; the
     writer's entity escaping must round-trip the JSON-carrying props
     strings exactly."""
-    final, done = _cached_dir(sf_dir, "xml")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-xml-stage-")
-    (
-        _typed_events(spark, sf_dir)
-        .select("event_id", "ts_ms", "user_id", "event_type", "value", "props")
-        .write.mode("overwrite")
-        .format("xml")
-        .option("rootTag", "events")
-        .option("rowTag", "event")
-        .save(staging)
-    )
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+
+    def write(ev: DataFrame, path: str) -> None:
+        (
+            ev.select(
+                "event_id", "ts_ms", "user_id", "event_type", "value", "props"
+            )
+            .write.mode("overwrite")
+            .format("xml")
+            .option("rootTag", "events")
+            .option("rowTag", "event")
+            .save(path)
+        )
+
+    return _cached_events(spark, sf_dir, "xml", write)
 
 
 def read_events_xml(spark: SparkSession, path: str) -> DataFrame:
@@ -209,17 +180,12 @@ def ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     and dynamic partition writes scale out per partition value. The
     partition column travels in the directory name, not the data
     files, so it costs no storage and no scan bytes."""
-    final, done = _cached_dir(sf_dir, "hivepart")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-part-stage-")
-    (
-        _typed_events(spark, sf_dir)
-        .write.mode("overwrite")
+    return _cached_events(
+        spark, sf_dir, "hivepart",
+        lambda ev, path: ev.write.mode("overwrite")
         .partitionBy("event_type")
-        .parquet(staging)
+        .parquet(path),
     )
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
 
 
 def read_events_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -239,11 +205,6 @@ def ensure_events_jsonl_dirty(spark, sf_dir: str) -> str:
     """Materialize a JSONL copy where every ``DIRTY_EVERY``-th record
     (by event_id) is truncated mid-object — a deterministic stand-in
     for the malformed lines every real 100 TB JSON crawl contains."""
-    final, done = _cached_dir(sf_dir, "jsonl-dirty")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-jsonl-dirty-stage-")
-    ev = _typed_events(spark, sf_dir)
     j = F.to_json(
         F.struct("event_id", "ts_ms", "user_id", "event_type", "value", "props")
     )
@@ -251,13 +212,13 @@ def ensure_events_jsonl_dirty(spark, sf_dir: str) -> str:
         F.col("event_id") % DIRTY_EVERY == 0,
         F.expr("substring(j, 1, length(j) - 5)"),
     ).otherwise(F.col("j"))
-    (
-        ev.withColumn("j", j)
+    return _cached_events(
+        spark, sf_dir, "jsonl-dirty",
+        lambda ev, path: ev.withColumn("j", j)
         .select(line.alias("value"))
         .write.mode("overwrite")
-        .text(staging)
+        .text(path),
     )
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
 
 
 CORRUPT_COL = "_corrupt"
@@ -288,18 +249,16 @@ def ensure_events_evolved(spark: SparkSession, sf_dir: str) -> str:
     v2 files add (value, props). This is the directory every
     long-lived dataset becomes after a schema migration; the read
     path must reconcile both generations."""
-    final, done = _cached_dir(sf_dir, "evolved")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-evolved-stage-")
-    ev = _typed_events(spark, sf_dir)
-    v1 = ev.filter(F.col("event_id") % 2 == 0).select(
-        "event_id", "ts_ms", "user_id", "event_type"
-    )
-    v2 = ev.filter(F.col("event_id") % 2 == 1)
-    v1.write.mode("overwrite").parquet(os.path.join(staging, "v=1"))
-    v2.write.mode("overwrite").parquet(os.path.join(staging, "v=2"))
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+
+    def write(ev: DataFrame, path: str) -> None:
+        v1 = ev.filter(F.col("event_id") % 2 == 0).select(
+            "event_id", "ts_ms", "user_id", "event_type"
+        )
+        v2 = ev.filter(F.col("event_id") % 2 == 1)
+        v1.write.mode("overwrite").parquet(os.path.join(path, "v=1"))
+        v2.write.mode("overwrite").parquet(os.path.join(path, "v=2"))
+
+    return _cached_events(spark, sf_dir, "evolved", write)
 
 
 def read_events_evolved(spark: SparkSession, path: str) -> DataFrame:
@@ -330,21 +289,21 @@ def ensure_events_quoted_csv(spark: SparkSession, sf_dir: str) -> str:
     losslessly (the roundtrip oracle catches any mangling). value is
     serialized as scaled-integer cents (exact) because float->text->
     float is the one leg of a CSV roundtrip that is NOT identity."""
-    final, done = _cached_dir(sf_dir, "quoted-csv")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-csv-stage-")
-    ev = _typed_events(spark, sf_dir).withColumn(
-        "value_cents", F.round(F.col("value") * 100).cast("long")
-    ).drop("value")
-    (
-        ev.write.mode("overwrite")
-        .option("header", True)
-        .option("quote", '"')
-        .option("escape", '"')  # RFC 4180: quotes escape by doubling
-        .csv(staging)
-    )
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+
+    def write(ev: DataFrame, path: str) -> None:
+        (
+            ev.withColumn(
+                "value_cents", F.round(F.col("value") * 100).cast("long")
+            )
+            .drop("value")
+            .write.mode("overwrite")
+            .option("header", True)
+            .option("quote", '"')
+            .option("escape", '"')  # RFC 4180: quotes escape by doubling
+            .csv(path)
+        )
+
+    return _cached_events(spark, sf_dir, "quoted-csv", write)
 
 
 def read_events_quoted_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -375,32 +334,33 @@ def ensure_events_multiline_json(spark: SparkSession, sf_dir: str) -> str:
     strings are BUILT distributed (per-shard concat of to_json rows —
     the corpus never collects to the driver) and land one file per
     shard via partitionBy."""
-    final, done = _cached_dir(sf_dir, "mljson")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="events-mljson-stage-")
-    ev = _typed_events(spark, sf_dir)
     j = F.to_json(
         F.struct("event_id", "ts_ms", "user_id", "event_type", "value", "props")
     )
-    shards = (
-        ev.select((F.col("event_id") % MULTILINE_SHARDS).alias("shard"), j.alias("j"))
-        .groupBy("shard")
-        .agg(
-            F.concat(
-                F.lit("[\n"),
-                F.concat_ws(",\n", F.collect_list("j")),
-                F.lit("\n]"),
-            ).alias("body")
+
+    def write(ev: DataFrame, path: str) -> None:
+        shards = (
+            ev.select(
+                (F.col("event_id") % MULTILINE_SHARDS).alias("shard"),
+                j.alias("j"),
+            )
+            .groupBy("shard")
+            .agg(
+                F.concat(
+                    F.lit("[\n"),
+                    F.concat_ws(",\n", F.collect_list("j")),
+                    F.lit("\n]"),
+                ).alias("body")
+            )
         )
-    )
-    (
-        shards.repartition(MULTILINE_SHARDS, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .text(staging)
-    )
-    return _finalize(staging, final, os.path.join(sf_dir, "events.parquet"))
+        (
+            shards.repartition(MULTILINE_SHARDS, "shard")
+            .write.mode("overwrite")
+            .partitionBy("shard")
+            .text(path)
+        )
+
+    return _cached_events(spark, sf_dir, "mljson", write)
 
 
 def read_events_multiline_json(spark: SparkSession, path: str) -> DataFrame:
@@ -416,26 +376,14 @@ def read_events_multiline_json(spark: SparkSession, path: str) -> DataFrame:
     ).json(files)
 
 
-def _cached_dir_for(src: str, tag: str) -> tuple[str, bool]:
-    """_cached_dir generalized to any fixture file (not just events)."""
-    st = os.stat(src)
-    digest = hashlib.md5(
-        repr((os.path.abspath(src), st.st_mtime_ns, st.st_size)).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), f"fixture-{tag}-{os.getuid()}-{digest}"
-    )
-    return final, os.path.exists(os.path.join(final, _MARKER))
-
-
 def ensure_docs_png_files(spark: SparkSession, sf_dir: str) -> str:
     """Materialize every document's PNG (the md5-stream raster through
     the real zlib+filter encoder) as an INDIVIDUAL ``doc_<id>.png``
     file — the object-store layout crawl images actually arrive in.
     The write is distributed: executors encode and write their own
     partitions' files (fan_out-spread so a single-file fixture does
-    not serialize the codec work), the driver only renames the staged
-    directory into place once.
+    not serialize the codec work) into the build directory, which the
+    driver creates and native_cache.cached_build moves into place.
 
     LOCAL-MODE ASSUMPTION: executors write with plain ``open()`` into
     a driver-created staging directory, which requires driver and
@@ -445,37 +393,37 @@ def ensure_docs_png_files(spark: SparkSession, sf_dir: str) -> str:
     must write through a shared store instead (s3://... via Spark's
     binary write, or ``toLocalIterator`` on the driver); the READ side
     (src_s10's binaryFile source) is cluster-correct as is."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    final, done = _cached_dir_for(src, "docs-png")
-    if done:
-        return final
-    staging = tempfile.mkdtemp(prefix="docs-png-stage-")
-
     from table_demo_spark.operators.multimodal import with_png_payload
     from table_demo_spark.sources.batch import load_table
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = with_png_payload(docs)
+    _, key = fixture_key(sf_dir, "documents", "png")
 
-    def write_files(rows) -> list:
-        import os as _os
+    def build(path: str) -> None:
+        os.makedirs(path)  # the executors write into it
 
-        n = 0
-        for row in rows:
-            name = _os.path.join(staging, f"doc_{row['doc_id']}.png")
-            with open(name, "wb") as fh:
-                fh.write(row["payload"])
-            n += 1
-        return [n]
+        def write_files(rows) -> list:
+            import os as _os
 
-    payloads.rdd.mapPartitions(lambda it: write_files(it)).sum()
-    return _finalize(staging, final, src)
+            n = 0
+            for row in rows:
+                name = _os.path.join(path, f"doc_{row['doc_id']}.png")
+                with open(name, "wb") as fh:
+                    fh.write(row["payload"])
+                n += 1
+            return [n]
+
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        with_png_payload(docs).rdd.mapPartitions(
+            lambda it: write_files(it)
+        ).sum()
+
+    return cached_build("docs-png", key, build)
 
 
 def read_docs_binary_files(spark: SparkSession, path: str) -> DataFrame:
     """Spark's native ``binaryFile`` source over the PNG directory:
     one row per file with (path, modificationTime, length, content).
-    ``pathGlobFilter`` prunes non-image files (the fixture marker) at
+    ``pathGlobFilter`` prunes non-image files at
     LISTING time — no bytes of a filtered file are ever read — and
     parallelism is one task per file group, the right unit for opaque
     binary objects. The doc id travels in the file name, recovered

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 TIME_FMT = "yyyy-MM-dd HH:mm:ss"  # TaxiRide.java:41-42 (UTC)
 
-_GZ_MARKER = "_CSV_GZ_READY.json"
 DIRTY_MOD = 97  # dead-letter fixture: corrupt every 97th ride's lines
 
 
@@ -68,52 +67,31 @@ def ensure_rides_csv_gz(
     Gzip streams are not splittable, so the scale shape is MANY .gz
     files (one task each), which the partitioned text write gives
     naturally; a single 100 TB .gz would serialize the whole scan."""
-    import hashlib
-    import json
-    import os
-    import shutil
-    import tempfile
+    from table_demo_spark.native_cache import cached_build, fixture_key
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        repr((os.path.abspath(src), st.st_mtime_ns, st.st_size, dirty)).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(
-        tempfile.gettempdir(), f"taxi-csv-gz-{os.getuid()}-{digest}"
-    )
-    if os.path.exists(os.path.join(final, _GZ_MARKER)):
-        return final
+    def build(path: str) -> None:
+        line = ride_to_csv_line(
+            F.col("ride_id"),
+            F.col("is_start"),
+            F.col("start_time"),
+            F.col("end_time"),
+            F.col("start_lon"),
+            F.col("start_lat"),
+            F.col("end_lon"),
+            F.col("end_lat"),
+            F.col("passenger_cnt"),
+        )
+        if dirty:
+            line = F.when(
+                F.col("ride_id") % DIRTY_MOD == 0,
+                F.concat(F.lit("CORRUPT,"), F.col("ride_id").cast("string")),
+            ).otherwise(line)
+        shaped_rides(spark, sf_dir).select(line.alias("value")).write.mode(
+            "overwrite"
+        ).option("compression", "gzip").text(path)
 
-    shaped = shaped_rides(spark, sf_dir)
-    line = ride_to_csv_line(
-        F.col("ride_id"),
-        F.col("is_start"),
-        F.col("start_time"),
-        F.col("end_time"),
-        F.col("start_lon"),
-        F.col("start_lat"),
-        F.col("end_lon"),
-        F.col("end_lat"),
-        F.col("passenger_cnt"),
-    )
-    if dirty:
-        line = F.when(
-            F.col("ride_id") % DIRTY_MOD == 0,
-            F.concat(F.lit("CORRUPT,"), F.col("ride_id").cast("string")),
-        ).otherwise(line)
-    lines = shaped.select(line.alias("value"))
-    staging = tempfile.mkdtemp(prefix="taxi-csv-gz-stage-")
-    lines.write.mode("overwrite").option("compression", "gzip").text(staging)
-    with open(os.path.join(staging, _GZ_MARKER), "w") as f:
-        json.dump({"source": os.path.abspath(src)}, f)
-    try:
-        os.rename(staging, final)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # lost a benign race
-    if not os.path.exists(os.path.join(final, _GZ_MARKER)):
-        raise RuntimeError(f"csv.gz fixture write failed for {src}")
-    return final
+    _, key = fixture_key(sf_dir, "events", "rides-csv-gz", dirty)
+    return cached_build("taxi-csv-gz", key, build)
 
 
 def ride_to_csv_line(

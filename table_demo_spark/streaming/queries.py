@@ -1857,14 +1857,6 @@ _DOC_SHARD_SCHEMA = "doc_id long, text string, source string"
 _VEC_SHARD_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
-def _fixture_key(sf_dir: str, table: str, *shape) -> tuple[str, str]:
-    """(path of the fixture table, build-cache key naming it and
-    ``shape``): the key changes when the fixture file does."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    return src, repr((os.path.abspath(src), st.st_mtime_ns, st.st_size, *shape))
-
-
 def _write_file_shards(path: str, shards: list, mtime: float) -> None:
     """Write each frame of ``shards`` as the single file
     ``path/shard-<i>.parquet``, with mtimes increasing in shard order:
@@ -1886,11 +1878,11 @@ def _ensure_table_shards(
     """Stage a fixture table as _N_SHARDS parquet files (one
     micro-batch each under maxFilesPerTrigger=1), once per fixture
     (native_cache.cached_build)."""
-    from table_demo_spark.native_cache import cached_build
+    from table_demo_spark.native_cache import cached_build, fixture_key
     from table_demo_spark.sources.batch import _ensure_session_confs
 
     _ensure_session_confs(spark)  # incl. shipping the package to workers
-    src, key = _fixture_key(sf_dir, table, _N_SHARDS)
+    src, key = fixture_key(sf_dir, table, _N_SHARDS)
 
     def build(path: str) -> None:
         (
@@ -1952,11 +1944,11 @@ def ensure_q33_shards(spark: SparkSession, sf_dir: str) -> str:
     the DuckDB oracle states."""
     from pyspark.sql import Window
 
-    from table_demo_spark.native_cache import cached_build
+    from table_demo_spark.native_cache import cached_build, fixture_key
     from table_demo_spark.sources.batch import _ensure_session_confs, load_table
 
     _ensure_session_confs(spark)
-    src, key = _fixture_key(sf_dir, "embeddings", "q33-rank")
+    src, key = fixture_key(sf_dir, "embeddings", "q33-rank")
 
     def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -2351,22 +2343,82 @@ def q35_final_edges(store: DataFrame) -> DataFrame:
     (old src -> new dst) when later vectors land in a src's probe
     buckets, this compaction equals llm_s18's batch-built edge set on
     the same corpus exactly — build ≡ maintain."""
-    from pyspark.sql import Window
-
+    from table_demo_spark.operators import similarity
     from table_demo_spark.queries.llmops import _S18_M
 
-    win = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst").asc()
-    )
+    return similarity.top_m_edges(store, _S18_M).select("src", "dst", "rank")
+
+
+def _bucketed(df: DataFrame, bits: int) -> DataFrame:
+    """Vectors with their graph bucket ``bk`` at ``bits`` and its
+    low-8-bit directory ``bkd`` (the vector store's partition key)."""
+    from table_demo_spark.queries.llmops import _rp_bucket_col
+
     return (
-        store.withColumn("grn", F.row_number().over(win))
-        .filter(F.col("grn") <= _S18_M)
-        .select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-            F.col("grn").cast("long").alias("rank"),
-        )
+        df.select("vec_id", "embedding")
+        .withColumn("bk", _rp_bucket_col(bits=bits))
+        .withColumn("bkd", F.col("bk").bitwiseAND(F.lit(255)))
     )
+
+
+def graph_step(
+    session: SparkSession,
+    arrivals: DataFrame,
+    batch_id: int,
+    vec_root: str,
+    edge_dir: str,
+    bits: int,
+) -> None:
+    """One incremental graph-maintenance step (stream_q35's batch, and
+    graph_gen_apply's non-reshard batch): file the arrivals bucketed
+    at ``bits`` under ``vec_root/b=<batch_id>``, then write to
+    ``edge_dir`` the top-M edges of every pair that involves an
+    arrival — arrivals toward everything stored, and back-edges from
+    stored vectors whose probe buckets the arrivals land in (old-old
+    pairs are masked in the kernel: scored when the later side
+    arrived). Static whole-subtree overwrites, and the candidate read
+    filters to ``b <= batch_id``, so a replayed batch redoes itself."""
+    from table_demo_spark.operators import similarity
+    from table_demo_spark.queries.llmops import _S18_M
+
+    batch_root = os.path.join(vec_root, f"b={batch_id}")
+    _bucketed(arrivals, bits).write.mode("overwrite").partitionBy(
+        "bkd"
+    ).parquet(batch_root)
+    session.catalog.refreshByPath(vec_root)
+    # Everything below reads the batch back FROM THE STORE: the
+    # 64-dim bucket projection runs once (in the write job above),
+    # not once per downstream subtree, and the stream shard is not
+    # re-scanned. The batch's own buckets and their Hamming-1 ball
+    # are collected driver-side (bounded: <= 2**GRAPH_BITS_MAX
+    # ints) — they are both the pruning IN-lists and the old-src
+    # probe restriction.
+    own = sorted(
+        int(r["bk"])
+        for r in session.read.parquet(batch_root)
+        .select("bk")
+        .distinct()
+        .collect()
+    )
+    ball = sorted(
+        {p for bk in own for p in [bk] + [bk ^ (1 << j) for j in range(bits)]}
+    )
+    # The pruned candidate set feeds THREE subtrees (the src probes,
+    # the dst rows, and the salt-count agg over them); persisting it
+    # trades one cached materialization for pruned re-scans (A/B'd
+    # when it fed five: sf0.1 cold drain 22.9 -> 21.9 s, 10x 41.6 ->
+    # 38.5 s).
+    seen = q35_candidate_read(session, vec_root, batch_id, ball).persist()
+    rows = seen.select(
+        "vec_id",
+        "embedding",
+        "bk",
+        (F.col("b") == batch_id).cast("int").alias("new"),
+    )
+    similarity.graph_edges(rows, bits, _S18_M, own).write.mode(
+        "overwrite"
+    ).parquet(edge_dir)
+    seen.unpersist()
 
 
 def run_q35_graph_ingest(
@@ -2402,118 +2454,26 @@ def run_q35_graph_ingest(
     the pre-crash prefix regardless of what later batches left behind.
 
     Returns (sink, query); sink holds (b, src, dst, w, rank)."""
-
-    from pyspark.sql import Window
-
     from table_demo_spark.operators import similarity
-    from table_demo_spark.queries.llmops import _S18_M, _rp_bucket_col
     from table_demo_spark.sources.batch import load_table
 
-    n_total = load_table(spark, sf_dir, "embeddings").count()
-    bits = similarity.graph_bits(n_total)
+    bits = similarity.graph_bits(
+        load_table(spark, sf_dir, "embeddings").count()
+    )
     stream = _shard_stream(
         spark, ensure_q33_shards(spark, sf_dir), _VEC_SHARD_SCHEMA
     )
     if sink is None:
         sink = ParquetAppendSink(scratch_dir("tds-q35-"), ("b",))
     vec_dir = sink.path.rstrip("/") + "-vecs"
-    top_m = _S18_M
-
-    def ball1(col):
-        return F.array(
-            col, *[col.bitwiseXOR(F.lit(1 << j)) for j in range(bits)]
-        )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        session = batch_df.sparkSession
-        vecs = (
-            batch_df.select("vec_id", "embedding")
-            .withColumn("bk", _rp_bucket_col(bits=bits))
-            .withColumn("bkd", F.col("bk").bitwiseAND(F.lit(255)))
+        graph_step(
+            batch_df.sparkSession, batch_df, batch_id, vec_dir,
+            os.path.join(sink.path, f"b={batch_id}"), bits,
         )
-        (
-            vecs.write.mode("overwrite")
-            .partitionBy("bkd")
-            .parquet(os.path.join(vec_dir, f"b={batch_id}"))
-        )
-        session.catalog.refreshByPath(vec_dir)
-        # Everything below reads the batch back FROM THE STORE: the
-        # 64-dim bucket projection runs once (in the write job above),
-        # not once per downstream subtree, and the stream shard is not
-        # re-scanned. The batch's own buckets and their Hamming-1 ball
-        # are collected driver-side (bounded: <= 2**GRAPH_BITS_MAX
-        # ints) — they are both the pruning IN-lists and the old-src
-        # probe restriction.
-        own = sorted(
-            int(r["bk"])
-            for r in session.read.parquet(
-                os.path.join(vec_dir, f"b={batch_id}")
-            )
-            .select("bk")
-            .distinct()
-            .collect()
-        )
-        ball = sorted(
-            {p for bk in own for p in [bk] + [bk ^ (1 << j) for j in range(bits)]}
-        )
-        # The pruned candidate set feeds FIVE subtrees (both src
-        # sides, both dst sides, and the salt-count agg); persisting it
-        # trades one cached materialization for five pruned re-scans
-        # (A/B'd: sf0.1 cold drain 22.9 -> 21.9 s, 10x 41.6 -> 38.5 s).
-        seen = q35_candidate_read(session, vec_dir, batch_id, ball).persist()
-        new = seen.filter(F.col("b") == batch_id)
-        old = seen.filter(F.col("b") < batch_id)
-        new_src = new.select(
-            F.col("vec_id").alias("nid"),
-            F.col("embedding").alias("nvec"),
-            F.explode(ball1(F.col("bk"))).alias("pb"),
-            F.lit(1).alias("new"),
-        )
-        # Old vectors only need NEW dsts, which sit in the batch's own
-        # buckets — so their probe explosion is filtered to `own`.
-        old_src = (
-            old.select(
-                F.col("vec_id").alias("nid"),
-                F.col("embedding").alias("nvec"),
-                F.explode(ball1(F.col("bk"))).alias("pb"),
-                F.lit(0).alias("new"),
-            )
-            .filter(F.col("pb").isin(own))
-        )
-        new_dst = new.select(
-            F.col("vec_id").alias("nid"),
-            F.col("embedding").alias("nvec"),
-            F.col("bk").alias("pb"),
-            F.lit(1).alias("new"),
-        )
-        old_dst = old.select(
-            F.col("vec_id").alias("nid"),
-            F.col("embedding").alias("nvec"),
-            F.col("bk").alias("pb"),
-            F.lit(0).alias("new"),
-        )
-        cand_edges = similarity.bucket_knn_edges(
-            new_src.unionByName(old_src),
-            new_dst.unionByName(old_dst),
-            top_m,
-        )
-        win = Window.partitionBy("src").orderBy(
-            F.col("w").desc(), F.col("dst").asc()
-        )
-        edges = (
-            cand_edges.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") <= top_m)
-            .select(
-                "src", "dst", "w", F.col("rn").cast("long").alias("rank")
-            )
-        )
-        (
-            edges.write.mode("overwrite")
-            .parquet(os.path.join(sink.path, f"b={batch_id}"))
-        )
-        seen.unpersist()
 
     return sink, _start_foreach(stream, checkpoint or _checkpoint_dir(), apply)
 
@@ -2564,49 +2524,8 @@ def graph_gen_apply(
     to the active generation.  All writes are static whole-subtree
     overwrites keyed by (g, batch), so a replayed batch redoes itself
     byte-stably (the q33/q36 restart discipline)."""
-
-    from pyspark.sql import Window
-
     from table_demo_spark.operators import similarity
-    from table_demo_spark.queries.llmops import _S18_M, _rp_bucket_col
-
-    top_m = _S18_M
-
-    def ball1(col, bits: int):
-        return F.array(
-            col, *[col.bitwiseXOR(F.lit(1 << j)) for j in range(bits)]
-        )
-
-    def bucketed(df: DataFrame, bits: int) -> DataFrame:
-        return (
-            df.select("vec_id", "embedding")
-            .withColumn("bk", _rp_bucket_col(bits=bits))
-            .withColumn("bkd", F.col("bk").bitwiseAND(F.lit(255)))
-        )
-
-    def emit_edges(cand_edges: DataFrame, g: int):
-        win = Window.partitionBy("src").orderBy(
-            F.col("w").desc(), F.col("dst").asc()
-        )
-        (
-            cand_edges.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") <= top_m)
-            .select(
-                "src", "dst", "w", F.col("rn").cast("long").alias("rank")
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(edge_dir, f"g={g}", f"b={batch_id}"))
-        )
-
-    def commit_meta(g: int, bits: int):
-        (
-            session.createDataFrame(
-                [(bits, batch_id)], "bits int, created_b long"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(meta_dir, f"g={g}"))
-        )
+    from table_demo_spark.queries.llmops import _S18_M
 
     state = q36_active_gen(session, meta_dir, batch_id)
     stored_n = 0
@@ -2623,109 +2542,48 @@ def graph_gen_apply(
     if n_arr == 0:
         return
     need = similarity.graph_bits(stored_n + n_arr, target)
-
-    if state is None or need > bits:
-        # --- RESHARD (or first-generation build): re-bucket the
-        # whole corpus under the new bit count and rebuild the
-        # full edge set at it — the s18 batch path.
-        g2 = 0 if state is None else g + 1
-        corpus = arrivals
-        if state is not None and stored_n:
-            corpus = corpus.unionByName(
-                session.read.parquet(os.path.join(vec_dir, f"g={g}"))
-                .filter(F.col("b") < batch_id)
-                .select("vec_id", "embedding")
-            )
-        gen2_root = os.path.join(vec_dir, f"g={g2}")
-        (
-            bucketed(corpus, need)
-            .write.mode("overwrite")
-            .partitionBy("bkd")
-            .parquet(os.path.join(gen2_root, f"b={batch_id}"))
+    if state is not None and need <= bits:
+        # --- INCREMENTAL: q35's step, scoped to generation g
+        graph_step(
+            session, arrivals, batch_id, gen_root,
+            os.path.join(edge_dir, f"g={g}", f"b={batch_id}"), bits,
         )
-        session.catalog.refreshByPath(gen2_root)
-        rows = (
-            session.read.parquet(gen2_root)
-            .filter(F.col("b") == batch_id)
-            .persist()
-        )
-        src = rows.select(
-            F.col("vec_id").alias("nid"),
-            F.col("embedding").alias("nvec"),
-            F.explode(ball1(F.col("bk"), need)).alias("pb"),
-            F.lit(1).alias("new"),
-        )
-        dst = rows.select(
-            F.col("vec_id").alias("nid"),
-            F.col("embedding").alias("nvec"),
-            F.col("bk").alias("pb"),
-            F.lit(1).alias("new"),
-        )
-        emit_edges(similarity.bucket_knn_edges(src, dst, top_m), g2)
-        rows.unpersist()
-        commit_meta(g2, need)
         return
 
-    # --- INCREMENTAL (q35's shape, scoped to generation g) ---
-    gen_root = os.path.join(vec_dir, f"g={g}")
+    # --- RESHARD (or first-generation build): re-bucket the
+    # whole corpus under the new bit count and rebuild the
+    # full edge set at it — the s18 batch path.
+    g2 = 0 if state is None else g + 1
+    corpus = arrivals
+    if state is not None and stored_n:
+        corpus = corpus.unionByName(
+            session.read.parquet(gen_root)
+            .filter(F.col("b") < batch_id)
+            .select("vec_id", "embedding")
+        )
+    gen2_root = os.path.join(vec_dir, f"g={g2}")
+    _bucketed(corpus, need).write.mode("overwrite").partitionBy("bkd").parquet(
+        os.path.join(gen2_root, f"b={batch_id}")
+    )
+    session.catalog.refreshByPath(gen2_root)
+    rows = (
+        session.read.parquet(gen2_root)
+        .filter(F.col("b") == batch_id)
+        .persist()
+    )
+    similarity.graph_edges(
+        rows.withColumn("new", F.lit(1)), need, _S18_M
+    ).write.mode("overwrite").parquet(
+        os.path.join(edge_dir, f"g={g2}", f"b={batch_id}")
+    )
+    rows.unpersist()
+    # the meta row commits the generation LAST
     (
-        bucketed(arrivals, bits)
+        session.createDataFrame([(need, batch_id)], "bits int, created_b long")
+        .coalesce(1)
         .write.mode("overwrite")
-        .partitionBy("bkd")
-        .parquet(os.path.join(gen_root, f"b={batch_id}"))
+        .parquet(os.path.join(meta_dir, f"g={g2}"))
     )
-    session.catalog.refreshByPath(gen_root)
-    own = sorted(
-        int(r["bk"])
-        for r in session.read.parquet(
-            os.path.join(gen_root, f"b={batch_id}")
-        )
-        .select("bk")
-        .distinct()
-        .collect()
-    )
-    ball = sorted(
-        {p for bk in own for p in [bk] + [bk ^ (1 << j) for j in range(bits)]}
-    )
-    seen = q35_candidate_read(session, gen_root, batch_id, ball).persist()
-    new = seen.filter(F.col("b") == batch_id)
-    old = seen.filter(F.col("b") < batch_id)
-    new_src = new.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("nvec"),
-        F.explode(ball1(F.col("bk"), bits)).alias("pb"),
-        F.lit(1).alias("new"),
-    )
-    old_src = (
-        old.select(
-            F.col("vec_id").alias("nid"),
-            F.col("embedding").alias("nvec"),
-            F.explode(ball1(F.col("bk"), bits)).alias("pb"),
-            F.lit(0).alias("new"),
-        )
-        .filter(F.col("pb").isin(own))
-    )
-    new_dst = new.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("nvec"),
-        F.col("bk").alias("pb"),
-        F.lit(1).alias("new"),
-    )
-    old_dst = old.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("nvec"),
-        F.col("bk").alias("pb"),
-        F.lit(0).alias("new"),
-    )
-    emit_edges(
-        similarity.bucket_knn_edges(
-            new_src.unionByName(old_src),
-            new_dst.unionByName(old_dst),
-            top_m,
-        ),
-        g,
-    )
-    seen.unpersist()
 
 
 def run_q36_graph_reshard(
@@ -3310,14 +3168,14 @@ def ensure_events_time_shards(spark: SparkSession, sf_dir: str) -> str:
     production scale this is one repartitionByRange write)."""
     from pyspark.sql import Window
 
-    from table_demo_spark.native_cache import cached_build
+    from table_demo_spark.native_cache import cached_build, fixture_key
     from table_demo_spark.sources.batch import (
         _ensure_session_confs,
         load_table,
     )
 
     _ensure_session_confs(spark)
-    src, key = _fixture_key(sf_dir, "events", Q44_SHARDS, "q44-time-rank")
+    src, key = fixture_key(sf_dir, "events", Q44_SHARDS, "q44-time-rank")
 
     def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
