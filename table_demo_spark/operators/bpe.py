@@ -216,10 +216,11 @@ def _scratch_checkpoint(
     At cluster scale the scratch dir is durable shared storage and
     this is the standard checkpoint-per-iteration pattern."""
     from table_demo_spark.scratch import scratch_dir
+    from table_demo_spark.sources.batch import read_parquet
 
     d = scratch_dir("tds-bpe-round-")
     df.write.mode("overwrite").parquet(d)
-    out = df.sparkSession.read.parquet(d)
+    out = read_parquet(df.sparkSession, d, df.schema)
     n = int(out.count()) if count else None
     return out, d, n
 

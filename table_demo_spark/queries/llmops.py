@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from table_demo_spark.functions import text as T
 from table_demo_spark.operators import dedup, multimodal, similarity
 from table_demo_spark.queries import Query
-from table_demo_spark.sources.batch import load_table
+from table_demo_spark.sources.batch import load_table, read_parquet
 
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.45
@@ -1804,8 +1804,9 @@ def batched_beam(
     from table_demo_spark.scratch import scratch_dir
 
     store = os.path.join(scratch_dir(prefix), "edges.parquet")
-    _corpus_graph(emb).write.mode("overwrite").parquet(store)
-    edges = spark.read.parquet(store)
+    graph = _corpus_graph(emb)
+    graph.write.mode("overwrite").parquet(store)
+    edges = read_parquet(spark, store, graph.schema)
     beams = {q: [e] for q, e in entries.items()}
     for _ in range(_S18_ROUNDS):
         out = _out_edges(edges, sorted({v for b in beams.values() for v, _ in b}))

@@ -14,8 +14,14 @@ precision arithmetic expressed identically in Spark and ANSI SQL
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -62,7 +68,6 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     files, 2.0 MB, stored uncompressed) to scratch and
     ``addPyFile``-ing it makes the engine cwd- and cluster-agnostic:
     the standard ``--py-files`` submission, done for the caller."""
-    import os
     import zipfile
 
     # Keyed by applicationId, not id(sc): CPython reuses object
@@ -98,17 +103,87 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     ensure_package_on_workers(spark)
 
 
+# Confs whose value changes the schema Spark infers from a parquet
+# footer; each is part of the schema memo's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_SIZE = 256  # newest entries kept
+_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple:
+    """What changes when ``path`` is rewritten: inode, size and mtime of
+    a file; for a directory, the sorted (name, size, mtime) of its
+    entries. Raises OSError when ``os.stat`` cannot see ``path``."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    with os.scandir(path) as it:
+        return tuple(
+            sorted((e.name, (s := e.stat()).st_size, s.st_mtime_ns) for e in it)
+        )
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    application, file version and inference confs: every
+    ``spark.read.parquet`` runs a one-task job that reads a footer,
+    even for a file that has not changed. Spark's own inference stays
+    the only type mapping; a path ``os.stat`` cannot see (a non-local
+    URI) is inferred on every call."""
+    try:
+        ident = _file_identity(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(path),
+        ident,
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+            return schema
+    schema = spark.read.parquet(path).schema
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = schema
+        while len(_SCHEMAS) > _SCHEMA_MEMO_SIZE:
+            _SCHEMAS.popitem(last=False)
+    return schema
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job
+    whenever the schema is known: ``schema`` when the caller just wrote
+    the frame, else the memo of ``_parquet_schema``."""
+    if schema is None:
+        schema = _parquet_schema(spark, path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet carries its own (exact) schema —
-    no inference happens; this mirrors the reference's fixed POJO schema
-    stance (TaxiRideTableSource.scala:43-45).
+    """Read one fixture table. Parquet carries its own (exact) schema,
+    which Spark infers once per session and file through
+    ``read_parquet``'s memo; this mirrors the reference's fixed POJO
+    schema stance (TaxiRideTableSource.scala:43-45).
     """
     _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _parquet_schema(spark, path)
+    df = read_parquet(spark, path, schema)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema}
     for c in _TS_COLUMNS.get(name, []):
-        if c not in df.columns:
-            continue
-        dtype = dict(df.dtypes)[c]
+        dtype = dtypes.get(c)
         if dtype == "bigint":  # TIMESTAMP(NANOS) read as epoch-nanos
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
         elif dtype == "timestamp_ntz":  # session TZ is pinned UTC

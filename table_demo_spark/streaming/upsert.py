@@ -37,6 +37,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from table_demo_spark.sources.batch import read_parquet
 from table_demo_spark.streaming import start_stream
 
 
@@ -121,9 +122,7 @@ class GenerationStore:
         if self.current_dir is None:
             assert empty_schema is not None, "no batch written yet"
             return spark.createDataFrame([], empty_schema)
-        if self._schema is None:
-            self._schema = spark.read.parquet(self.current_dir).schema
-        return spark.read.schema(self._schema).parquet(self.current_dir)
+        return read_parquet(spark, self.current_dir, self._schema)
 
     def union(self, df: DataFrame) -> DataFrame:
         """The current table (if any) unioned by name with ``df``."""

@@ -3367,6 +3367,31 @@ def test_decode_heif_routes_compatible_avif_brand_to_libavif(monkeypatch):
     assert np.array_equal(got[0], y)  # lossless
 
 
+def test_decode_heif_keeps_avis_branded_still_image_on_libheif():
+    """``avis`` (the AVIF image-sequence brand) does not route to
+    libavif: libavif rejects a still image whose ftyp names ``avis``
+    (it expects a ``moov`` track), while libheif decodes its primary
+    item."""
+    import numpy as np
+
+    heif = _heif_mod()
+    if not heif.avif_decoder_available(heif.AVIF_CODEC_DAV1D):
+        pytest.skip("libavif dav1d decoder not available")
+    rng = np.random.default_rng(80)
+    y = (70 + rng.integers(0, 111, (48, 64))).astype(np.uint8)
+    cb = (108 + rng.integers(0, 41, (24, 32))).astype(np.uint8)
+    cr = (108 + rng.integers(0, 41, (24, 32))).astype(np.uint8)
+    data = heif.encode_heif(
+        y, cb, cr, heif.COMPRESSION_AV1, (("speed", "9"), ("threads", "1"))
+    )
+    size = int.from_bytes(data[:4], "big")
+    data = data[:size].replace(b"avif", b"avis") + data[size:]
+    assert not heif._avif_brand(data)
+    with pytest.raises(ValueError):
+        heif.decode_avif_libavif(data, heif.AVIF_CODEC_DAV1D)
+    assert np.array_equal(heif.decode_heif(data)[0], y)  # lossless
+
+
 def test_heif_negative_paths_fail_loudly():
     """Truncated containers and mid-payload corruption must raise,
     never return planes silently."""

@@ -1066,14 +1066,15 @@ def test_s24_batched_hierarchy_job_count_is_pinned(spark):
     is the shared setup (entry pick, entry scoring, per-layer graph
     builds + counts, the layer-0 store write) and each score_pairs
     pass costs ~3 jobs (local-frame parallelize + broadcast build +
-    collect)."""
+    collect). The layer-0 store is read back with the schema it was
+    written with, so that read fires no inference job (pin 70 -> 69)."""
     from table_demo_spark.queries.llmops import s24_batched_hnsw_serve
 
     st = spark.sparkContext.statusTracker()
     before = len(st.getJobIdsForGroup(None) or [])
     s24_batched_hnsw_serve(spark, SF_SMOKE).count()
     after = len(st.getJobIdsForGroup(None) or [])
-    assert after - before <= 70, (
+    assert after - before <= 69, (
         f"s24 now runs {after - before} jobs - the per-hop batching"
         " (2 bounded jobs per layer-hop for all probes) regressed"
     )
